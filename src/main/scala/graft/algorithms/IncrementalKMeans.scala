@@ -201,16 +201,23 @@ object IncrementalKMeans {
       filterThreshold: Double = 0.0, numPartitions: Int = 32,
       broadcastMaxRows: Long = 4L * 1000 * 1000,
       batchId: Option[Long] = None, metric: String = "euclidean")
-      : (DataFrame, Option[graft.operators.StorePolicy.ContinueAdvice]) = {
-    val store =
-      graft.core.SegmentedStateStore.openForWrite(spark, centerStorePath)
-    if (batchId.exists(_ <= store.appliedBatch)) {
-      store.releaseLease()
-      val out = store.out.drop("_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      (out, None)
-    } else {
+      : (DataFrame, Option[graft.operators.StorePolicy.ContinueAdvice]) =
+    IncrementalJob.finishStore(spark, centerStorePath,
+      continueFromStores(spark, centerStorePath, pointStorePath,
+        batchPoints, changedIds, iterations, filterThreshold, numPartitions,
+        broadcastMaxRows, batchId, metric))
+
+  /** [[incrementalFromStores]] without reading the result back (None
+    * for a replayed batch). */
+  private[graft] def continueFromStores(spark: SparkSession,
+      centerStorePath: String, pointStorePath: String,
+      batchPoints: DataFrame, changedIds: DataFrame, iterations: Int,
+      filterThreshold: Double = 0.0, numPartitions: Int = 32,
+      broadcastMaxRows: Long = 4L * 1000 * 1000,
+      batchId: Option[Long] = None, metric: String = "euclidean")
+      : Option[graft.core.IncrResult] =
+    graft.core.SegmentedStateStore.continueOnce(spark, centerStorePath,
+        batchId) { store =>
       val h = graft.operators.KeyedUpsertStore.open(spark, pointStorePath)
       val patch = batchPoints.select(col("id").cast("long"),
         col("vec").cast("array<double>"))
@@ -219,13 +226,10 @@ object IncrementalKMeans {
       val chgRows = chgKeys.count()
       val src = new graft.core.StaticSource.Overlay(h, "id", chgKeys,
         chgRows, patch, broadcastMaxRows)
-      val job = buildJob(src.all, store.preserved, chgKeys, iterations,
+      buildJob(src.all, store.preserved, chgKeys, iterations,
         filterThreshold, numPartitions, None, metric, Some(store),
-        batchId, Some(src))
-      val r = job.run()
-      (IncrementalJob.finish(r), r.advice)
+        batchId, Some(src)).run()
     }
-  }
 
   /** The KMeans instantiation of [[IncrementalJob]] — shared by the
     * frame-fed and store-fed continuations (identical assignment and

@@ -152,32 +152,36 @@ object IncrementalMatVec {
       filterThreshold: Double = 0.0, numPartitions: Int = 32,
       broadcastMaxRows: Long = 4L * 1000 * 1000,
       batchId: Option[Long] = None)
-      : (DataFrame, Option[graft.operators.StorePolicy.ContinueAdvice]) = {
-    val store = graft.core.SegmentedStateStore.openForWrite(spark, statePath)
-    if (batchId.exists(_ <= store.appliedBatch)) {
-      // replayed batch (checkpoint recovery): at-most-once per id, the
-      // same fence contract as the PageRank twin
-      store.releaseLease()
-      val out = store.out.drop("_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      (out, None)
-    } else {
-      val h = graft.operators.KeyedUpsertStore.open(spark, cellStorePath)
-      val patch = batchCells.select(col("i").cast("long"),
-        col("j").cast("long"), col("v").cast("double"))
-      // named key column only — the overlay's single-column contract
-      val chgKeys = changedColumns.select(col("j"))
-      val chgRows = chgKeys.count()
-      val src = new graft.core.StaticSource.Overlay(h, "j", chgKeys,
-        chgRows, patch, broadcastMaxRows)
-      val job = buildJob(src.all, b, store.preserved, changedColumns,
-        iterations, filterThreshold, numPartitions, None, Some(store),
-        batchId, Some(src))
-      val r = job.run()
-      (IncrementalJob.finish(r), r.advice)
+      : (DataFrame, Option[graft.operators.StorePolicy.ContinueAdvice]) =
+    IncrementalJob.finishStore(spark, statePath,
+      continueFromStores(spark, statePath, cellStorePath, batchCells,
+        changedColumns, b, iterations, filterThreshold, numPartitions,
+        broadcastMaxRows, batchId))
+
+  /** [[incrementalFromStores]] without reading the result back (None
+    * for a replayed batch: at-most-once per id, the same fence
+    * contract as the PageRank twin). */
+  private[graft] def continueFromStores(
+      spark: org.apache.spark.sql.SparkSession,
+      statePath: String, cellStorePath: String, batchCells: DataFrame,
+      changedColumns: DataFrame, b: DataFrame, iterations: Int,
+      filterThreshold: Double = 0.0, numPartitions: Int = 32,
+      broadcastMaxRows: Long = 4L * 1000 * 1000,
+      batchId: Option[Long] = None): Option[graft.core.IncrResult] =
+    graft.core.SegmentedStateStore.continueOnce(spark, statePath, batchId) {
+      store =>
+        val h = graft.operators.KeyedUpsertStore.open(spark, cellStorePath)
+        val patch = batchCells.select(col("i").cast("long"),
+          col("j").cast("long"), col("v").cast("double"))
+        // named key column only — the overlay's single-column contract
+        val chgKeys = changedColumns.select(col("j"))
+        val chgRows = chgKeys.count()
+        val src = new graft.core.StaticSource.Overlay(h, "j", chgKeys,
+          chgRows, patch, broadcastMaxRows)
+        buildJob(src.all, b, store.preserved, changedColumns,
+          iterations, filterThreshold, numPartitions, None, Some(store),
+          batchId, Some(src)).run()
     }
-  }
 
   /** The matvec instantiation of [[IncrementalJob]] — shared by the
     * frame-fed and store-fed continuations. */

@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{IncrementalJob, PreservedState, SegmentedStateStore}
@@ -105,25 +105,13 @@ object IncrementalPageRank {
       numPartitions: Int = 32,
       broadcastMaxRows: Long = 4L * 1000 * 1000,
       batchId: Option[Long] = None)
-      : (DataFrame, Option[graft.operators.StorePolicy.ContinueAdvice]) = {
-    val store = SegmentedStateStore.openForWrite(spark, path)
-    if (batchId.exists(_ <= store.appliedBatch)) {
-      // replayed batch: nothing to do — hand back the current ranks
-      // under the finish() contract (eager catalog-visible cache)
-      store.releaseLease()
-      val out = store.out.drop("_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      (out, None)
-    } else {
-      val job = buildJob(PageRank.prepare(updatedEdges), store.preserved,
-        changedSources.select(col("src")), damping, iterations,
-        filterThreshold, numPartitions, None, broadcastMaxRows,
-        Some(store), batchId, None)
-      val r = job.run()
-      (IncrementalJob.finish(r), r.advice)
-    }
-  }
+      : (DataFrame, Option[graft.operators.StorePolicy.ContinueAdvice]) =
+    IncrementalJob.finishStore(spark, path,
+      SegmentedStateStore.continueOnce(spark, path, batchId)(store =>
+        buildJob(PageRank.prepare(updatedEdges), store.preserved,
+          changedSources.select(col("src")), damping, iterations,
+          filterThreshold, numPartitions, None, broadcastMaxRows,
+          Some(store), batchId, None).run()))
 
   /** Lay the PREPARED static relation `(src, dst, deg)` out as a
     * durable key-bucketed edge store ([[graft.operators.KeyedUpsertStore]])
@@ -166,15 +154,23 @@ object IncrementalPageRank {
       filterThreshold: Double = 0.0, numPartitions: Int = 32,
       broadcastMaxRows: Long = 4L * 1000 * 1000,
       batchId: Option[Long] = None)
-      : (DataFrame, Option[graft.operators.StorePolicy.ContinueAdvice]) = {
-    val store = SegmentedStateStore.openForWrite(spark, rankStorePath)
-    if (batchId.exists(_ <= store.appliedBatch)) {
-      store.releaseLease()
-      val out = store.out.drop("_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      (out, None)
-    } else {
+      : (DataFrame, Option[graft.operators.StorePolicy.ContinueAdvice]) =
+    IncrementalJob.finishStore(spark, rankStorePath,
+      continueFromStores(spark, rankStorePath, edgeStorePath, batchStatic,
+        changedSources, damping, iterations, filterThreshold, numPartitions,
+        broadcastMaxRows, batchId))
+
+  /** [[incrementalFromStores]] without reading the result back: the
+    * loop's [[graft.core.IncrResult]], or None for a replayed batch.
+    * Stream maintainers take only its advice
+    * ([[graft.core.IncrementalJob.adviceOnly]]). */
+  private[graft] def continueFromStores(spark: SparkSession,
+      rankStorePath: String, edgeStorePath: String, batchStatic: DataFrame,
+      changedSources: DataFrame, damping: Double, iterations: Int,
+      filterThreshold: Double = 0.0, numPartitions: Int = 32,
+      broadcastMaxRows: Long = 4L * 1000 * 1000,
+      batchId: Option[Long] = None): Option[graft.core.IncrResult] =
+    SegmentedStateStore.continueOnce(spark, rankStorePath, batchId) { store =>
       val h = graft.operators.KeyedUpsertStore.open(spark, edgeStorePath)
       // the overlay gets exactly the named key column (its single-
       // column contract); one count decides its broadcast-vs-shuffle
@@ -184,14 +180,11 @@ object IncrementalPageRank {
       val chgRows = chgKeys.count()
       val src = new graft.core.StaticSource.Overlay(h, "src",
         chgKeys, chgRows, batchStatic, broadcastMaxRows)
-      val job = buildJob(src.all, store.preserved,
+      buildJob(src.all, store.preserved,
         changedSources.select(col("src").cast("long")), damping,
         iterations, filterThreshold, numPartitions, None, broadcastMaxRows,
-        Some(store), batchId, Some(src))
-      val r = job.run()
-      (IncrementalJob.finish(r), r.advice)
+        Some(store), batchId, Some(src)).run()
     }
-  }
 
   /** The PageRank instantiation of [[IncrementalJob]] — shared by the
     * frame-fed and store-fed continuations (identical arithmetic in
@@ -224,6 +217,21 @@ object IncrementalPageRank {
       },
       outToDyn = identity,
       distance = (o, n) => abs(o("rank") - n("rank")),
+      // the same three functions on rows, for the in-task path: static
+      // (src, dst, deg), out (node, rank), kvs (node, src, contrib)
+      kernel = Some(new graft.core.RowKernel {
+        val staticCols = Seq("dst", "deg")
+        def contribs(static: Seq[Row], out: Row): Seq[Row] = {
+          val rank = out.getDouble(1)
+          static.map(s =>
+            Row(s.getLong(1), s.get(0), rank / s.getLong(2).toDouble * damping))
+        }
+        def reduce(node: Any, bag: Iterable[Row]): Row = Row(node,
+          (1.0 - damping) + bag.toSeq.sortBy(_.getLong(1))
+            .foldLeft(0.0)(_ + _.getDouble(2)))
+        def distance(o: Row, n: Row): Double =
+          math.abs(o.getDouble(1) - n.getDouble(1))
+      }),
       filterThreshold = filterThreshold,
       maxIterations = iterations,
       numPartitions = numPartitions,

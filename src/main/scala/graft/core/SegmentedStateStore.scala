@@ -45,15 +45,22 @@ final class SegmentedStateStore private[core] (
     spark: SparkSession, val path: String, val k2Col: String,
     val nBuckets: Int, k2Ddl: String, kvsDdl: String, outDdl: String) {
 
-  private val k2Type = StructType.fromDDL(s"x $k2Ddl").head.dataType
+  /** The pinned key dtype. */
+  val keyType: org.apache.spark.sql.types.DataType =
+    StructType.fromDDL(s"x $k2Ddl").head.dataType
 
   /** The store's bucket function — pins the key dtype before hashing
     * so bucket placement is dtype-drift-proof. */
   def bucketOf(c: Column): Column = {
-    val pinned = if (k2Type == org.apache.spark.sql.types.NullType) c
-      else c.cast(k2Type)
+    val pinned = if (keyType == org.apache.spark.sql.types.NullType) c
+      else c.cast(keyType)
     pmod(xxhash64(pinned), lit(nBuckets.toLong)).cast("int")
   }
+
+  /** [[bucketOf]] for one key value inside a task (an external Scala
+    * value of the pinned dtype, as a `Row` carries it). */
+  def bucketFn: Any => Int =
+    org.apache.spark.sql.graft.GraftSqlShim.keyBucketFn(keyType, nBuckets)
 
   /** Cast a loop frame's key column to the pinned dtype (no-op when it
     * already matches; loud failure when uncastable). */
@@ -277,6 +284,20 @@ object SegmentedStateStore {
     } catch { case e: Throwable =>
       SegSwap.releaseLease(fs, path, epoch); throw e
     }
+  }
+
+  /** The stores-fed continuation shell: open `path` for the single
+    * writer and run `continue` on it, unless the store already records
+    * `batchId` ([[SegmentedStateStore.appliedBatch]] — a replayed
+    * micro-batch), in which case the result is None. The lease is
+    * released on every exit (idempotent after a commit released it). */
+  def continueOnce(spark: SparkSession, path: String, batchId: Option[Long])(
+      continue: SegmentedStateStore => IncrResult): Option[IncrResult] = {
+    val store = openForWrite(spark, path)
+    try {
+      if (batchId.exists(_ <= store.appliedBatch)) None
+      else Some(continue(store))
+    } finally store.releaseLease()
   }
 
   /** Open read-only: never mutates — an uninstalled commit is resolved

@@ -171,14 +171,11 @@ object StreamMaintain {
     // correct on first delivery AND on replay, because the edge upsert
     // below runs after. The by-name label keeps the row count off the
     // timing-disabled hot path.
-    val advice = phase(s"continuation (patch rows=$nPatch)") {
-      val (out, a) = IncrementalPageRank.incrementalFromStores(spark,
+    val advice = phase(s"continuation (patch rows=$nPatch)")(
+      IncrementalJob.adviceOnly(IncrementalPageRank.continueFromStores(spark,
         rankStore, edgeStore, patch, chg, damping, iterations,
         filterThreshold = 0.0, numPartitions = numPartitions,
-        batchId = Some(batchId))
-      out.unpersist(blocking = false)
-      a
-    }
+        batchId = Some(batchId))))
     // edge upsert second: replaces the changed keys' rows with the
     // patch and drops the removed srcs' rows — O(touched buckets)
     phase("edge upsert")(
@@ -210,14 +207,11 @@ object StreamMaintain {
       pinN(dedupByKey(ups.select(col("i").cast("long"), col("j").cast("long"),
         col("v").cast("double")), Seq("i", "j"), Seq("v"))))
     val chg = patch.select("j").unionByName(removed).distinct()
-    val advice = phase(s"continuation (patch rows=$nPatch)") {
-      val (out, a) = IncrementalMatVec.incrementalFromStores(spark,
+    val advice = phase(s"continuation (patch rows=$nPatch)")(
+      IncrementalJob.adviceOnly(IncrementalMatVec.continueFromStores(spark,
         stateStore, cellStore, patch, chg, b, iterations,
         filterThreshold = 0.0, numPartitions = numPartitions,
-        batchId = Some(batchId))
-      out.unpersist(blocking = false)
-      a
-    }
+        batchId = Some(batchId))))
     phase("cell upsert")(
       KeyedUpsertStore.upsertBatch(spark, cellStore, patch,
         removed, batchId))
@@ -331,15 +325,12 @@ object StreamMaintain {
       pinN(dedupByKey(ups.select(col("id").cast("long"),
         col("vec").cast("array<double>")), Seq("id"), Seq("vec"))))
     val chg = patch.select("id").unionByName(removed).distinct()
-    val advice = phase(s"continuation (patch rows=$nPatch)") {
-      val (out, a) = graft.algorithms.IncrementalKMeans
-        .incrementalFromStores(spark, centerStore, pointStore, patch,
+    val advice = phase(s"continuation (patch rows=$nPatch)")(
+      IncrementalJob.adviceOnly(graft.algorithms.IncrementalKMeans
+        .continueFromStores(spark, centerStore, pointStore, patch,
           chg, iterations, filterThreshold = 0.0,
           numPartitions = numPartitions, batchId = Some(batchId),
-          metric = metric)
-      out.unpersist(blocking = false)
-      a
-    }
+          metric = metric)))
     phase("point upsert")(
       KeyedUpsertStore.upsertBatch(spark, pointStore, patch,
         removed, batchId))

@@ -194,6 +194,38 @@ object GraftSqlShim {
       () => { rdd.unpersist(blocking = false); () }, stats, sums)
   }
 
+  /** The optimizer's size estimate of `df`'s lazy plan — for file scans
+    * the listed file sizes, so reading it runs no job. */
+  def estimatedBytes(df: DataFrame): BigInt =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.optimizedPlan
+      .stats.sizeInBytes
+
+  /** `spark.sql.autoBroadcastJoinThreshold` as the current thread sees
+    * it (−1 = disabled). */
+  def broadcastThreshold: Long =
+    org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+
+  /** Row-level twin of `pmod(xxhash64(k), n)` for keys of type `dt`
+    * (external Scala values, as in a `Row`): the same Catalyst hash the
+    * column expression evaluates, so a key bucketed inside a task lands
+    * where the store's column expression puts it. */
+  def keyBucketFn(dt: org.apache.spark.sql.types.DataType,
+      n: Int): Any => Int = new KeyBucketFn(dt, n)
+
+  private final class KeyBucketFn(dt: org.apache.spark.sql.types.DataType,
+      n: Int) extends (Any => Int) with Serializable {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, XxHash64}
+    @transient private lazy val hash =
+      new XxHash64(Seq(BoundReference(0, dt, nullable = true)))
+    @transient private lazy val toCatalyst =
+      CatalystTypeConverters.createToCatalystConverter(dt)
+    def apply(k: Any): Int = {
+      val h = hash.eval(InternalRow(toCatalyst(k))).asInstanceOf[Long]
+      java.lang.Math.floorMod(h, n.toLong).toInt
+    }
+  }
+
   /** Run `f` with `overrides` applied to a THREAD-LOCAL clone of the
     * session's SQLConf — nothing session-visible is mutated, so
     * concurrent work sharing the SparkSession on other threads never

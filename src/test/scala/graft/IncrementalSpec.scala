@@ -47,6 +47,42 @@ class IncrementalSpec extends SparkSpec {
         s"node $nd incr=${incr(nd)} full=${full(nd)}")
   }
 
+  test("incr = full at θ=0 when a brand-new source appears (in-task, distributed store, frame-fed)") {
+    import graft.core.SegmentedStateStore
+    // node 9 is new to the graph: it has static rows (its out-edges)
+    // but no rank yet, so it must become affected itself and then
+    // propagate — dropping it leaves nodes 1 and 2 short of its mass
+    val edges1 = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L))
+      .toDF("src", "dst")
+    val delta = Seq((9L, 1L), (9L, 2L)).toDF("src", "dst")
+    val edges2 = edges1.unionByName(delta)
+    val full = PageRank.run(edges2, 0.8, maxIterations = 120)
+      .dynamic.as[(Long, Double)].collect().toMap
+    assert(math.abs(full(9L) - 0.2) < 1e-12)
+    def check(label: String, got: Map[Long, Double]): Unit = {
+      assert(got.keySet == full.keySet, s"$label keys ${got.keySet}")
+      for (k <- full.keySet)
+        assert(math.abs(got(k) - full(k)) < 1e-6,
+          s"$label node $k incr=${got(k)} full=${full(k)}")
+    }
+    for ((label, conf) <- Seq("in-task" -> Nil, "distributed store" -> Seq(distributedLoop))) {
+      val rank = java.nio.file.Files.createTempDirectory("graft_newsrc_rank").toString
+      val edges = java.nio.file.Files.createTempDirectory("graft_newsrc_edges").toString
+      IncrementalPageRank.preserveTo(spark, rank, edges1, 0.8, iterations = 80,
+        nBuckets = 4)
+      IncrementalPageRank.initEdgeStore(spark, edges, edges1, nBuckets = 2)
+      withSqlConf(conf: _*)(graft.streaming.StreamMaintain.pageRankBatch(
+        spark, rank, edges, delta, 0L, 0.8, iterations = 80))
+      check(label, SegmentedStateStore.openForRead(spark, rank).preserved.out
+        .as[(Long, Double)].collect().toMap)
+    }
+    val preserved = IncrementalPageRank.preserve(edges1, 0.8, iterations = 80)
+    check("frame-fed", IncrementalPageRank.incremental(edges2, preserved,
+      Seq(9L).toDF("src"), 0.8, iterations = 80)
+      .as[(Long, Double)].collect().toMap)
+    preserved.release()
+  }
+
   test("ambiguity toggle is THREAD-LOCAL: a concurrent analysis still fails ambiguous self-joins mid-loop") {
     // the round-11 residual #4 pin: the loop's
     // failAmbiguousSelfJoin=false must be invisible to other threads
@@ -1109,6 +1145,14 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("segmented preserved state: exact, delta-proportional, untouched files intact") {
+    segmentedPreservedState()
+  }
+
+  test("segmented preserved state: exact, delta-proportional, untouched files intact (distributed loop)") {
+    withSqlConf(distributedLoop)(segmentedPreservedState())
+  }
+
+  private def segmentedPreservedState(): Unit = {
     import graft.core.SegmentedStateStore
     // two far-apart components: a chain the delta perturbs and a large
     // clique-ish blob it never reaches — with 64 buckets, the blob's

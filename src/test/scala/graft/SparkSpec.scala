@@ -28,6 +28,22 @@ abstract class SparkSpec extends AnyFunSuite {
   }
   val sf = "/root/testdata/sf0.001"
 
+  /** Run `f` with session SQL confs set, restoring the previous values
+    * after (e.g. `spark.sql.autoBroadcastJoinThreshold` = −1 sends
+    * store-mode One2One continuations down the distributed loop). */
+  def withSqlConf[T](kvs: (String, String)*)(f: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The conf that turns the in-task path off. */
+  val distributedLoop: (String, String) =
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+
   /** Deterministically empty the shared session's block store: catalog
     * caches AND raw RDD-level blocks (localCheckpoints — index builds
     * and delta pins create these; `clearCache` cannot see them and the

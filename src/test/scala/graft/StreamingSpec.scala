@@ -9,6 +9,14 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   test("restart-safe stream maintenance: checkpoint restart and duplicate delivery are exactly-once") {
+    restartSafePageRank()
+  }
+
+  test("restart-safe stream maintenance: checkpoint restart and duplicate delivery are exactly-once (distributed loop)") {
+    withSqlConf(distributedLoop)(restartSafePageRank())
+  }
+
+  private def restartSafePageRank(): Unit = {
     import graft.algorithms.IncrementalPageRank
     import graft.core.SegmentedStateStore
     import graft.operators.KeyedUpsertStore
@@ -118,6 +126,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamed deletions: a 'D' batch removes a source end to end, exactly-once") {
+    streamedDeletions()
+  }
+
+  test("streamed deletions: a 'D' batch removes a source end to end, exactly-once (distributed loop)") {
+    withSqlConf(distributedLoop)(streamedDeletions())
+  }
+
+  private def streamedDeletions(): Unit = {
     import graft.algorithms.IncrementalPageRank
     import graft.core.SegmentedStateStore
     import graft.operators.KeyedUpsertStore
