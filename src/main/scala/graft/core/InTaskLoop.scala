@@ -43,6 +43,8 @@ trait RowKernel extends Serializable {
   *    ∪ those new sources; each is re-reduced over its merged bag;
   *  - θ > 0 keeps the affected keys whose value moved ≥ θ and that HAD
   *    an old value (the old⋈new inner join); θ = 0 keeps them all;
+  *  - the exit refresh maps the final frontier and, under θ > 0, every
+  *    round's new sources;
   *  - one frontier size per executed round, the 0 included;
   *  - touched buckets per table: the rounds' affected keys on both,
   *    the exit refresh's keys on kvs only.
@@ -130,10 +132,13 @@ private[core] object InTaskLoop {
     val touchedKvs = mutable.HashSet.empty[Int]
     val touchedOut = mutable.HashSet.empty[Int]
     val fSizes = mutable.ArrayBuffer.empty[Long]
+    // θ > 0: the new sources, which never join a frontier
+    val newSourcesSeen = mutable.HashSet.empty[Any]
     var i = 0
     while (i < maxIterations && frontier.nonEmpty) {
       i += 1
       val newSources = frontier.filter(s => static.contains(s) && !out.contains(s))
+      if (theta > 0.0) newSourcesSeen ++= newSources
       val affected = merge(frontier, fresh(frontier)) ++= newSources
       val next = mutable.HashSet.empty[Any]
       affected.foreach { k =>
@@ -151,8 +156,9 @@ private[core] object InTaskLoop {
     }
     // exit invariant: re-derive the final frontier's contributions from
     // the final out (kvs only — out is final)
-    if (frontier.nonEmpty)
-      merge(frontier, fresh(frontier)).foreach(k => touchedKvs += bucket(k))
+    val exit = frontier ++ newSourcesSeen
+    if (exit.nonEmpty)
+      merge(exit, fresh(exit)).foreach(k => touchedKvs += bucket(k))
 
     val width = 3 + nKvs + nOut + 2
     def wide(t: Int)(fill: Array[Any] => Unit): Row = {

@@ -111,11 +111,10 @@ final case class IncrResult(out: DataFrame, kvs: DataFrame, iterations: Int,
   * two; it becomes affected itself instead, so the reduce gives it a
   * value and the next round maps it. Under θ>0 that next round does
   * not come: the key has no old value, so the old⋈new filter keeps it
-  * out of the frontier, and the exit refresh covers the final frontier
-  * only. Its value lands in out, but its own contributions are missing
-  * from kvs (and from its out-neighbours) until a later frontier holds
-  * it: its value moving by ≥θ, or its static rows changing. Both paths
-  * below share this gap.
+  * out of the frontier. The exit refresh therefore maps every round's
+  * new sources along with the final frontier, so kvs holds their
+  * contributions, computed from their final out values. Both paths
+  * below do this.
   *
   * IN-TASK PATH (the reference's long-lived iteration tasks,
   * `MapTask.java:575-607`). A store-mode One2One continuation whose
@@ -316,12 +315,12 @@ final class IncrementalJob(
       case Some(dir) if durable =>
         val path = s"$dir/seg-$segCounter"
         segCounter += 1
-        df.write.mode("overwrite").parquet(path)
+        graft.operators.SegSwap.writeTable(df, path)
         val spark = df.sparkSession
         val back = spark.read.parquet(path)
         val release = () => {
-          val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+          graft.operators.SegSwap.fsOf(spark, path)
+            .delete(new org.apache.hadoop.fs.Path(path), true)
           ()
         }
         (back, back.count(), release)
@@ -345,11 +344,12 @@ final class IncrementalJob(
     * this continuation may run in one task — store mode, One2One
     * without `includeOldOut`, a kernel, a store laid out `(k2, sk, …)`/
     * `(k2, …)` with sk of the pinned key type, and broadcasts not
-    * disabled. The bound is [[IncrementalJob.InTaskMaxStateBytes]],
-    * or the broadcast threshold when that is lower. The caller
-    * compares the two. */
+    * disabled. The bytes are None when an input has no size statistics
+    * ([[IncrementalJob.stateBytes]]). The bound is
+    * [[IncrementalJob.InTaskMaxStateBytes]], or the broadcast threshold
+    * when that is lower. The caller compares the two. */
   private def inTaskEstimate(st: SegmentedStateStore)
-      : Option[(BigInt, Long)] = {
+      : Option[(Option[BigInt], Long)] = {
     import org.apache.spark.sql.graft.GraftSqlShim
     val (kvs, out) = (st.kvs, st.out)
     val threshold = GraftSqlShim.broadcastThreshold
@@ -358,18 +358,19 @@ final class IncrementalJob(
       kvs.columns.take(2).sameElements(Seq(k2Col, skCol)) &&
       out.columns.head == k2Col && kvs.schema(skCol).dataType == st.keyType
     if (!eligible) None
-    else Some((Seq(kvs, out, staticSource.map(_.all).getOrElse(updatedStatic))
-      .map(GraftSqlShim.estimatedBytes).sum,
+    else Some((IncrementalJob.stateBytes(Seq(kvs, out,
+        staticSource.map(_.all).getOrElse(updatedStatic))),
       math.min(threshold, IncrementalJob.InTaskMaxStateBytes)))
   }
 
   private def runLoop(nCap: Int): IncrResult = {
     val est = segStore.flatMap(inTaskEstimate)
-    val inTask = est.exists { case (bytes, limit) => bytes <= limit }
+    // state of unknown size keeps the distributed loop
+    val inTask = est.exists { case (bytes, limit) => bytes.exists(_ <= limit) }
     if (debugTiming) System.err.println(s"[incr] path=" +
       (if (inTask) "in-task" else "distributed") + est.fold("")({
-        case (bytes, limit) => f" (state ${bytes.toDouble / 1e6}%.2f MB, " +
-          f"bound ${limit / 1e6}%.2f MB)" }))
+        case (bytes, limit) => " (state " + bytes.fold("size unknown")(b =>
+          f"${b.toDouble / 1e6}%.2f MB") + f", bound ${limit / 1e6}%.2f MB)" }))
     if (inTask) runInTask(segStore.get, kernel.get)
     else runDistributed(nCap)
   }
@@ -600,13 +601,14 @@ final class IncrementalJob(
       scratchCur ::= m._3; (m._1, m._2)
     }
 
-    locally {
-      // the initial frontier's bucket sets (state-store for the One2One
-      // out-scan prune, static-store for staticFrontier) ride the same
-      // job that materializes the leaf — zero extra jobs
+    // binds the frontier to the distinct `sk` keys of `keys`: its bucket
+    // sets (state-store for the One2One out-scan prune, static-store for
+    // staticFrontier) ride the same job that materializes the leaf —
+    // zero extra jobs
+    def bindKeys(keys: DataFrame): Unit = {
       val wantFb = segStore.isDefined
       val wantSb = staticSource.isDefined
-      val base = initialFrontier.select(col(skCol)).distinct()
+      val base = keys.select(col(skCol)).distinct()
       val withFb = if (wantFb) base.withColumn("_fb", bucketOf(col(skCol)))
         else base
       val withSb = staticSource.map(ss =>
@@ -619,6 +621,11 @@ final class IncrementalJob(
       val staticBs = if (wantSb) Some(sets.last) else None
       bindFrontier(leaf.select(col(skCol)), s0, staticBs, segBs)
     }
+    bindKeys(initialFrontier)
+    // θ>0 only: each round's brand-new sources (see the class doc) as
+    // views over their fa leaves, kept alive for the exit refresh
+    var newSources = List.empty[DataFrame]
+    var newSourcesRelease = List.empty[() => Unit]
     var i = 0
     // per-iteration post-filter frontier sizes (the reference's
     // non-converged counter) — driver-side longs, one per round
@@ -712,21 +719,31 @@ final class IncrementalJob(
       // subset) — their static buckets come out of this job too
       val wantFsb = staticSource.isDefined &&
         projectKind == ProjectKind.One2One
-      val faPlan0 = (oldKeyRows +: newSourceRows.toSeq)
-        .map(_.withColumn("_tag", lit("a")))
+      // under θ>0 the new sources (tag "n") are tracked for the exit
+      // refresh: `_nsb` is non-null on their rows only, so its set is
+      // empty when the round has none
+      val trackNew = filterThreshold > 0.0 && newSourceRows.isDefined
+      val faPlan0 = (oldKeyRows.withColumn("_tag", lit("a")) +:
+          newSourceRows.map(_.withColumn("_tag", lit("n"))).toSeq)
         .foldLeft(freshPlan.withColumn("_tag", lit("f")))(_ unionByName _)
         .withColumn("_b", bucketOf(col(k2Col)))
-      val faPlan = if (!wantFsb) faPlan0 else
+      val faPlan1 = if (!wantFsb) faPlan0 else
         faPlan0.withColumn("_fsb", staticSource.get.bucketOf(col(k2Col)))
+      val faPlan = if (!trackNew) faPlan1 else
+        faPlan1.withColumn("_nsb", when(col("_tag") === "n", col("_b")))
       val (faRaw, faSets) = timed(s"iter $i fresh+affected") {
-        val (leaf, _, rel, sets) = materializeStats(faPlan,
-          "_b" +: (if (wantFsb) Seq("_fsb") else Nil))
-        scratchCur ::= rel
+        val (leaf, _, rel, sets) = materializeStats(faPlan, "_b" +:
+          ((if (wantFsb) Seq("_fsb") else Nil) ++ (if (trackNew) Seq("_nsb") else Nil)))
+        if (trackNew && sets.last.nonEmpty) {
+          newSources ::= leaf.filter(col("_tag") === "n")
+            .select(col(k2Col).as(skCol))
+          newSourcesRelease ::= rel
+        } else scratchCur ::= rel
         (leaf, sets)
       }
-      val fa = if (wantFsb) faRaw.drop("_fsb") else faRaw
+      val fa = faRaw.drop("_fsb", "_nsb")
       val faTouched = faSets.head
-      val faStaticBs = if (wantFsb) Some(faSets.last) else None
+      val faStaticBs = if (wantFsb) Some(faSets(1)) else None
       val fresh = fa.filter(col("_tag") === "f").drop("_tag")
       // affected keys as a leaf (they seed 3 joins and the next
       // frontier), counted by the materialization itself
@@ -912,6 +929,10 @@ final class IncrementalJob(
     // sub-θ staleness is the F30 approximation contract itself, exactly
     // as preserve-after-early-stop leaves it. Chained exactness is
     // gate-enforced (q_incr_pagerank_stream's two-delta unrolled oracle).
+    // The rounds' brand-new sources join the refresh set under θ>0.
+    if (newSources.nonEmpty)
+      bindKeys((if (frontierSize > 0) Seq(frontier) else Nil)
+        .foldLeft(newSources.reduce(_ unionByName _))(_ unionByName _))
     if (frontierSize > 0) {
       val fkRaw = frontier.withColumnRenamed(skCol, "_fk")
       val fk = if (frontierSize <= broadcastMaxRows) broadcast(fkRaw) else fkRaw
@@ -952,6 +973,7 @@ final class IncrementalJob(
     // segment leaves are. Free it on the spot.
     scratchPrev.foreach(_.apply())
     scratchCur.foreach(_.apply())
+    newSourcesRelease.foreach(_.apply())
     allSourcesRelease()
     segStore match {
       case Some(st) =>
@@ -1011,6 +1033,13 @@ object IncrementalJob {
     * bucket rows add a copy of kvs and out when every bucket is
     * touched. At 8 MB that is ~150 MB plus the copy for one task. */
   private[graft] val InTaskMaxStateBytes: Long = 8L * 1000 * 1000
+
+  /** The optimizer's bytes of `frames` together, None when one has no
+    * size statistics ([[org.apache.spark.sql.graft.GraftSqlShim.estimatedBytes]]). */
+  private[graft] def stateBytes(frames: Seq[DataFrame]): Option[BigInt] = {
+    val each = frames.map(org.apache.spark.sql.graft.GraftSqlShim.estimatedBytes)
+    if (each.forall(_.isDefined)) Some(each.flatten.sum) else None
+  }
 
   /** Timing/diagnostic switch: the `GRAFT_TIMING` env var (dev shells)
     * or the `graft.timing` system property (set programmatically by

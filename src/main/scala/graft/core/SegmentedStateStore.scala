@@ -246,11 +246,7 @@ object SegmentedStateStore {
         val df = SegSwap.castToPinned(df0, k2Col, k2Ddl, s"segstate init $n")
         val withB = df.withColumn("_b", bucket)
         ddl += n -> withB.schema.toDDL
-        // repartition on the bucket key first: each bucket is one task's
-        // contiguous write (the tasks-x-buckets small-file lesson)
-        val staged = withB.repartition(col("_b"))
-        () => staged.write.mode("overwrite")
-          .partitionBy("_b").parquet(s"$path/$n")
+        graft.operators.SegSwap.stageBuckets(withB, s"$path/$n")
     }
     // the two table writes are independent (distinct dirs; params — the
     // completeness marker — still lands after both): overlap them

@@ -117,8 +117,7 @@ object DecontamStore {
     var ddl = Map.empty[String, String]
     Seq("shingles" -> sh, "evalsh" -> ev).foreach { case (n, df) =>
       ddl += n -> df.schema.toDDL
-      df.repartition(col("_b")).write.mode("overwrite")
-        .partitionBy("_b").parquet(s"$path/$n")
+      SegSwap.writeBuckets(df, s"$path/$n")
     }
     writeParamsTo(spark, s"$path/params", Params(w, nBuckets,
       corpus.schema(idCol).dataType.sql,

@@ -128,9 +128,7 @@ object DedupClusterStore {
     graft.util.Par.foreach(
       Seq("bands" -> bands, "comps" -> compsB).map { case (n, df) =>
         ddl += n -> df.schema.toDDL
-        val staged = df.repartition(col("_b"))
-        () => staged.write.mode("overwrite")
-          .partitionBy("_b").parquet(s"$path/$n")
+        SegSwap.stageBuckets(df, s"$path/$n")
       })
     writeParamsTo(spark, s"$path/params", p0.copy(ddl = ddl))
     comps.unpersist(blocking = false)

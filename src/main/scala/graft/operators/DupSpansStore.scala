@@ -198,9 +198,7 @@ object DupSpansStore {
     // every table derives from materialized leaves (or the source) —
     // independent writes to distinct dirs, overlapped (§2.6)
     graft.util.Par.foreach(tables.map { case (n, df) =>
-      val staged = df.repartition(col("_b"))
-      () => staged.write.mode("overwrite")
-        .partitionBy("_b").parquet(s"$path/$n")
+      SegSwap.stageBuckets(df, s"$path/$n")
     })
     // params last: their presence marks a complete init
     writeParams(spark, path, p0.copy(

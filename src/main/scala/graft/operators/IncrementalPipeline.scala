@@ -37,6 +37,13 @@ private[operators] object IncrMat {
     def mat(df: DataFrame): DataFrame = {
       val (leaf, rel) = matWithHandle(df); rels += rel; leaf
     }
+    /** [[mat]] plus the leaf's row count, from the same job. */
+    def matCounted(df: DataFrame): (DataFrame, Long) = {
+      val (leaf, rows, rel) = org.apache.spark.sql.graft.GraftSqlShim
+        .checkpointedLeafWithHandle(df)
+      rels += rel
+      (leaf, rows)
+    }
     /** [[mat]] plus per-INT-column distinct-value sets gathered inside
       * the SAME materialization job (the stores' touched-bucket sets —
       * no separate distinct().collect() job; guide §1.2). */

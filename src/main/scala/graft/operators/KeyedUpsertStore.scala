@@ -64,8 +64,7 @@ object KeyedUpsertStore {
       keyCol: String, nBuckets: Int = 32): Unit = {
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
     val withB = rows.withColumn("_b", keyBucket(col(keyCol), nBuckets))
-    withB.repartition(col("_b")).write.mode("overwrite")
-      .partitionBy("_b").parquet(s"$path/rows")
+    SegSwap.writeBuckets(withB, s"$path/rows")
     writeParamsTo(spark, s"$path/params", Params(keyCol, nBuckets,
       rows.schema(keyCol).dataType.sql, -1L, withB.schema.toDDL))
   }

@@ -118,8 +118,7 @@ object LineDedupStore {
     Seq("lines" -> lines, "dfreq" -> dfreq, "out" -> out).foreach {
       case (n, df) =>
         ddl += n -> df.schema.toDDL
-        df.repartition(col("_b")).write.mode("overwrite")
-          .partitionBy("_b").parquet(s"$path/$n")
+        SegSwap.writeBuckets(df, s"$path/$n")
     }
     writeParamsTo(spark, s"$path/params", Params(maxDocs, sep, nBuckets,
       docs.schema(idCol).dataType.sql, ddl))

@@ -161,9 +161,7 @@ object LmCountsStore {
     graft.util.Par.foreach(
       Seq("unidoc" -> unidoc, "bidoc" -> bidoc, "uni" -> uni,
           "bi" -> bi).map { case (n, df) =>
-        val staged = df.repartition(col("_b"))
-        () => staged.write.mode("overwrite")
-          .partitionBy("_b").parquet(s"$path/$n")
+        SegSwap.stageBuckets(df, s"$path/$n")
       })
     writeParams(spark, path, p0.copy(ddl = Map(
       "unidoc" -> unidoc.schema.toDDL, "bidoc" -> bidoc.schema.toDDL,

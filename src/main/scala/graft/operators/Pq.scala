@@ -391,14 +391,14 @@ object Pq {
     // they read
     val cents = Similarity.normalizedCentroids(v, centroids, nlist)
       .localCheckpoint(true)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
+    SegSwap.writeTable(cents, s"$path/centroids")
     val assigned0 = Similarity.assignToLists(v, cents, centroidFoldLimit)
     var releaseRes: () => Unit = () => ()
     val assigned = (if (!residual) {
       val cb = codebooks.getOrElse(trainCodebooks(
         v.select(col("nid").as("id"), col("nvec").as("vec")), m, ksub,
         pqRounds)).localCheckpoint(true)
-      cb.write.mode("overwrite").parquet(s"$path/codebooks")
+      SegSwap.writeTable(cb, s"$path/codebooks")
       val enc = encode(
         v.select(col("nid").as("id"), col("nvec").as("vec")), cb, m)
       assigned0.join(enc.withColumnRenamed("id", "nid"), "nid")
@@ -417,7 +417,7 @@ object Pq {
       val cb = codebooks.getOrElse(trainCodebooks(
         withRes.select(col("nid").as("id"), col("rvec").as("vec")), m,
         ksub, pqRounds)).localCheckpoint(true)
-      cb.write.mode("overwrite").parquet(s"$path/codebooks")
+      SegSwap.writeTable(cb, s"$path/codebooks")
       val encR = encodeRecon(
         withRes.select(col("nid").as("id"), col("rvec").as("vec")), cb, m)
       val out = withRes
@@ -437,13 +437,9 @@ object Pq {
     // the count also pins `assigned` before its upstream caches release
     val rows = assigned.count()
     val locB = if (locBuckets > 0) locBuckets else Similarity.autoLocB(rows)
-    assigned
-      .repartition(col("_b"))
-      .write.mode("overwrite").partitionBy("_b").parquet(s"$path/lists")
-    assigned.select(col("nid"), col("cid"))
-      .withColumn("_b", Similarity.locBucket(col("nid"), locB))
-      .repartition(col("_b"))
-      .write.mode("overwrite").partitionBy("_b").parquet(s"$path/loc")
+    SegSwap.writeBuckets(assigned, s"$path/lists")
+    SegSwap.writeBuckets(assigned.select(col("nid"), col("cid"))
+      .withColumn("_b", Similarity.locBucket(col("nid"), locB)), s"$path/loc")
     // released only after BOTH writes that consume `assigned`: if an
     // evicted MEMORY_AND_DISK partition of `assigned` recomputes during
     // the lists/loc writes, it must read the cached residuals, not redo

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
@@ -68,8 +69,71 @@ private[graft] object SegSwap {
   // installed-epoch + 1)
   private val EpochHeader = """^epoch (\d+)$""".r
 
-  def fsOf(spark: SparkSession, path: String): FileSystem =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The filesystem of `path` for the engine's own store I/O. A local
+    * path (`file:`, or scheme-less under a local default FS) gets
+    * [[NioLocalFileSystem]], which creates files and directories
+    * without a `chmod` process each; one instance per Hadoop conf, like
+    * Hadoop's own cache. Any other scheme gets Hadoop's filesystem for
+    * it. The session's cached `file:` filesystem is left as it is. */
+  def fsOf(spark: SparkSession, path: String): FileSystem = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new HPath(path)
+    if (!isLocal(p, conf)) p.getFileSystem(conf)
+    else synchronized {
+      val cls = localFsClass
+      if (!(localFs._1 eq conf) || localFs._2.getClass != cls) {
+        val fs = cls.getDeclaredConstructor().newInstance()
+        fs.initialize(java.net.URI.create("file:///"), conf)
+        localFs = (conf, fs)
+      }
+      localFs._2
+    }
+  }
+  private var localFs: (Configuration, FileSystem) = (null, null)
+
+  /** The local filesystem class of [[fsOf]] and the store table writes.
+    * Specs set the class Hadoop resolves for `file:` to compare a store
+    * written the forking way. */
+  @volatile private[graft] var localFsClass: Class[_ <: FileSystem] =
+    classOf[NioLocalFileSystem]
+
+  private def isLocal(p: HPath, conf: Configuration): Boolean =
+    Option(p.toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
+
+  /** The write of one bucket-partitioned store table: `df` (carrying
+    * the bucket column `_b`) repartitioned on `_b`, so each bucket is
+    * one task's contiguous file instead of tasks × buckets small files,
+    * overwriting `dir` as one parquet dir per bucket. The frame is
+    * built here, on the caller's thread (thread-local analyzer confs
+    * apply); the returned thunk runs the write, so independent table
+    * writes can overlap through [[graft.util.Par]].
+    *
+    * A local `dir` is written through [[NioLocalFileSystem]]: the
+    * write's own options carry `fs.file.impl` and disable the
+    * filesystem cache for it, and Spark folds write options into that
+    * write job's Hadoop conf only. */
+  private[graft] def stageBuckets(df: DataFrame, dir: String): () => Unit = {
+    val w = localWriter(df.repartition(col("_b")), dir)
+    () => w.partitionBy("_b").parquet(dir)
+  }
+
+  /** [[stageBuckets]], run now. */
+  private[graft] def writeBuckets(df: DataFrame, dir: String): Unit =
+    stageBuckets(df, dir)()
+
+  /** The write of one un-bucketed store table (centroids, codebooks, a
+    * durable loop segment): `df` overwriting `dir` as parquet, through
+    * [[NioLocalFileSystem]] like [[stageBuckets]]. */
+  private[graft] def writeTable(df: DataFrame, dir: String): Unit =
+    localWriter(df, dir).parquet(dir)
+
+  private def localWriter(df: DataFrame, dir: String) = {
+    val local = isLocal(new HPath(dir), df.sparkSession.sparkContext.hadoopConfiguration)
+    df.write.mode("overwrite").options(if (!local) Map.empty[String, String]
+      else Map("fs.file.impl" -> localFsClass.getName,
+        "fs.file.impl.disable.cache" -> "true"))
+  }
 
   /** Cast an id column to the store's PINNED type before hashing.
     * Bucket functions hash the id's physical representation
@@ -834,19 +898,12 @@ private[graft] object SegSwap {
       dirSwaps.isEmpty) return
     val fs = fsOf(spark, path)
     fs.delete(new HPath(s"$path/$Staging"), true)
-    // repartition on the bucket key first: without it every shuffle
-    // task opens a writer per bucket it sees (tasks × buckets small
-    // files); with it each bucket is one contiguous file — the
-    // file-count hygiene a large store needs. The per-table staging
-    // writes are INDEPENDENT (distinct dirs, the journal lands after
-    // all of them), so they overlap through graft.util.Par (guide
-    // §2.6); frames are constructed here on the caller thread so any
-    // thread-local analyzer conf still applies.
+    // the per-table staging writes are INDEPENDENT (distinct dirs, the
+    // journal lands after all of them), so they overlap through
+    // graft.util.Par (guide §2.6)
     graft.util.Par.foreach(touched.collect {
       case (n, df, bs) if bs.nonEmpty || augmentFromStaging =>
-        val staged = df.repartition(col("_b"))
-        () => staged.write.mode("overwrite")
-          .partitionBy("_b").parquet(s"$path/$Staging/$n")
+        stageBuckets(df, s"$path/$Staging/$n")
     })
     // whole-dir swaps (e.g. the params table during a rebucket — its
     // new bucket count must install ATOMICALLY with the re-bucketed

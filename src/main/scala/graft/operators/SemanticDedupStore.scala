@@ -123,7 +123,7 @@ object SemanticDedupStore {
     val intern = new IncrMat.Tracker
     val cents = intern.mat(
       Similarity.normalizedCentroids(v, centroids, nlist))
-    cents.write.mode("overwrite").parquet(s"$path/cents")
+    SegSwap.writeTable(cents, s"$path/cents")
     // assign feeds its own write, both sides of keepFor's self-join and
     // the keep join — one materialization
     val assign = intern.mat(
@@ -134,8 +134,7 @@ object SemanticDedupStore {
     var ddl = Map.empty[String, String]
     Seq("assign" -> assign, "out" -> out).foreach { case (n, df) =>
       ddl += n -> df.schema.toDDL
-      df.repartition(col("_b")).write.mode("overwrite")
-        .partitionBy("_b").parquet(s"$path/$n")
+      SegSwap.writeBuckets(df, s"$path/$n")
     }
     writeParamsTo(spark, s"$path/params", Params(tau, centroidFoldLimit,
       nBuckets, v.schema("nid").dataType.sql, ddl))

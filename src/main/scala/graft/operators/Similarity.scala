@@ -160,16 +160,14 @@ object Similarity {
     // frame before the overwrite write targets the path it reads
     val cents = normalizedCentroids(v, centroids, nlist)
       .localCheckpoint(true)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
+    SegSwap.writeTable(cents, s"$path/centroids")
     val assigned = assignToLists(v, cents, centroidFoldLimit)
       .withColumn("_b", col("cid").cast("int"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // locBuckets = 0 → size by the build corpus (the count reads the
     // frame the two writes below materialize anyway)
     val locB = if (locBuckets > 0) locBuckets else autoLocB(assigned.count())
-    assigned
-      .repartition(col("_b"))
-      .write.mode("overwrite").partitionBy("_b").parquet(s"$path/lists")
+    SegSwap.writeBuckets(assigned, s"$path/lists")
     writeLoc(assigned, s"$path/loc", locB)
     assigned.unpersist(blocking = false)
     SegSwap.writeParamsTo(spark, s"$path/params", ivfParams(-1L, locB))
@@ -215,10 +213,8 @@ object Similarity {
     pmod(xxhash64(c.cast("long")), lit(b.toLong)).cast("int")
 
   private def writeLoc(assigned: DataFrame, dst: String, b: Int): Unit =
-    assigned.select(col("nid"), col("cid"))
-      .withColumn("_b", locBucket(col("nid"), b))
-      .repartition(col("_b"))
-      .write.mode("overwrite").partitionBy("_b").parquet(dst)
+    SegSwap.writeBuckets(assigned.select(col("nid"), col("cid"))
+      .withColumn("_b", locBucket(col("nid"), b)), dst)
 
   /** Journaled locator RE-BUCKETING — the family lifecycle op on the
     * ANN stores' one hash-bucketed table: `locB` freezes at build, so

@@ -141,9 +141,7 @@ object TfidfStore {
       Seq("tf" -> tf, "dfreq" -> dfreq, "docs" -> members).map {
         case (n, df) =>
           ddl += n -> df.schema.toDDL
-          val staged = df.repartition(col("_b"))
-          () => staged.write.mode("overwrite")
-            .partitionBy("_b").parquet(s"$path/$n")
+          SegSwap.stageBuckets(df, s"$path/$n")
       })
     writeParamsTo(spark, s"$path/params", Params(nBuckets, docs.count(),
       docs.schema(idCol).dataType.sql, ddl))
@@ -209,23 +207,28 @@ object TfidfStore {
       : Option[StorePolicy.ContinueAdvice] = {
     val B = p.b
     val intern = new IncrMat.Tracker
-    // duplicate-immune removal set (N must not decrement twice)
-    val rem = intern.mat(SegSwap.castToPinned(
-      removedIds.select(col(removedIds.columns.head).as("_rid")),
-      "_rid", p.idDdl, "tfidfstore continueAt removedIds").distinct())
     val added = SegSwap.castToPinned(addedDocs, idCol, p.idDdl,
       "tfidfstore continueAt addedDocs")
+    // the delta's ids, distinct per side (a duplicate-immune removal
+    // set), with their doc buckets: the tf/docs rewrite set `td` rides
+    // this job. Derived from the added IDS (not tfAdded): a token-less
+    // added doc has no tf rows but its membership row must still land
+    // in a journaled bucket.
+    val (ids, idSets) = intern.matStats(SegSwap.castToPinned(
+        removedIds.select(col(removedIds.columns.head).as("_id")),
+        "_id", p.idDdl, "tfidfstore continueAt removedIds")
+      .withColumn("_rm", lit(true))
+      .unionByName(added.select(col(idCol).as("_id"), lit(false).as("_rm")))
+      .distinct().withColumn("_b", docBucket(col("_id"), B)), Seq("_b"))
+    val td = idSets.head
+    val rem = ids.filter(col("_rm")).select(col("_id").as("_rid"))
+    val addedIds = ids.filter(!col("_rm"))
+      .select(col("_id").as("doc_id"), col("_b"))
     val tfAdded = intern.mat(IncrementalTfidf.tfOf(added, idCol, textCol)
       .withColumn("_b", docBucket(col("doc_id"), B)))
 
     // tf rewrite: the delta ids' buckets; departing bags from ONE
     // pruned scan feeding both the rewrite and the df decrement.
-    // Derived from the added IDS (not tfAdded): a token-less added doc
-    // has no tf rows but its membership row must still land in a
-    // journaled bucket.
-    val td = rem.select(docBucket(col("_rid"), B).as("_b"))
-      .unionByName(added.select(docBucket(col(idCol), B).as("_b")))
-      .distinct().collect().map(_.getInt(0)).toSet
     val tfLive = readTable(spark, path, p, "tf")
     val (tfOldT, relOld) = IncrMat.matWithHandle(
       tfLive.filter(inBuckets(td)))
@@ -240,21 +243,19 @@ object TfidfStore {
       .join(rem, col("doc_id") === col("_rid"), "left_semi")
       .groupBy("token").agg(count(lit(1)).as("_minus")))
     relOld()
-    // N decrements by the removed ids actually PRESENT, not by the
-    // request size: tf/df bags are naturally absent-immune (nothing to
-    // evict), but a blind `- rem.count()` would silently skew every
-    // tfidf weight when a deletion list is re-sent (the Forget crash
-    // window's documented recovery is exactly "re-run the sweep").
-    // Presence comes from the MEMBERSHIP table, never tf — a token-less
-    // document counts in N yet has no tf rows.
-    val docsOldT = intern.mat(
+    // N moves by the MEMBERSHIP change of the td buckets, the two leaf
+    // counts: it decrements by the removed ids actually PRESENT, not by
+    // the request size — tf/df bags are naturally absent-immune
+    // (nothing to evict), but a blind `- rem.count()` would silently
+    // skew every tfidf weight when a deletion list is re-sent (the
+    // Forget crash window's documented recovery is exactly "re-run the
+    // sweep"). Presence comes from the membership table, never tf — a
+    // token-less document counts in N yet has no tf rows.
+    val (docsOldT, nOld) = intern.matCounted(
       readTable(spark, path, p, "docs").filter(inBuckets(td)))
-    val remPresent = docsOldT
-      .join(rem, col("doc_id") === col("_rid"), "left_semi").count()
-    val docsNextT = intern.mat(docsOldT
+    val (docsNextT, nNext) = intern.matCounted(docsOldT
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
-      .unionByName(added.select(col(idCol).as("doc_id")).distinct()
-        .withColumn("_b", docBucket(col("doc_id"), B))))
+      .unionByName(addedIds))
     // the touched token-bucket set (ts) rides the same job
     val (touchedRaw, touchedSets) = intern.matStats(
       dfAdd.select("token").unionByName(dfSub.select("token")).distinct()
@@ -275,8 +276,7 @@ object TfidfStore {
       .unionByName(mergedTouched.withColumn("_b",
         tokBucket(col("token"), B))))
 
-    val n2 = p.n +
-      added.select(col(idCol)).distinct().count() - remPresent
+    val n2 = p.n - nOld + nNext
     val liveB = math.max(1,
       SegSwap.liveBuckets(SegSwap.fsOf(spark, path), path, "tf").size)
     SegSwap.commit(spark, path, Seq(

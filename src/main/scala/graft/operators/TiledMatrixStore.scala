@@ -100,29 +100,24 @@ object TiledMatrixStore {
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
     val cells = m.select(col("i").cast("long"), col("j").cast("long"),
       col("v").cast("double"))
-    val stagedCells = cells.withColumn("_b", keyBucket(col("j"), cellBuckets))
-      .repartition(col("_b"))
-    val stagedTiles = cells
+    val tiles = cells
       .groupBy(tidOf(col("i"), col("j"), blockSize).as("tid"),
         jbOf(col("j"), blockSize).as("jb"))
       .agg(collect_list(struct(col("i"), col("j"), col("v"))).as("cells"))
       .withColumn("_b", keyBucket(col("tid"), tileBuckets))
-      .repartition(col("_b"))
     // cells and tiles derive independently from the source — overlap
     // their writes (§2.6); tidx projects the just-written tiles, so it
     // stays after
     graft.util.Par.foreach(Seq(
-      () => stagedCells.write.mode("overwrite")
-        .partitionBy("_b").parquet(s"$path/cells"),
-      () => stagedTiles.write.mode("overwrite")
-        .partitionBy("_b").parquet(s"$path/tiles")))
+      SegSwap.stageBuckets(cells.withColumn("_b",
+        keyBucket(col("j"), cellBuckets)), s"$path/cells"),
+      SegSwap.stageBuckets(tiles, s"$path/tiles")))
     // the index projects the JUST-WRITTEN tiles (two thin columns,
     // column-pruned) — re-deriving it from `cells` would re-run the
     // blocking groupBy as a second full corpus scan+shuffle
-    spark.read.parquet(s"$path/tiles").select(col("jb"), col("tid"))
-      .withColumn("_b", keyBucket(col("jb"), idxBuckets))
-      .repartition(col("_b")).write.mode("overwrite")
-      .partitionBy("_b").parquet(s"$path/tidx")
+    SegSwap.writeBuckets(spark.read.parquet(s"$path/tiles")
+      .select(col("jb"), col("tid"))
+      .withColumn("_b", keyBucket(col("jb"), idxBuckets)), s"$path/tidx")
     writeParamsTo(spark, s"$path/params",
       Params(blockSize, cellBuckets, tileBuckets, idxBuckets, -1L))
   }

@@ -195,10 +195,17 @@ object GraftSqlShim {
   }
 
   /** The optimizer's size estimate of `df`'s lazy plan — for file scans
-    * the listed file sizes, so reading it runs no job. */
-  def estimatedBytes(df: DataFrame): BigInt =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.optimizedPlan
-      .stats.sizeInBytes
+    * the listed file sizes, so reading it runs no job. None when a leaf
+    * of the plan has no size statistics (e.g. a frame over an RDD):
+    * the optimizer then assumes `spark.sql.defaultSizeInBytes`,
+    * `Long.MaxValue` unless set, and the plan's estimate is not a size. */
+  def estimatedBytes(df: DataFrame): Option[BigInt] = {
+    val plan = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+      .optimizedPlan
+    val unknown = org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes
+    if (plan.collectLeaves().exists(_.stats.sizeInBytes >= unknown)) None
+    else Some(plan.stats.sizeInBytes)
+  }
 
   /** `spark.sql.autoBroadcastJoinThreshold` as the current thread sees
     * it (−1 = disabled). */

@@ -128,6 +128,27 @@ class InTaskSpec extends SparkSpec {
     assert(SegmentedStateStore.openForRead(spark, rank).appliedBatch == 1L)
   }
 
+  test("state of unknown size (a frame over an RDD) keeps the distributed loop") {
+    import graft.core.IncrementalJob
+    val (rank, edges) = stores("unknown")
+    val rows = Seq((3L, 11L), (3L, 17L), (8L, 21L))
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(rows))
+      .toDF("src", "dst")
+    val st = SegmentedStateStore.openForRead(spark, rank)
+    assert(IncrementalJob.stateBytes(Seq(st.kvs, st.out)).isDefined)
+    assert(IncrementalJob.stateBytes(Seq(st.kvs, st.out, rdd)).isEmpty,
+      "an RDD-backed frame has no size statistics")
+    // the batch's static rows over that RDD: the overlay's size is
+    // unknown, so the continuation keeps the distributed loop
+    val patch = IncrementalPageRank.prepareBatch(rdd)
+    val r = IncrementalPageRank.continueFromStores(spark, rank, edges, patch,
+      patch.select("src").distinct(), damping, iterations = 3,
+      batchId = Some(0L)).get
+    r.release()
+    assert(!r.inTask, "state of unknown size ran in one task")
+    assert(SegmentedStateStore.openForRead(spark, rank).appliedBatch == 0L)
+  }
+
   test("a store just under the in-task bound runs in one task and matches the distributed loop") {
     val bound = graft.core.IncrementalJob.InTaskMaxStateBytes
     val n = 80000L
@@ -138,10 +159,9 @@ class InTaskSpec extends SparkSpec {
       numPartitions = 4, nBuckets = 16)
     IncrementalPageRank.initEdgeStore(spark, edges, e, nBuckets = 8)
     e.unpersist(blocking = false)
-    val est = org.apache.spark.sql.graft.GraftSqlShim.estimatedBytes _
     val st = SegmentedStateStore.openForRead(spark, rank)
-    val bytes = est(st.kvs) + est(st.out) +
-      est(KeyedUpsertStore.open(spark, edges).all)
+    val bytes = graft.core.IncrementalJob.stateBytes(Seq(st.kvs, st.out,
+      KeyedUpsertStore.open(spark, edges).all)).get
     assert(bytes > bound * 3 / 4 && bytes < bound,
       s"fixture state $bytes B is not just under the $bound B bound")
     def copy(from: String, tag: String): String = {
@@ -166,25 +186,11 @@ class InTaskSpec extends SparkSpec {
   }
 
   test("job count of one pageRankBatch stays at or under the measured count, per path") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def count(f: => Unit): Int = {
-      org.apache.spark.ListenerDrain(spark.sparkContext)
-      jobs.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      try { f; org.apache.spark.ListenerDrain(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
     val batch = Seq((3L, 11L, "U"), (3L, 17L, "U"), (8L, 21L, "U"),
       (5L, 0L, "D")).toDF("src", "dst", "op").localCheckpoint(true)
     def run(tag: String): Int = {
       val (rank, edges) = stores(tag)
-      count(StreamMaintain.pageRankBatch(spark, rank, edges, batch, 0L,
+      jobsOf(StreamMaintain.pageRankBatch(spark, rank, edges, batch, 0L,
         damping, iterations = 3))
     }
     val inTask = run("jobs_intask")

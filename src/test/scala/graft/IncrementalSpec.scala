@@ -83,6 +83,34 @@ class IncrementalSpec extends SparkSpec {
     preserved.release()
   }
 
+  test("θ>0: a brand-new source's contributions land in kvs from its stored rank (in-task, distributed store)") {
+    import graft.core.SegmentedStateStore
+    // node 9 is new: under θ>0 it never joins a frontier (it has no old
+    // rank for the filter to compare), so only the exit refresh can
+    // put its contributions into kvs
+    val edges1 = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L))
+      .toDF("src", "dst")
+    val edges2 = edges1.unionByName(Seq((9L, 1L), (9L, 2L)).toDF("src", "dst"))
+    for ((label, conf) <- Seq("in-task" -> Nil, "distributed store" -> Seq(distributedLoop))) {
+      val rank = java.nio.file.Files.createTempDirectory("graft_newsrc_theta").toString
+      IncrementalPageRank.preserveTo(spark, rank, edges1, 0.8, iterations = 80,
+        nBuckets = 4)
+      withSqlConf(conf: _*)(IncrementalPageRank.incrementalSeg(spark, rank,
+        edges2, Seq(9L).toDF("src"), 0.8, iterations = 80,
+        filterThreshold = 0.01).unpersist(blocking = false))
+      val st = SegmentedStateStore.openForRead(spark, rank).preserved
+      val r9 = st.out.filter(col("node") === 9L).select("rank").as[Double]
+        .collect().toSeq
+      assert(r9.size == 1 && math.abs(r9.head - 0.2) < 1e-12, s"$label rank of 9: $r9")
+      val got = st.kvs.filter(col("src") === 9L)
+        .select("node", "contrib").as[(Long, Double)].collect().toMap
+      assert(got.keySet == Set(1L, 2L), s"$label kvs rows of source 9: $got")
+      for ((k, c) <- got)
+        assert(math.abs(c - r9.head / 2 * 0.8) < 1e-15,
+          s"$label contribution 9 -> $k is $c, not its stored rank's share")
+    }
+  }
+
   test("ambiguity toggle is THREAD-LOCAL: a concurrent analysis still fails ambiguous self-joins mid-loop") {
     // the round-11 residual #4 pin: the loop's
     // failAmbiguousSelfJoin=false must be invisible to other threads
@@ -1824,6 +1852,36 @@ class IncrementalSpec extends SparkSpec {
     sameAs(collect(TfidfStore.tfidf(spark, store)),
       collect(Pipeline.tfidf(corpus3, "doc_id", "text")), "post-rebucket")
     assertUntouched(beforeTf, fileSnapshot(s"$store/tf"), touchedTf, "tf")
+  }
+
+  test("tfidf store: one continuation stays at or under the measured job count") {
+    import graft.operators.TfidfStore
+    // the corpus_stream shape: 2 buckets, 20 fresh documents (one
+    // token-less) and 3 deletions per batch
+    def doc(i: Long) = (i, Seq(i % 7, i % 13, i % 29).map(w => s"w$w").mkString(" "))
+    val store = java.nio.file.Files.createTempDirectory("graft_tfidf_jobs").toString
+    TfidfStore.init(spark, store, (0L until 200L).map(doc).toDF("doc_id", "text"),
+      "doc_id", "text", nBuckets = 2)
+    val added = ((200L until 219L).map(doc) :+ ((219L, " "))).toDF("doc_id", "text")
+      .localCheckpoint(true)
+    val removed = Seq(3L, 77L, 150L).toDF("doc_id").localCheckpoint(true)
+    val jobs = jobsOf(TfidfStore.continueAt(spark, store, added, removed,
+      "doc_id", "text"))
+    info(s"jobs: $jobs")
+    // measured on this fixture (local[4]): 37 while the touched doc
+    // buckets, the removed ids present and the added ids each cost
+    // their own jobs; 28 once they ride the leaves' jobs
+    assert(jobs <= 28, s"one tfidf continuation ran $jobs jobs")
+    // N counts the token-less document: the weights equal a full
+    // recompute over the final corpus
+    val corpus = ((0L until 219L).filterNot(Set(3L, 77L, 150L)).map(doc) :+
+      ((219L, " "))).toDF("doc_id", "text")
+    def weights(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "token", "tfidf")
+      .as[(Long, String, Double)].collect().map(t => (t._1, t._2) -> t._3).toMap
+    val (got, want) = (weights(TfidfStore.tfidf(spark, store)),
+      weights(graft.operators.Pipeline.tfidf(corpus, "doc_id", "text")))
+    assert(got.keySet == want.keySet)
+    for ((k, w) <- want) assert(math.abs(got(k) - w) < 1e-12, s"$k")
   }
 
   test("line-dedup store: flips reclean untouched docs from pruned state") {

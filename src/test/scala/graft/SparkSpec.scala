@@ -40,6 +40,21 @@ abstract class SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** The number of Spark jobs `f` runs. */
+  def jobsOf(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; org.apache.spark.ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   /** The conf that turns the in-task path off. */
   val distributedLoop: (String, String) =
     "spark.sql.autoBroadcastJoinThreshold" -> "-1"
