@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.SegSwap
+import graft.operators.{SegStore, SegSwap}
 
 /** SEGMENTED durable form of the generic incremental core's
   * [[PreservedState]] — the [[graft.operators.DupSpansStore]] /
@@ -54,7 +54,7 @@ final class SegmentedStateStore private[core] (
   def bucketOf(c: Column): Column = {
     val pinned = if (keyType == org.apache.spark.sql.types.NullType) c
       else c.cast(keyType)
-    pmod(xxhash64(pinned), lit(nBuckets.toLong)).cast("int")
+    SegStore.hashBucket(nBuckets, pinned)
   }
 
   /** [[bucketOf]] for one key value inside a task (an external Scala
@@ -95,8 +95,7 @@ final class SegmentedStateStore private[core] (
 
   /** The store's current commit epoch (0 = as-inited; each installed
     * continuation/compaction advances it by one). */
-  def currentEpoch: Long =
-    SegSwap.currentEpoch(SegSwap.fsOf(spark, path), path)
+  def currentEpoch: Long = SegmentedStateStore.currentEpoch(spark, path)
 
   /** Time-travel view: the preserved state AS OF `epoch`, re-resolvable
     * for [[SegSwap.retentionOf]] epochs after it ([[SegSwap
@@ -160,36 +159,28 @@ final class SegmentedStateStore private[core] (
   }
 
   /** Publish the preserved state AS OF `epoch` to `dst` as a fresh
-    * standalone store (see [[SegSwap.exportSnapshot]]; the family
-    * contract) — checkpoint a converged engine state for another
-    * pipeline or a reproducibility archive while this store keeps
-    * taking continuations. The exported params' [[appliedBatch]] fence
-    * is the epoch's own (a stream maintainer resuming against the
-    * export replays exactly the batches after its cut). */
+    * standalone store ([[SegStore.exportAt]]) — checkpoint a converged
+    * engine state for another pipeline or a reproducibility archive
+    * while this store keeps taking continuations. The exported params'
+    * [[appliedBatch]] fence is the epoch's own (a stream maintainer
+    * resuming against the export replays exactly the batches after its
+    * cut). */
   def exportAt(epoch: Long, dst: String): Unit =
-    SegSwap.exportSnapshot(spark, path, epoch, dst,
-      Seq("kvs", "out"), dirTables = Seq("params"))
+    SegmentedStateStore.exportAt(spark, path, epoch, dst)
 
-  /** Roll the store back to `epoch` as a NEW journaled commit (a
-    * revert, not a reset — the rolled-away epochs stay resolvable, and
-    * the rollback can itself be rolled back, until GC): kvs, out, AND
-    * params (so a stream maintainer's [[appliedBatch]] fence reverts
-    * with the state it fenced — replayed deltas re-apply instead of
-    * being skipped against rolled-back ranks). Writer-leased; touched
-    * set = only the buckets later commits replaced or created. */
+  /** Roll kvs, out AND params back to `epoch` as a NEW journaled commit
+    * ([[SegStore.rollbackTo]]): a stream maintainer's [[appliedBatch]]
+    * fence reverts with the state it fenced, so replayed deltas
+    * re-apply instead of being skipped against rolled-back ranks. */
   def rollbackTo(epoch: Long): Unit =
-    SegSwap.rollbackTo(spark, path, epoch,
-      Seq("kvs" -> StructType.fromDDL(kvsDdl),
-        "out" -> StructType.fromDDL(outDdl)),
-      dirTables = Seq("params"))
+    SegmentedStateStore.rollbackTo(spark, path, epoch)
 
   /** The last stream batch id applied to this store (−1 = none) — the
     * idempotence fence for checkpoint-replayed micro-batches: a
     * foreachBatch maintainer skips a continuation whose batch id is
     * already recorded here (it rides the SAME journal as the swap, so
     * it can never claim a batch whose data didn't install). */
-  def appliedBatch: Long = SegSwap.readParamsRow(spark, path,
-    Seq("appliedBatch"), "segstate").getLong(0)
+  def appliedBatch: Long = SegmentedStateStore.lastBatch(spark, path)
 
   /** Install the continuation's result: replacement rows (must carry
     * `_b`) for exactly each table's `touched` buckets (the sets can
@@ -213,7 +204,17 @@ final class SegmentedStateStore private[core] (
   }
 }
 
-object SegmentedStateStore {
+object SegmentedStateStore extends SegStore("state", "segstate") {
+  import SegStore.{Params, Table}
+
+  override protected def fenceField: String = "appliedBatch"
+
+  /** kvs and out, bucketed by the key cast to its pinned dtype. */
+  protected def tables(p: Params): Seq[Table] = {
+    val k2Type = StructType.fromDDL(s"x ${p.str("k2Ddl")}").head.dataType
+    val bucket = SegStore.hashBucket(p.b, col(p.str("k2Col")).cast(k2Type))
+    Seq("kvs", "out").map(t => Table(t, p.ddl(t), bucket))
+  }
 
   private[core] def writeParams(spark: SparkSession, dst: String,
       k2Col: String, b: Int, k2Ddl: String, kvsDdl: String,
@@ -233,7 +234,7 @@ object SegmentedStateStore {
     // crash mid-init must read as incomplete (the store-family rule)
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
     val k2Ddl = state.out.schema(k2Col).dataType.sql
-    val bucket = pmod(xxhash64(col(k2Col)), lit(nBuckets.toLong)).cast("int")
+    val bucket = SegStore.hashBucket(nBuckets, col(k2Col))
     var ddl = Map.empty[String, String]
     val writes = Seq("kvs" -> state.kvs, "out" -> state.out).map {
       case (n, df0) =>
@@ -256,10 +257,9 @@ object SegmentedStateStore {
   }
 
   private def open(spark: SparkSession, path: String): SegmentedStateStore = {
-    val r = SegSwap.readParamsRow(spark, path,
-      Seq("k2Col", "b", "k2Ddl", "kvsDdl", "outDdl"), "segstate")
-    new SegmentedStateStore(spark, path, r.getString(0), r.getInt(1),
-      r.getString(2), r.getString(3), r.getString(4))
+    val p = params(spark, path)
+    new SegmentedStateStore(spark, path, p.str("k2Col"), p.b,
+      p.str("k2Ddl"), p.str("kvsDdl"), p.str("outDdl"))
   }
 
   /** Open for the single WRITER (an incremental continuation): takes
@@ -301,72 +301,19 @@ object SegmentedStateStore {
   def openForRead(spark: SparkSession, path: String): SegmentedStateStore =
     open(spark, path)
 
-  /** Journaled COMPACTION: rewrite every bucket of both tables in one
-    * crash-safe swap. NOTE on when this matters: continuations REPLACE
-    * every touched bucket dir with one fresh file (the swap's
-    * dir-rename semantics — per-bucket file counts never accrete,
-    * probe-verified), so this is a repair/maintenance op for state
-    * written OUTSIDE the swap path or for re-clustering, not a
-    * routine post-continuation step. Content-invariant by
-    * construction — same rows, same buckets; the [[SegSwap]] journal
-    * gives the same roll-forward/rollback contract as a continuation,
-    * so a crash mid-compact never loses state.
-    *
-    * The staging write STREAMS the lazy store views straight to
-    * `seg_staging/` (no whole-store materialization through the block
-    * manager — the lifecycle op is disk-bounded, not memory-bounded,
-    * matching the 100 TB provisioning narrative): safe because live
-    * files are retired only after the journal lands
-    * ([[SegSwap.commit]]'s residence contract). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val store = openForWrite(spark, path) // recover ran: live dirs are truth
-    val fs = SegSwap.fsOf(spark, path)
-    // the union of both tables' buckets: a bucket present in only one
-    // table still journals for the other (its "empty" line is a no-op)
-    val touched = SegSwap.liveBuckets(fs, path, "kvs") ++
-      SegSwap.liveBuckets(fs, path, "out")
-    if (touched.nonEmpty) store.commit(store.kvs, store.out, touched, touched)
-    else store.releaseLease()
-  }
-
-  /** Journaled RE-BUCKETING of the preserved state — the lifecycle op
-    * that keeps CONTINUATION cost delta-proportional as the key space
-    * grows: B is frozen at [[init]], so under a long-lived maintainer
-    * each touched-bucket rewrite slowly widens with the corpus. One
-    * crash-safe swap re-hashes kvs AND out into `nBuckets` and
-    * installs the new params — including the preserved `appliedBatch`
-    * stream fence — atomically with the data (a crash can never leave
-    * readers deriving buckets with the wrong B, and a replayed
-    * micro-batch still skips after the migration). Run between
+  /** Journaled RE-BUCKETING of the preserved state ([[SegStore
+    * .relayout]]) — the lifecycle op that keeps CONTINUATION cost
+    * delta-proportional as the key space grows: B is frozen at
+    * [[init]], so under a long-lived maintainer each touched-bucket
+    * rewrite slowly widens with the corpus. The preserved
+    * `appliedBatch` stream fence installs with the data, so a replayed
+    * micro-batch still skips after the migration. Run between
     * continuations; the writer lease serializes it against them. Wire
     * it to [[graft.operators.StorePolicy.autoRebuildIfRecommended]] as
     * the rebuild recipe and systematic footprint overshoot heals
-    * itself. Streams the live views straight to staging — disk-
-    * bounded, like [[compact]]. */
+    * itself. ([[compact]] is the same op under the store's own B — a
+    * repair for state written outside the swap path: continuations
+    * already replace every touched bucket dir with one fresh file.) */
   def rebucket(spark: SparkSession, path: String, nBuckets: Int): Unit =
-    SegSwap.withWriterLease(spark, path) { lease =>
-      val fs = SegSwap.fsOf(spark, path)
-      SegSwap.recover(spark, path) // writer entry: live dirs are truth
-      val r = SegSwap.readParamsRow(spark, path,
-        Seq("k2Col", "k2Ddl", "kvsDdl", "outDdl", "appliedBatch"),
-        "segstate")
-      val (k2Col, k2Ddl, kvsDdl, outDdl, applied) = (r.getString(0),
-        r.getString(1), r.getString(2), r.getString(3), r.getLong(4))
-      // keys are pinned to k2Ddl since init — the cast is a no-op
-      // guard, kept so the new layout can never disagree with bucketOf
-      val k2Type = StructType.fromDDL(s"x $k2Ddl").head.dataType
-      val bucket =
-        pmod(xxhash64(col(k2Col).cast(k2Type)), lit(nBuckets.toLong))
-          .cast("int")
-      val staged = Seq("kvs" -> kvsDdl, "out" -> outDdl).map {
-        case (n, ddl) =>
-          (n, SegSwap.resolvedTable(spark, path, n, StructType.fromDDL(ddl))
-            .withColumn("_b", bucket), SegSwap.liveBuckets(fs, path, n))
-      }
-      SegSwap.commit(spark, path, staged,
-        dirSwaps = Seq("params" -> ((dst: String) =>
-          writeParams(spark, dst, k2Col, nBuckets, k2Ddl, kvsDdl, outDdl,
-            appliedBatch = applied))),
-        fence = Some(lease), augmentFromStaging = true)
-    }
+    relayout(spark, path, Seq("b" -> nBuckets))
 }

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.functions.TextFunctions.tokens
 
@@ -35,63 +34,12 @@ import graft.functions.TextFunctions.tokens
   * Upsert contract on BOTH sides ([[IncrementalDecontam]]'s). Single
   * fenced writer; the family crash contract.
   */
-object DecontamStore {
+object DecontamStore extends SegStore("decontam", "decontamstore") {
+  import SegStore.{Params, Table, hashBucket, inBuckets}
 
-  private def docBucket(c: Column, b: Int): Column =
-    pmod(xxhash64(c), lit(b.toLong)).cast("int")
-
-  private case class Params(w: Int, b: Int, idDdl: String,
-      evalIdDdl: String, ddl: Map[String, String])
-
-  private def writeParamsTo(spark: SparkSession, dst: String,
-      p: Params): Unit =
-    SegSwap.writeParamsTo(spark, dst, Seq(
-      "w" -> p.w, "b" -> p.b, "idDdl" -> p.idDdl,
-      "evalIdDdl" -> p.evalIdDdl,
-      "shinglesDdl" -> p.ddl("shingles"), "evalshDdl" -> p.ddl("evalsh")))
-
-  private def readParams(spark: SparkSession, path: String): Params = {
-    val r = SegSwap.readParamsRow(spark, path,
-      Seq("w", "b", "idDdl", "evalIdDdl", "shinglesDdl", "evalshDdl"),
-      "decontamstore")
-    Params(r.getInt(0), r.getInt(1), r.getString(2), r.getString(3),
-      Map("shingles" -> r.getString(4), "evalsh" -> r.getString(5)))
-  }
-
-  private def readTable(spark: SparkSession, path: String, p: Params,
-      name: String): DataFrame =
-    SegSwap.resolvedTable(spark, path, name,
-      StructType.fromDDL(p.ddl(name)))
-
-  /** The store's current commit epoch (0 = as-inited). */
-  def currentEpoch(spark: SparkSession, path: String): Long =
-    SegSwap.currentEpoch(SegSwap.fsOf(spark, path), path)
-
-  /** Roll every table of the store (and params) back to `epoch` as one
-    * journaled revert — [[SegSwap.rollbackTo]] with this store's table
-    * set (see [[DupSpansStore.rollbackTo]], the family exemplar, for
-    * the contract: history-preserving, redo-able, delta-proportional,
-    * loud past the retention horizon). */
-  def rollbackTo(spark: SparkSession, path: String, epoch: Long): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.rollbackTo(spark, path, epoch,
-      p.ddl.toSeq.map { case (n, d) => n -> StructType.fromDDL(d) },
-      dirTables = Seq("params"))
-  }
-
-  /** Publish the store AS OF `epoch` to `dst` as a fresh standalone
-    * store (see [[SegSwap.exportSnapshot]]; family contract on
-    * [[TfidfStore.exportAt]]). */
-  def exportAt(spark: SparkSession, path: String, epoch: Long,
-      dst: String): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.exportSnapshot(spark, path, epoch, dst,
-      p.ddl.keys.toSeq, dirTables = Seq("params"))
-  }
-
-  private def inBuckets(bs: Set[Int]): Column =
-    if (bs.isEmpty) lit(false)
-    else col("_b").isin(bs.toSeq.map(Integer.valueOf): _*)
+  protected def tables(p: Params): Seq[Table] = Seq(
+    Table("shingles", p.ddl("shingles"), hashBucket(p.b, col("id"))),
+    Table("evalsh", p.ddl("evalsh"), hashBucket(p.b, col("eid"))))
 
   /** ONE shingle derivation with the in-memory twin
     * ([[IncrementalDecontam]]) and the batch operator — w-shingles of
@@ -111,17 +59,18 @@ object DecontamStore {
     graft.functions.GraftFunctions.register(spark)
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
     val sh = shingled(corpus, idCol, textCol, w, "id")
-      .withColumn("_b", docBucket(col("id"), nBuckets))
+      .withColumn("_b", hashBucket(nBuckets, col("id")))
     val ev = shingled(evalSet, evalIdCol, evalTextCol, w, "eid")
-      .withColumn("_b", docBucket(col("eid"), nBuckets))
+      .withColumn("_b", hashBucket(nBuckets, col("eid")))
     var ddl = Map.empty[String, String]
     Seq("shingles" -> sh, "evalsh" -> ev).foreach { case (n, df) =>
       ddl += n -> df.schema.toDDL
       SegSwap.writeBuckets(df, s"$path/$n")
     }
-    writeParamsTo(spark, s"$path/params", Params(w, nBuckets,
-      corpus.schema(idCol).dataType.sql,
-      evalSet.schema(evalIdCol).dataType.sql, ddl))
+    SegSwap.writeParamsTo(spark, s"$path/params", Seq(
+      "w" -> w, "b" -> nBuckets, "idDdl" -> corpus.schema(idCol).dataType.sql,
+      "evalIdDdl" -> evalSet.schema(evalIdCol).dataType.sql,
+      "shinglesDdl" -> ddl("shingles"), "evalshDdl" -> ddl("evalsh")))
   }
 
   /** Corpus ids sharing at least one w-shingle with any eval item —
@@ -129,7 +78,7 @@ object DecontamStore {
     * (eval-sized, broadcastable) eval shingle set. Journal-resolved,
     * never mutating; consume before the next writer commit. */
   def contaminatedIds(spark: SparkSession, path: String): DataFrame = {
-    val p = readParams(spark, path)
+    val p = params(spark, path)
     // same plan as the in-memory twin ([[IncrementalDecontam
     // .contaminatedIds]]): the planner broadcasts the eval side when
     // its size estimate allows (eval sets are benchmark-sized by the
@@ -161,7 +110,7 @@ object DecontamStore {
    val advice = SegSwap.withWriterLease(spark, path) { lease =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.recover(spark, path)
-    val p = readParams(spark, path)
+    val p = params(spark, path)
     val B = p.b
     val intern = new IncrMat.Tracker
 
@@ -178,7 +127,7 @@ object DecontamStore {
       // the touched-bucket set (td) rides the rem leaf's own job
       val (remRaw, remSets) = intern.matStats(removedP
         .unionByName(addedP.select(col(addedIdCol).as("_rid"))).distinct()
-        .withColumn("_tdb", docBucket(col("_rid"), B)), Seq("_tdb"))
+        .withColumn("_tdb", hashBucket(B, col("_rid"))), Seq("_tdb"))
       val rem = remRaw.drop("_tdb")
       val td = remSets.head
       if (td.isEmpty) None else {
@@ -186,16 +135,16 @@ object DecontamStore {
         val nextT = intern.mat(live.filter(inBuckets(td))
           .join(rem, col(keyCol) === col("_rid"), "left_anti")
           .unionByName(
-            shingled(addedP, addedIdCol, addedTextCol, p.w, keyCol)
-              .withColumn("_b", docBucket(col(keyCol), B))))
+            shingled(addedP, addedIdCol, addedTextCol, p.int("w"), keyCol)
+              .withColumn("_b", hashBucket(B, col(keyCol)))))
         Some((table, nextT, td))
       }
     }
     val touched =
       roll("shingles", "id", addedDocs, idCol, textCol, removedDocIds,
-        "corpus", p.idDdl).toSeq ++
+        "corpus", p.str("idDdl")).toSeq ++
       roll("evalsh", "eid", addedEval, evalIdCol, evalTextCol,
-        removedEvalIds, "eval", p.evalIdDdl).toSeq
+        removedEvalIds, "eval", p.str("evalIdDdl")).toSeq
     val liveB = math.max(1,
       SegSwap.liveBuckets(SegSwap.fsOf(spark, path), path, "shingles").size)
     if (touched.nonEmpty)
@@ -207,26 +156,7 @@ object DecontamStore {
    advice
   }
 
-  /** Journaled RE-BUCKETING / COMPACTION — lazy staged frames streamed
-    * to seg_staging, destination buckets from the staged dirs, params
-    * through the journal's whole-dir entry. */
+  /** Journaled RE-BUCKETING ([[SegStore.relayout]]). */
   def rebucket(spark: SparkSession, path: String, nBuckets: Int): Unit =
-    SegSwap.withWriterLease(spark, path) { lease =>
-      val fs = SegSwap.fsOf(spark, path)
-      SegSwap.recover(spark, path)
-      val p = readParams(spark, path)
-      val p2 = p.copy(b = nBuckets)
-      val staged = Seq(("shingles", "id"), ("evalsh", "eid")).map {
-        case (t, k) =>
-          (t, readTable(spark, path, p, t)
-            .withColumn("_b", docBucket(col(k), nBuckets)),
-            SegSwap.liveBuckets(fs, path, t))
-      }
-      SegSwap.commit(spark, path, staged, dirSwaps = Seq(
-        "params" -> ((dst: String) => writeParamsTo(spark, dst, p2))),
-        fence = Some(lease), augmentFromStaging = true)
-    }
-
-  def compact(spark: SparkSession, path: String): Unit =
-    rebucket(spark, path, readParams(spark, path).b)
+    relayout(spark, path, Seq("b" -> nBuckets))
 }

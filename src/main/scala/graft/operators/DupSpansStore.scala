@@ -51,7 +51,8 @@ import org.apache.spark.sql.types.StructType
   * `q_incr_dup_spans_seg` + spec), with the shared span-digest
   * derivation so incr ≡ batch cannot drift.
   */
-object DupSpansStore {
+object DupSpansStore extends SegStore("dupspans", "dupspans") {
+  import SegStore.{Params, Table, hashBucket, inBuckets}
 
   /** Doc-side bucketing is PLUGGABLE because it decides which deltas
     * are cheap: `hash` scatters uniformly (bounded buckets, but a
@@ -62,81 +63,26 @@ object DupSpansStore {
     * That is the ingest-partitioned layout every date/shard-partitioned
     * lakehouse table uses, expressed on the bucket axis. */
   private def docBucket(c: Column, p: Params): Column =
-    if (p.mode == "range")
+    if (p.str("mode") == "range")
       // exact for |id| < 2^53 (the double-division horizon); ingest
       // ids beyond that should range-bucket on a narrower key
-      floor(c.cast("bigint") / lit(p.span)).cast("int")
-    else pmod(xxhash64(c), lit(p.b.toLong)).cast("int")
+      floor(c.cast("bigint") / lit(p.long("span"))).cast("int")
+    else hashBucket(p.b, c)
   private def spanBucket(c: Column, b: Int): Column =
     pmod(c, lit(b.toLong)).cast("int")
 
-  /** Stored alongside the data: window/threshold parameters, bucket
-    * count, the id column's pinned DDL (bucket hashes are dtype-
-    * sensitive — see [[SegSwap.castToPinned]]), and each table's exact
+  /** The doc-bucketed tables (`text`/`cut` only on `withCut` stores),
+    * then the span-bucketed `dfreq`. Params also carry the window and
+    * threshold, the id column's pinned DDL (bucket hashes are dtype-
+    * sensitive — see [[SegSwap.castToPinned]]) and each table's exact
     * DDL (explicit-schema reads keep a fully-drained table readable
     * and the partition column's type pinned — the
     * [[Similarity.probeIvfIndex]] lesson). */
-  private case class Params(w: Int, maxFrac: Double, b: Int,
-      mode: String, span: Long, idDdl: String, withCut: Boolean,
-      ddl: Map[String, String], lastBatch: Long = -1L) {
-    /** Doc-bucketed tables present in this store (dfreq is span-
-      * bucketed and handled separately). */
-    def docTables: Seq[String] =
-      Seq("spans", "ntoks", "out") ++
-        (if (withCut) Seq("text", "cut") else Nil)
-  }
-
-  // params plumbing via the family-shared codec ([[SegSwap.writeParamsTo]]
-  // / [[SegSwap.readParamsRow]]: journal-aware, NAME-based, loud on an
-  // older layout)
-  private def writeParamsTo(spark: SparkSession, dst: String,
-      p: Params): Unit =
-    SegSwap.writeParamsTo(spark, dst, Seq(
-      "w" -> p.w, "maxFrac" -> p.maxFrac, "b" -> p.b, "mode" -> p.mode,
-      "span" -> p.span, "idDdl" -> p.idDdl, "withCut" -> p.withCut,
-      "spansDdl" -> p.ddl("spans"), "ntoksDdl" -> p.ddl("ntoks"),
-      "dfreqDdl" -> p.ddl("dfreq"), "outDdl" -> p.ddl("out"),
-      "textDdl" -> p.ddl.getOrElse("text", ""),
-      "cutDdl" -> p.ddl.getOrElse("cut", ""),
-      "lastBatch" -> p.lastBatch))
-
-  private def writeParams(spark: SparkSession, path: String, p: Params): Unit =
-    writeParamsTo(spark, s"$path/params", p)
-
-  private val ParamFields =
-    Seq("w", "maxFrac", "b", "mode", "span", "idDdl", "withCut",
-      "spansDdl", "ntoksDdl", "dfreqDdl", "outDdl", "textDdl", "cutDdl",
-      "lastBatch")
-
-  private def paramsOf(r: org.apache.spark.sql.Row): Params = {
-    val cut = r.getBoolean(6)
-    Params(r.getInt(0), r.getDouble(1), r.getInt(2), r.getString(3),
-      r.getLong(4), r.getString(5), cut, Map(
-        "spans" -> r.getString(7), "ntoks" -> r.getString(8),
-        "dfreq" -> r.getString(9), "out" -> r.getString(10)) ++
-        (if (cut) Map("text" -> r.getString(11), "cut" -> r.getString(12))
-         else Map.empty), r.getLong(13))
-  }
-
-  private def readParams(spark: SparkSession, path: String): Params =
-    paramsOf(SegSwap.readParamsRow(spark, path, ParamFields, "dupspans"))
-
-  private def readParamsAt(spark: SparkSession, path: String,
-      epoch: Long): Params =
-    paramsOf(SegSwap.readParamsRowAt(spark, path, ParamFields,
-      "dupspans", epoch))
-
-  /** Journal-aware read ([[SegSwap.resolvedTable]]): non-destructive
-    * under an uninstalled commit, a plain live read otherwise. */
-  private def readTable(spark: SparkSession, path: String, p: Params,
-      name: String): DataFrame =
-    SegSwap.resolvedTable(spark, path, name,
-      StructType.fromDDL(p.ddl(name)))
-
-  /** Literal bucket predicate — stays a partition-pruning filter. */
-  private def inBuckets(bs: Set[Int]): Column =
-    if (bs.isEmpty) lit(false)
-    else col("_b").isin(bs.toSeq.map(Integer.valueOf): _*)
+  protected def tables(p: Params): Seq[Table] =
+    (Seq("spans", "ntoks", "out") ++
+      (if (p.bool("withCut")) Seq("text", "cut") else Nil))
+      .map(t => Table(t, p.ddl(t), docBucket(col("doc_id"), p))) :+
+      Table("dfreq", p.ddl("dfreq"), spanBucket(col("s"), p.b))
 
   /** Batch pass: derive spans / token counts / span frequencies /
     * scores once ([[Pipeline.dupSpanStats]] semantics) and lay them
@@ -162,8 +108,9 @@ object DupSpansStore {
     // existing path: a crash mid-init must read as incomplete, never as
     // old params over half-overwritten tables
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
-    val p0 = Params(w, maxFrac, nBuckets, bucketMode, rangeSpan,
-      docs.schema(idCol).dataType.sql, withCut, Map.empty)
+    val p0 = newParams(path, Seq("w" -> w, "maxFrac" -> maxFrac,
+      "b" -> nBuckets, "mode" -> bucketMode, "span" -> rangeSpan,
+      "idDdl" -> docs.schema(idCol).dataType.sql, "withCut" -> withCut))
     val intern = new IncrMat.Tracker
     val spans = intern.mat(
       IncrementalDupSpans.spansOf(docs, idCol, textCol, w)
@@ -201,15 +148,17 @@ object DupSpansStore {
       SegSwap.stageBuckets(df, s"$path/$n")
     })
     // params last: their presence marks a complete init
-    writeParams(spark, path, p0.copy(
-      ddl = tables.map { case (n, df) => n -> df.schema.toDDL }.toMap))
+    val ddl = tables.map { case (n, df) => n -> df.schema.toDDL }.toMap
+    SegSwap.writeParamsTo(spark, s"$path/params", p0.fields ++
+      Seq("spans", "ntoks", "dfreq", "out", "text", "cut").map(n =>
+        s"${n}Ddl" -> ddl.getOrElse(n, "")) :+ ("lastBatch" -> -1L))
     intern.releaseAll()
   }
 
   /** The post-delta scores (`doc_id, n_tokens, n_covered, dup_frac,
     * keep` — [[Pipeline.dupSpanStats]]'s contract). */
   def scores(spark: SparkSession, path: String): DataFrame = {
-    val p = readParams(spark, path)
+    val p = params(spark, path)
     // readers never mutate: an uninstalled commit is resolved through
     // the journal by readTable ([[SegSwap.resolvedTable]])
     readTable(spark, path, p, "out").drop("_b")
@@ -222,10 +171,10 @@ object DupSpansStore {
     * bucket's files (spec-asserted via the scanned file set). */
   def scoresFor(spark: SparkSession, path: String,
       ids: DataFrame): DataFrame = {
-    val p = readParams(spark, path)
+    val p = params(spark, path)
     val idsD = SegSwap.castToPinned(
       ids.select(col(ids.columns.head).as("doc_id")),
-      "doc_id", p.idDdl, "scoresFor")
+      "doc_id", p.str("idDdl"), "scoresFor")
     val bs = idsD.select(docBucket(col("doc_id"), p).as("_b"))
       .distinct().collect().map(_.getInt(0)).toSet
     readTable(spark, path, p, "out").filter(inBuckets(bs))
@@ -240,44 +189,16 @@ object DupSpansStore {
     // params AS OF the same epoch (not live) — the family's end-to-end
     // as-of contract: data and the metadata that decodes it resolve
     // from the same commit (symmetry with cutsAt / TfidfStore.tfidfAt)
-    val p = readParamsAt(spark, path, epoch)
-    SegSwap.snapshotTable(spark, path, "out",
-      StructType.fromDDL(p.ddl("out")), epoch).drop("_b")
-  }
-
-  /** The store's current commit epoch (0 = as-inited). */
-  def currentEpoch(spark: SparkSession, path: String): Long =
-    SegSwap.currentEpoch(SegSwap.fsOf(spark, path), path)
-
-  /** Roll EVERY table of the store (all doc-bucketed tables, the
-    * span-bucketed dfreq, and params) back to `epoch` as one journaled
-    * revert — [[SegSwap.rollbackTo]] with this store's table set. The
-    * bad-delta escape hatch: a continuation that ingested a poisoned
-    * shard is undone in one delta-proportional commit, history stays
-    * resolvable, and the store then continues normally. */
-  def rollbackTo(spark: SparkSession, path: String, epoch: Long): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.rollbackTo(spark, path, epoch,
-      (p.docTables :+ "dfreq").map(n => n -> StructType.fromDDL(p.ddl(n))),
-      dirTables = Seq("params"))
-  }
-
-  /** Publish the store AS OF `epoch` to `dst` as a fresh standalone
-    * store (see [[SegSwap.exportSnapshot]]; family contract on
-    * [[TfidfStore.exportAt]]). */
-  def exportAt(spark: SparkSession, path: String, epoch: Long,
-      dst: String): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.exportSnapshot(spark, path, epoch, dst,
-      p.docTables :+ "dfreq", dirTables = Seq("params"))
+    val p = paramsAt(spark, path, epoch)
+    readTableAt(spark, path, p, "out", epoch).drop("_b")
   }
 
   /** The post-delta ExactSubstr CUT output (`doc_id, clean, n_kept,
     * n_removed` — [[Pipeline.cutDupSpans]]'s contract). Only on stores
     * initialized `withCut = true`. */
   def cuts(spark: SparkSession, path: String): DataFrame = {
-    val p = readParams(spark, path)
-    require(p.withCut,
+    val p = params(spark, path)
+    require(p.bool("withCut"),
       s"dupspans: store at $path was initialized without cut maintenance")
     readTable(spark, path, p, "cut").drop("_b")
   }
@@ -288,11 +209,10 @@ object DupSpansStore {
     * rolling the store back. Only on stores initialized
     * `withCut = true` at that epoch. */
   def cutsAt(spark: SparkSession, path: String, epoch: Long): DataFrame = {
-    val p = readParamsAt(spark, path, epoch)
-    require(p.withCut,
+    val p = paramsAt(spark, path, epoch)
+    require(p.bool("withCut"),
       s"dupspans: store at $path had no cut maintenance at epoch $epoch")
-    SegSwap.snapshotTable(spark, path, "cut",
-      StructType.fromDDL(p.ddl("cut")), epoch).drop("_b")
+    readTableAt(spark, path, p, "cut", epoch).drop("_b")
   }
 
   /** Roll the store forward over a ±document delta (upsert contract:
@@ -320,10 +240,6 @@ object DupSpansStore {
     continueImpl(spark, path, addedDocs0, removedIds0, idCol, textCol,
       autoRespanFactor, batchId = None).get
 
-  /** The stream batch fence (−1 = never maintained by a stream). */
-  def lastBatch(spark: SparkSession, path: String): Long =
-    readParams(spark, path).lastBatch
-
   /** [[continueAt]] fenced by a stream micro-batch id. The fence is a
     * COST optimization here, not a correctness requirement — this
     * continuation is replay-idempotent by the upsert contract (the
@@ -346,8 +262,8 @@ object DupSpansStore {
    val advice = SegSwap.withWriterLease(spark, path) { lease =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.recover(spark, path)
-    val p = readParams(spark, path)
-    if (batchId.exists(_ <= p.lastBatch)) None
+    val p = params(spark, path)
+    if (batchId.exists(_ <= p.long("lastBatch"))) None
     else {
     val B = p.b
     val intern = new IncrMat.Tracker
@@ -355,10 +271,10 @@ object DupSpansStore {
     // the delta's id dtype is pinned to the init corpus's before any
     // bucket hash ([[SegSwap.castToPinned]] — int vs long ids would
     // otherwise bucket differently and strand stale rows)
-    val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.idDdl,
+    val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.str("idDdl"),
       "continueAt addedDocs")
     val removedIds = SegSwap.castToPinned(removedIds0,
-      removedIds0.columns.head, p.idDdl, "continueAt removedIds")
+      removedIds0.columns.head, p.str("idDdl"), "continueAt removedIds")
 
     // replace semantics: an incoming id evicts its existing rows; the
     // touched-bucket set (td) rides the same materialization job
@@ -368,7 +284,7 @@ object DupSpansStore {
       .withColumn("_tdb", docBucket(col("_rid"), p)), Seq("_tdb"))
     val rem = remRaw.drop("_tdb")
     val addSpans = intern.mat(
-      IncrementalDupSpans.spansOf(addedDocs, idCol, textCol, p.w)
+      IncrementalDupSpans.spansOf(addedDocs, idCol, textCol, p.int("w"))
         .withColumn("_b", docBucket(col("doc_id"), p)))
     val addNtoks = intern.mat(
       IncrementalDupSpans.ntoksOf(addedDocs, idCol, textCol)
@@ -468,7 +384,7 @@ object DupSpansStore {
         .join(affected, Seq("doc_id"), "left_semi").drop("_b"),
       ntoksPost.filter(inBuckets(ab))
         .join(affected, Seq("doc_id"), "left_semi").drop("_b"),
-      dupPost, p.w, p.maxFrac)
+      dupPost, p.int("w"), p.double("maxFrac"))
     // out rewrites the buckets holding affected ∪ removed docs
     val ao = ab ++ td
     val evict = affected
@@ -484,7 +400,7 @@ object DupSpansStore {
     // set (the [[IncrementalDupSpans.cutFor]] core shared with the
     // batch operator): their text comes from the store's text table —
     // a pruned read of the affected buckets — merged with the delta's
-    val cutTables = if (!p.withCut) Nil else {
+    val cutTables = if (!p.bool("withCut")) Nil else {
       val textLive = readTable(spark, path, p, "text")
       val addText = addedDocs.select(col(idCol).as("doc_id"),
           col(textCol).as("text"))
@@ -498,7 +414,7 @@ object DupSpansStore {
           .join(affected, Seq("doc_id"), "left_semi").drop("_b"),
         spansPost.filter(inBuckets(ab))
           .join(affected, Seq("doc_id"), "left_semi").drop("_b"),
-        dupPost, p.w)
+        dupPost, p.int("w"))
       val cutNextT = intern.mat(readTable(spark, path, p, "cut")
         .filter(inBuckets(ao))
         .join(evict, Seq("doc_id"), "left_anti")
@@ -516,20 +432,20 @@ object DupSpansStore {
       ("spans", spansNextT, td), ("ntoks", ntoksNextT, td),
       ("dfreq", dfreqNextT, ts), ("out", outNextT, ao)) ++ cutTables,
       dirSwaps = batchId.toSeq.map(b => "params" -> ((dst: String) =>
-        writeParamsTo(spark, dst, p.copy(lastBatch = b)))),
+        writeParams(spark, dst, p.updated("lastBatch" -> b)))),
       fence = Some(lease))
     intern.releaseAll()
     Some(StorePolicy.advise("dupspans", (td ++ ao).size, liveDocBuckets))
     }
    }
    if (advice.isDefined) locally {
-     val p = readParams(spark, path)
-     if (p.mode == "range")
+     val p = params(spark, path)
+     if (p.str("mode") == "range")
        StorePolicy.autoRespanIfSprawled(spark, path, "out", p.b,
          autoRespanFactor) { live =>
          // scale the span so the live dirs collapse back to ~b
          rebucket(spark, path, p.b, "range",
-           p.span * ((live + p.b - 1) / p.b))
+           p.long("span") * ((live + p.b - 1) / p.b))
        }
    }
    advice
@@ -552,39 +468,10 @@ object DupSpansStore {
       s"dupspans: unknown bucketMode '$bucketMode'")
     require(bucketMode == "hash" || rangeSpan > 0,
       "dupspans: range bucketing needs a positive rangeSpan")
-    SegSwap.withWriterLease(spark, path) { lease =>
-      val fs = SegSwap.fsOf(spark, path)
-      SegSwap.recover(spark, path) // writer entry: live dirs are truth
-      val p = readParams(spark, path)
-      require(bucketMode == "hash" ||
-        StructType.fromDDL(s"x ${p.idDdl}").head.dataType
+    relayout(spark, path, Seq("b" -> nBuckets, "mode" -> bucketMode,
+      "span" -> rangeSpan), p => require(bucketMode == "hash" ||
+        StructType.fromDDL(s"x ${p.str("idDdl")}").head.dataType
           .isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"dupspans: range bucketing needs a numeric id, store has ${p.idDdl}")
-      val p2 = p.copy(b = nBuckets, mode = bucketMode, span = rangeSpan)
-      // LAZY staged frames: the rewrite STREAMS each live table through
-      // one shuffle into seg_staging (safe — live files retire only
-      // after the journal lands), instead of materializing the whole
-      // store through the block manager; destination buckets are
-      // discovered from the staged dirs (augmentFromStaging), so the
-      // old separate enumeration scan is gone too. Touched base set =
-      // every OLD live bucket (rows may leave it).
-      val staged = (p.docTables.map(t => (t, docBucket(col("doc_id"), p2))) :+
-          (("dfreq", spanBucket(col("s"), nBuckets)))).map { case (t, newB) =>
-        (t, readTable(spark, path, p, t).withColumn("_b", newB),
-          SegSwap.liveBuckets(fs, path, t))
-      }
-      SegSwap.commit(spark, path, staged, dirSwaps = Seq(
-        "params" -> ((dst: String) => writeParamsTo(spark, dst, p2))),
-        fence = Some(lease), augmentFromStaging = true)
-    }
-  }
-
-  /** Journaled COMPACTION: rewrite every bucket under the CURRENT
-    * layout — merges each bucket's content back to one contiguous file
-    * per bucket; content-invariant ([[rebucket]] with the store's own
-    * params). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val p = readParams(spark, path)
-    rebucket(spark, path, p.b, p.mode, p.span)
+        s"dupspans: range bucketing needs a numeric id, store has ${p.str("idDdl")}"))
   }
 }

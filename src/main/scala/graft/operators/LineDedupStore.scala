@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** SEGMENTED durable form of [[LineDedupState]] — boilerplate line
   * dedup on the family's journaled touched-bucket layout ([[SegSwap]]),
@@ -35,66 +34,13 @@ import org.apache.spark.sql.types.StructType
   * `q_incr_line_dedup`, plus the store-vs-in-memory twin spec).
   * Single fenced writer; the family crash contract.
   */
-object LineDedupStore {
+object LineDedupStore extends SegStore("linededup", "linededup") {
+  import SegStore.{Params, Table, hashBucket, inBuckets}
 
-  private def docBucket(c: Column, b: Int): Column =
-    pmod(xxhash64(c), lit(b.toLong)).cast("int")
-  private def lineBucket(c: Column, b: Int): Column =
-    pmod(xxhash64(c), lit(b.toLong)).cast("int")
-
-  private case class Params(maxDocs: Long, sep: String, b: Int,
-      idDdl: String, ddl: Map[String, String])
-
-  private def writeParamsTo(spark: SparkSession, dst: String,
-      p: Params): Unit =
-    SegSwap.writeParamsTo(spark, dst, Seq(
-      "maxDocs" -> p.maxDocs, "sep" -> p.sep, "b" -> p.b,
-      "idDdl" -> p.idDdl, "linesDdl" -> p.ddl("lines"),
-      "dfreqDdl" -> p.ddl("dfreq"), "outDdl" -> p.ddl("out")))
-
-  private def readParams(spark: SparkSession, path: String): Params = {
-    val r = SegSwap.readParamsRow(spark, path,
-      Seq("maxDocs", "sep", "b", "idDdl", "linesDdl", "dfreqDdl",
-        "outDdl"), "linededup")
-    Params(r.getLong(0), r.getString(1), r.getInt(2), r.getString(3),
-      Map("lines" -> r.getString(4), "dfreq" -> r.getString(5),
-        "out" -> r.getString(6)))
-  }
-
-  private def readTable(spark: SparkSession, path: String, p: Params,
-      name: String): DataFrame =
-    SegSwap.resolvedTable(spark, path, name,
-      StructType.fromDDL(p.ddl(name)))
-
-  /** The store's current commit epoch (0 = as-inited). */
-  def currentEpoch(spark: SparkSession, path: String): Long =
-    SegSwap.currentEpoch(SegSwap.fsOf(spark, path), path)
-
-  /** Roll every table of the store (and params) back to `epoch` as one
-    * journaled revert — [[SegSwap.rollbackTo]] with this store's table
-    * set (see [[DupSpansStore.rollbackTo]], the family exemplar, for
-    * the contract: history-preserving, redo-able, delta-proportional,
-    * loud past the retention horizon). */
-  def rollbackTo(spark: SparkSession, path: String, epoch: Long): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.rollbackTo(spark, path, epoch,
-      p.ddl.toSeq.map { case (n, d) => n -> StructType.fromDDL(d) },
-      dirTables = Seq("params"))
-  }
-
-  /** Publish the store AS OF `epoch` to `dst` as a fresh standalone
-    * store (see [[SegSwap.exportSnapshot]]; family contract on
-    * [[TfidfStore.exportAt]]). */
-  def exportAt(spark: SparkSession, path: String, epoch: Long,
-      dst: String): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.exportSnapshot(spark, path, epoch, dst,
-      p.ddl.keys.toSeq, dirTables = Seq("params"))
-  }
-
-  private def inBuckets(bs: Set[Int]): Column =
-    if (bs.isEmpty) lit(false)
-    else col("_b").isin(bs.toSeq.map(Integer.valueOf): _*)
+  protected def tables(p: Params): Seq[Table] = Seq(
+    Table("lines", p.ddl("lines"), hashBucket(p.b, col("doc_id"))),
+    Table("dfreq", p.ddl("dfreq"), hashBucket(p.b, col("line"))),
+    Table("out", p.ddl("out"), hashBucket(p.b, col("doc_id"))))
 
   /** Explode + count + clean once ([[Pipeline.dedupLines]] semantics
     * via the shared cores), lay all three tables out bucket-
@@ -107,21 +53,24 @@ object LineDedupStore {
     val intern = new IncrMat.Tracker
     val lines = intern.mat(
       IncrementalLineDedup.linesOf(docs, idCol, textCol, sep)
-        .withColumn("_b", docBucket(col("doc_id"), nBuckets)))
+        .withColumn("_b", hashBucket(nBuckets, col("doc_id"))))
     val dfreq = intern.mat(lines.select("doc_id", "line").distinct()
       .groupBy("line").agg(count(lit(1)).as("nd"))
-      .withColumn("_b", lineBucket(col("line"), nBuckets)))
+      .withColumn("_b", hashBucket(nBuckets, col("line"))))
     val out = IncrementalLineDedup.cleanFor(lines.drop("_b"),
         dfreq.drop("_b"), maxDocs, sep)
-      .withColumn("_b", docBucket(col("doc_id"), nBuckets))
+      .withColumn("_b", hashBucket(nBuckets, col("doc_id")))
     var ddl = Map.empty[String, String]
     Seq("lines" -> lines, "dfreq" -> dfreq, "out" -> out).foreach {
       case (n, df) =>
         ddl += n -> df.schema.toDDL
         SegSwap.writeBuckets(df, s"$path/$n")
     }
-    writeParamsTo(spark, s"$path/params", Params(maxDocs, sep, nBuckets,
-      docs.schema(idCol).dataType.sql, ddl))
+    SegSwap.writeParamsTo(spark, s"$path/params", Seq(
+      "maxDocs" -> maxDocs, "sep" -> sep, "b" -> nBuckets,
+      "idDdl" -> docs.schema(idCol).dataType.sql,
+      "linesDdl" -> ddl("lines"), "dfreqDdl" -> ddl("dfreq"),
+      "outDdl" -> ddl("out")))
     intern.releaseAll()
   }
 
@@ -129,7 +78,7 @@ object LineDedupStore {
     * — [[Pipeline.dedupLines]]'s contract). Journal-resolved, never
     * mutating; consume before the next writer commit. */
   def cleaned(spark: SparkSession, path: String): DataFrame = {
-    val p = readParams(spark, path)
+    val p = params(spark, path)
     readTable(spark, path, p, "out").drop("_b")
   }
 
@@ -143,23 +92,23 @@ object LineDedupStore {
    val advice = SegSwap.withWriterLease(spark, path) { lease =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.recover(spark, path)
-    val p = readParams(spark, path)
+    val p = params(spark, path)
     val B = p.b
     val intern = new IncrMat.Tracker
-    val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.idDdl,
+    val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.str("idDdl"),
       "linededup continueAt addedDocs")
     val removedIds = SegSwap.castToPinned(removedIds0,
-      removedIds0.columns.head, p.idDdl, "linededup continueAt removedIds")
+      removedIds0.columns.head, p.str("idDdl"), "linededup continueAt removedIds")
     // replace semantics: an incoming id evicts its existing rows; the
     // touched-bucket set (td) rides the same materialization job
     val (remRaw, remSets) = intern.matStats(removedIds
       .select(col(removedIds.columns.head).as("_rid"))
       .unionByName(addedDocs.select(col(idCol).as("_rid"))).distinct()
-      .withColumn("_tdb", docBucket(col("_rid"), B)), Seq("_tdb"))
+      .withColumn("_tdb", hashBucket(B, col("_rid"))), Seq("_tdb"))
     val rem = remRaw.drop("_tdb")
     val addLines = intern.mat(
-      IncrementalLineDedup.linesOf(addedDocs, idCol, textCol, p.sep)
-        .withColumn("_b", docBucket(col("doc_id"), B)))
+      IncrementalLineDedup.linesOf(addedDocs, idCol, textCol, p.str("sep"))
+        .withColumn("_b", hashBucket(B, col("doc_id"))))
 
     // ---- doc-bucketed rewrite: lines ----------------------------------
     val td = remSets.head
@@ -184,7 +133,7 @@ object LineDedupStore {
     val (deltaRaw, deltaSets) = intern.matStats(depart.unionByName(arrive)
       .groupBy("line").agg(sum(col("_d")).as("_d"))
       .filter(col("_d") =!= 0)
-      .withColumn("_tlb", lineBucket(col("line"), B)), Seq("_tlb"))
+      .withColumn("_tlb", hashBucket(B, col("line"))), Seq("_tlb"))
     val delta = deltaRaw.drop("_tlb")
     relOld()
     val ts = deltaSets.head
@@ -200,11 +149,11 @@ object LineDedupStore {
             .as("_nd2")))
     val dfreqNextT = intern.mat(merged.filter(col("_nd2") > 0)
       .select(col("line"), col("_nd2").as("nd"),
-        lineBucket(col("line"), B).as("_b")))
+        hashBucket(B, col("line")).as("_b")))
     // boilerplate status flipped — only delta-touched lines can
     // (elsewhere nd1 == nd2); delta-bounded
     val flipped = intern.mat(merged
-      .filter((col("_nd1") > p.maxDocs) =!= (col("_nd2") > p.maxDocs))
+      .filter((col("_nd1") > p.long("maxDocs")) =!= (col("_nd2") > p.long("maxDocs")))
       .select("line"))
     relMerged()
 
@@ -223,7 +172,7 @@ object LineDedupStore {
         .join(flipProbe, Seq("line"), "left_semi")
         .select("doc_id").distinct()
         .unionByName(addedIds).distinct())
-      .withColumn("_ab", docBucket(col("doc_id"), B)), Seq("_ab"))
+      .withColumn("_ab", hashBucket(B, col("doc_id"))), Seq("_ab"))
     val affected = affRaw.drop("_ab")
     val ab = affSets.head
     val dfreqPost = dfreqLive.filter(!inBuckets(ts)).drop("_b")
@@ -231,7 +180,7 @@ object LineDedupStore {
     val recleaned = IncrementalLineDedup.cleanFor(
       linesPost.filter(inBuckets(ab))
         .join(affected, Seq("doc_id"), "left_semi").drop("_b"),
-      dfreqPost, p.maxDocs, p.sep)
+      dfreqPost, p.long("maxDocs"), p.str("sep"))
     val ao = ab ++ td
     val evict = affected
       .unionByName(rem.select(col("_rid").as("doc_id"))).distinct()
@@ -239,7 +188,7 @@ object LineDedupStore {
       .filter(inBuckets(ao))
       .join(evict, Seq("doc_id"), "left_anti")
       .unionByName(recleaned.withColumn("_b",
-        docBucket(col("doc_id"), B))))
+        hashBucket(B, col("doc_id")))))
 
     val liveB = math.max(1,
       SegSwap.liveBuckets(SegSwap.fsOf(spark, path), path, "out").size)
@@ -252,27 +201,7 @@ object LineDedupStore {
    advice
   }
 
-  /** Journaled RE-BUCKETING / COMPACTION — lazy staged frames streamed
-    * to seg_staging, destination buckets from the staged dirs, params
-    * through the journal's whole-dir entry. */
+  /** Journaled RE-BUCKETING ([[SegStore.relayout]]). */
   def rebucket(spark: SparkSession, path: String, nBuckets: Int): Unit =
-    SegSwap.withWriterLease(spark, path) { lease =>
-      val fs = SegSwap.fsOf(spark, path)
-      SegSwap.recover(spark, path)
-      val p = readParams(spark, path)
-      val p2 = p.copy(b = nBuckets)
-      val staged = Seq(
-        ("lines", docBucket(col("doc_id"), nBuckets)),
-        ("dfreq", lineBucket(col("line"), nBuckets)),
-        ("out", docBucket(col("doc_id"), nBuckets))).map { case (t, nb) =>
-        (t, readTable(spark, path, p, t).withColumn("_b", nb),
-          SegSwap.liveBuckets(fs, path, t))
-      }
-      SegSwap.commit(spark, path, staged, dirSwaps = Seq(
-        "params" -> ((dst: String) => writeParamsTo(spark, dst, p2))),
-        fence = Some(lease), augmentFromStaging = true)
-    }
-
-  def compact(spark: SparkSession, path: String): Unit =
-    rebucket(spark, path, readParams(spark, path).b)
+    relayout(spark, path, Seq("b" -> nBuckets))
 }

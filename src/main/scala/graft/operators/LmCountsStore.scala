@@ -27,7 +27,8 @@ import org.apache.spark.sql.types.StructType
   * variants, so `init + continueAt*` ≡ `lmScoreAgainst(post-delta
   * corpus, …)` exactly (gate `q_incr_lm_score` + spec). Single
   * concurrent writer; crash-safe via the [[SegSwap]] journal. */
-object LmCountsStore {
+object LmCountsStore extends SegStore("lmcounts", "lmcounts") {
+  import SegStore.{Params, Table, hashBucket, inBuckets}
 
   /** Doc-side bucketing is pluggable exactly as in [[DupSpansStore]]:
     * `hash` scatters uniformly, `range` (numeric ids, width `span`)
@@ -38,79 +39,15 @@ object LmCountsStore {
     * mode — their touch set is the delta's token set by construction,
     * not its id range. */
   private def docBucket(c: Column, p: Params): Column =
-    if (p.mode == "range")
-      floor(c.cast("bigint") / lit(p.span)).cast("int")
-    else pmod(xxhash64(c), lit(p.b.toLong)).cast("int")
-  private def tokBucket(b: Int, cs: Column*): Column =
-    pmod(xxhash64(cs: _*), lit(b.toLong)).cast("int")
+    if (p.str("mode") == "range")
+      floor(c.cast("bigint") / lit(p.long("span"))).cast("int")
+    else hashBucket(p.b, c)
 
-  private case class Params(b: Int, mode: String, span: Long,
-      idDdl: String, ddl: Map[String, String], lastBatch: Long = -1L)
-
-  // params plumbing via the family-shared codec ([[SegSwap.writeParamsTo]]
-  // / [[SegSwap.readParamsRow]]: journal-aware, NAME-based, loud on an
-  // older layout)
-  private def writeParamsTo(spark: SparkSession, dst: String,
-      p: Params): Unit =
-    SegSwap.writeParamsTo(spark, dst, Seq(
-      "b" -> p.b, "mode" -> p.mode, "span" -> p.span, "idDdl" -> p.idDdl,
-      "unidocDdl" -> p.ddl("unidoc"), "bidocDdl" -> p.ddl("bidoc"),
-      "uniDdl" -> p.ddl("uni"), "biDdl" -> p.ddl("bi"),
-      "lastBatch" -> p.lastBatch))
-
-  private def writeParams(spark: SparkSession, path: String, p: Params): Unit =
-    writeParamsTo(spark, s"$path/params", p)
-
-  private val ParamFields = Seq("b", "mode", "span", "idDdl",
-    "unidocDdl", "bidocDdl", "uniDdl", "biDdl", "lastBatch")
-
-  private def paramsOf(r: org.apache.spark.sql.Row): Params =
-    Params(r.getInt(0), r.getString(1), r.getLong(2), r.getString(3),
-      Map("unidoc" -> r.getString(4), "bidoc" -> r.getString(5),
-        "uni" -> r.getString(6), "bi" -> r.getString(7)), r.getLong(8))
-
-  private def readParams(spark: SparkSession, path: String): Params =
-    paramsOf(SegSwap.readParamsRow(spark, path, ParamFields, "lmcounts"))
-
-  private def readParamsAt(spark: SparkSession, path: String,
-      epoch: Long): Params =
-    paramsOf(SegSwap.readParamsRowAt(spark, path, ParamFields,
-      "lmcounts", epoch))
-
-  /** Journal-aware read ([[SegSwap.resolvedTable]]): non-destructive
-    * under an uninstalled commit, a plain live read otherwise. */
-  private def readTable(spark: SparkSession, path: String, p: Params,
-      name: String): DataFrame =
-    SegSwap.resolvedTable(spark, path, name,
-      StructType.fromDDL(p.ddl(name)))
-
-  /** The store's current commit epoch (0 = as-inited). */
-  def currentEpoch(spark: SparkSession, path: String): Long =
-    SegSwap.currentEpoch(SegSwap.fsOf(spark, path), path)
-
-  /** Roll every table of the store (and params) back to `epoch` as one
-    * journaled revert — [[SegSwap.rollbackTo]] with this store's table
-    * set (see [[DupSpansStore.rollbackTo]], the family exemplar, for
-    * the contract: history-preserving, redo-able, delta-proportional,
-    * loud past the retention horizon). */
-  def rollbackTo(spark: SparkSession, path: String, epoch: Long): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.rollbackTo(spark, path, epoch,
-      p.ddl.toSeq.map { case (n, d) => n -> StructType.fromDDL(d) },
-      dirTables = Seq("params"))
-  }
-
-  /** Publish the model AS OF `epoch` to `dst` as a fresh standalone
-    * LmCountsStore — [[SegSwap.exportSnapshot]] with this store's
-    * table set. The release step for model versioning: yesterday's
-    * frozen quality model goes to a serving path, this store keeps
-    * taking corpus deltas. */
-  def exportAt(spark: SparkSession, path: String, epoch: Long,
-      dst: String): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.exportSnapshot(spark, path, epoch, dst,
-      p.ddl.keys.toSeq, dirTables = Seq("params"))
-  }
+  protected def tables(p: Params): Seq[Table] = Seq(
+    Table("unidoc", p.ddl("unidoc"), docBucket(col("doc_id"), p)),
+    Table("bidoc", p.ddl("bidoc"), docBucket(col("doc_id"), p)),
+    Table("uni", p.ddl("uni"), hashBucket(p.b, col("w"))),
+    Table("bi", p.ddl("bi"), hashBucket(p.b, col("a"), col("b"))))
 
   /** Per-doc contribution tables for a corpus (shared by init and the
     * continuation's arrival side — one definition, no drift). */
@@ -146,16 +83,17 @@ object LmCountsStore {
     // remove the completeness marker FIRST when re-initing over an
     // existing path (crash mid-init must read as incomplete)
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
-    val p0 = Params(nBuckets, bucketMode, rangeSpan,
-      docs.schema(idCol).dataType.sql, Map.empty)
+    val p0 = Seq("b" -> nBuckets, "mode" -> bucketMode, "span" -> rangeSpan,
+      "idDdl" -> docs.schema(idCol).dataType.sql)
+    val dp = newParams(path, p0)
     val intern = new IncrMat.Tracker
-    val unidoc = intern.mat(uniDocOf(docs, idCol, textCol, p0))
-    val bidoc = intern.mat(biDocOf(docs, idCol, textCol, p0))
+    val unidoc = intern.mat(uniDocOf(docs, idCol, textCol, dp))
+    val bidoc = intern.mat(biDocOf(docs, idCol, textCol, dp))
     val uni = intern.mat(unidoc.groupBy("w").agg(sum(col("n")).as("cw"))
-      .withColumn("_b", tokBucket(nBuckets, col("w"))))
+      .withColumn("_b", hashBucket(nBuckets, col("w"))))
     val bi = intern.mat(bidoc.groupBy("a", "b")
       .agg(sum(col("n")).as("cab"))
-      .withColumn("_b", tokBucket(nBuckets, col("a"), col("b"))))
+      .withColumn("_b", hashBucket(nBuckets, col("a"), col("b"))))
     // all four tables are materialized leaves: independent writes to
     // distinct dirs — overlap them (guide §2.6)
     graft.util.Par.foreach(
@@ -163,9 +101,10 @@ object LmCountsStore {
           "bi" -> bi).map { case (n, df) =>
         SegSwap.stageBuckets(df, s"$path/$n")
       })
-    writeParams(spark, path, p0.copy(ddl = Map(
-      "unidoc" -> unidoc.schema.toDDL, "bidoc" -> bidoc.schema.toDDL,
-      "uni" -> uni.schema.toDDL, "bi" -> bi.schema.toDDL)))
+    SegSwap.writeParamsTo(spark, s"$path/params", p0 ++ Seq(
+      "unidocDdl" -> unidoc.schema.toDDL, "bidocDdl" -> bidoc.schema.toDDL,
+      "uniDdl" -> uni.schema.toDDL, "biDdl" -> bi.schema.toDDL,
+      "lastBatch" -> -1L))
     intern.releaseAll()
   }
 
@@ -181,10 +120,6 @@ object LmCountsStore {
       autoRespanFactor: Int = 4): StorePolicy.ContinueAdvice =
     continueImpl(spark, path, addedDocs0, removedIds0, idCol, textCol,
       autoRespanFactor, batchId = None).get
-
-  /** The stream batch fence (−1 = never maintained by a stream). */
-  def lastBatch(spark: SparkSession, path: String): Long =
-    readParams(spark, path).lastBatch
 
   /** [[continueAt]] fenced by a stream micro-batch id — applied AT
     * MOST ONCE per `batchId` (None on a replayed batch), the fence
@@ -204,14 +139,14 @@ object LmCountsStore {
    val advice = SegSwap.withWriterLease(spark, path) { lease =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.recover(spark, path)
-    val p = readParams(spark, path)
-    if (batchId.exists(_ <= p.lastBatch)) None
+    val p = params(spark, path)
+    if (batchId.exists(_ <= p.long("lastBatch"))) None
     else {
     // pin the delta's id dtype to the init corpus's before bucketing
-    val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.idDdl,
+    val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.str("idDdl"),
       "continueAt addedDocs")
     val removedIds = SegSwap.castToPinned(removedIds0,
-      removedIds0.columns.head, p.idDdl, "continueAt removedIds")
+      removedIds0.columns.head, p.str("idDdl"), "continueAt removedIds")
     val intern = new IncrMat.Tracker
     // the touched doc-bucket set (td) rides the rem leaf's own
     // materialization job (guide §1.2 — no separate collect)
@@ -223,9 +158,6 @@ object LmCountsStore {
     val addUni = intern.mat(uniDocOf(addedDocs, idCol, textCol, p))
     val addBi = intern.mat(biDocOf(addedDocs, idCol, textCol, p))
     val td = remSets.head
-    def inBuckets(bs: Set[Int]): Column =
-      if (bs.isEmpty) lit(false)
-      else col("_b").isin(bs.toSeq.map(Integer.valueOf): _*)
 
     // contribution rewrites + count deltas from ONE pruned scan each:
     // departures are the stored bags of evicted docs (negated),
@@ -249,7 +181,7 @@ object LmCountsStore {
         .unionByName(add.select(kcols :+ col("n").as("_d"): _*))
         .groupBy(kcols: _*).agg(sum(col("_d")).as("_d"))
         .filter(col("_d") =!= 0)
-        .withColumn("_tkb", tokBucket(p.b, kcols: _*)), Seq("_tkb"))
+        .withColumn("_tkb", hashBucket(p.b, kcols: _*)), Seq("_tkb"))
       val delta = deltaRaw.drop("_tkb")
       relOld()
       val tb = deltaSets.head
@@ -261,7 +193,7 @@ object LmCountsStore {
           (coalesce(col(cnt), lit(0L)) + coalesce(col("_d"), lit(0L)))
             .as(cnt): _*)
         .filter(col(cnt) > 0)
-        .withColumn("_b", tokBucket(p.b, kcols: _*)))
+        .withColumn("_b", hashBucket(p.b, kcols: _*)))
       Seq((doc, nextT, td), (agg, aggNextT, tb))
     }
     val liveB = math.max(1,
@@ -270,19 +202,19 @@ object LmCountsStore {
       roll("unidoc", "uni", Seq("w"), addUni) ++
         roll("bidoc", "bi", Seq("a", "b"), addBi),
       dirSwaps = batchId.toSeq.map(b => "params" -> ((dst: String) =>
-        writeParamsTo(spark, dst, p.copy(lastBatch = b)))),
+        writeParams(spark, dst, p.updated("lastBatch" -> b)))),
       fence = Some(lease))
     intern.releaseAll()
     Some(StorePolicy.advise("lmcounts", td.size, liveB))
     }
    }
    if (advice.isDefined) locally {
-     val p = readParams(spark, path)
-     if (p.mode == "range")
+     val p = params(spark, path)
+     if (p.str("mode") == "range")
        StorePolicy.autoRespanIfSprawled(spark, path, "unidoc", p.b,
          autoRespanFactor) { live =>
          rebucket(spark, path, p.b, "range",
-           p.span * ((live + p.b - 1) / p.b))
+           p.long("span") * ((live + p.b - 1) / p.b))
        }
    }
    advice
@@ -295,7 +227,7 @@ object LmCountsStore {
       idCol: String, textCol: String, k: Double = 0.5,
       maxNll: Double = 3.5): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val p = readParams(spark, path)
+    val p = params(spark, path)
     // readers never mutate: an uninstalled commit is resolved through
     // the journal by readTable ([[SegSwap.resolvedTable]])
     Pipeline.lmScoreFromCounts(
@@ -311,19 +243,17 @@ object LmCountsStore {
     * VERSIONING on the quality filter: reproduce yesterday's keep/drop
     * decisions exactly, or A/B a delta's effect on a fixed audit set,
     * without rolling the store back. Counts AND params resolve at the
-    * epoch ([[SegSwap.snapshotTable]] / [[SegSwap.readParamsRowAt]]);
+    * epoch ([[SegStore.readTableAt]] / [[SegStore.paramsAt]]);
     * readable for the retention horizon, or while a pin covers it. */
   def scoreAgainstAt(spark: SparkSession, path: String, score: DataFrame,
       idCol: String, textCol: String, epoch: Long, k: Double = 0.5,
       maxNll: Double = 3.5): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val p = readParamsAt(spark, path, epoch)
+    val p = paramsAt(spark, path, epoch)
     Pipeline.lmScoreFromCounts(
-      SegSwap.snapshotTable(spark, path, "uni",
-        StructType.fromDDL(p.ddl("uni")), epoch)
+      readTableAt(spark, path, p, "uni", epoch)
         .select(col("w").as("_a"), col("cw").as("_cw")),
-      SegSwap.snapshotTable(spark, path, "bi",
-        StructType.fromDDL(p.ddl("bi")), epoch)
+      readTableAt(spark, path, p, "bi", epoch)
         .select(col("a").as("_a"), col("b").as("_b"),
           col("cab").as("_cab")),
       score, idCol, textCol, k, maxNll)
@@ -342,37 +272,10 @@ object LmCountsStore {
       s"lmcounts: unknown bucketMode '$bucketMode'")
     require(bucketMode == "hash" || rangeSpan > 0,
       "lmcounts: range bucketing needs a positive rangeSpan")
-    SegSwap.withWriterLease(spark, path) { lease =>
-      val fs = SegSwap.fsOf(spark, path)
-      SegSwap.recover(spark, path) // writer entry: live dirs are truth
-      val p = readParams(spark, path)
-      require(bucketMode == "hash" ||
-        StructType.fromDDL(s"x ${p.idDdl}").head.dataType
+    relayout(spark, path, Seq("b" -> nBuckets, "mode" -> bucketMode,
+      "span" -> rangeSpan), p => require(bucketMode == "hash" ||
+        StructType.fromDDL(s"x ${p.str("idDdl")}").head.dataType
           .isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"lmcounts: range bucketing needs a numeric id, store has ${p.idDdl}")
-      val p2 = p.copy(b = nBuckets, mode = bucketMode, span = rangeSpan)
-      // LAZY staged frames streamed straight to seg_staging (safe: live
-      // files retire only after the journal lands) with destination
-      // buckets discovered from the staged dirs — no whole-store
-      // materialization, no separate enumeration scan
-      val staged = Seq(
-        ("unidoc", docBucket(col("doc_id"), p2)),
-        ("bidoc", docBucket(col("doc_id"), p2)),
-        ("uni", tokBucket(nBuckets, col("w"))),
-        ("bi", tokBucket(nBuckets, col("a"), col("b")))).map { case (t, nb) =>
-        (t, readTable(spark, path, p, t).withColumn("_b", nb),
-          SegSwap.liveBuckets(fs, path, t))
-      }
-      SegSwap.commit(spark, path, staged, dirSwaps = Seq(
-        "params" -> ((dst: String) => writeParamsTo(spark, dst, p2))),
-        fence = Some(lease), augmentFromStaging = true)
-    }
-  }
-
-  /** Journaled COMPACTION: [[rebucket]] under the store's own params —
-    * one contiguous file per bucket, content-invariant. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val p = readParams(spark, path)
-    rebucket(spark, path, p.b, p.mode, p.span)
+        s"lmcounts: range bucketing needs a numeric id, store has ${p.str("idDdl")}"))
   }
 }

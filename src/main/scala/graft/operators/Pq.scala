@@ -491,9 +491,8 @@ object Pq {
     // m/residual resolved from the SAME commit as the snapshot lists —
     // both are build-frozen today, but the as-of contract is that every
     // param a derived read depends on comes from the requested epoch
-    val r = SegSwap.readParamsRowAt(spark, path, Seq("m", "residual"),
-      "ivfpq", epoch, residualDefault)
-    val (m, res) = (r.getInt(0), r.getInt(1) == 1)
+    val r = SegSwap.readParamsAt(spark, path, "ivfpq", epoch, residualDefault)
+    val (m, res) = (r.int("m"), r.int("residual") == 1)
     probePq(spark, queries, k, nprobe, rerank, m,
       spark.read.parquet(s"$path/centroids"),
       spark.read.parquet(s"$path/codebooks"),
@@ -501,27 +500,23 @@ object Pq {
       residual = res)
   }
 
-  /** [[Similarity.rebucketLoc]] for the PQ index: migrate the locator
-    * bucket count in one journaled swap, fence preserved. */
+  private[graft] object IvfPqStore extends Similarity.IvfIndexStore(
+    "ivfpq", listsSchemaPqB, Seq("centroids", "codebooks"), residualDefault)
+
+  /** [[Similarity.IvfIndexStore.rebucketLoc]] for the PQ index. */
   def ivfPqRebucketLoc(spark: SparkSession, path: String,
-      newLocB: Int): Unit = {
-    val (m, res) = readMRes(spark, path)
-    Similarity.rebucketLoc(spark, path, newLocB, "ivfpq",
-      (fence, b) => pqParams(m, b, res)(fence))
-  }
+      newLocB: Int): Unit =
+    IvfPqStore.rebucketLoc(spark, path, newLocB)
 
   /** Roll the index back to `epoch` — the family contract verbatim. */
   def ivfPqRollbackTo(spark: SparkSession, path: String, epoch: Long): Unit =
-    SegSwap.rollbackTo(spark, path, epoch,
-      Seq("lists" -> listsSchemaPqB, "loc" -> Similarity.locSchemaB),
-      dirTables = Seq("params"))
+    IvfPqStore.rollbackTo(spark, path, epoch)
 
   /** Publish the index AS OF `epoch` to `dst` as a standalone index
     * (lists + both frozen quantizers + params). */
   def ivfPqExportAt(spark: SparkSession, path: String, epoch: Long,
       dst: String): Unit =
-    SegSwap.exportSnapshot(spark, path, epoch, dst, Seq("lists", "loc"),
-      dirTables = Seq("params", "centroids", "codebooks"))
+    IvfPqStore.exportAt(spark, path, epoch, dst)
 
   private def probePq(spark: SparkSession, queries: DataFrame, k: Int,
       nprobe: Int, rerank: Int, m: Int, cents: DataFrame, cb: DataFrame,

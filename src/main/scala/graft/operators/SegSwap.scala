@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The journaled touched-bucket swap shared by every segmented durable
@@ -754,9 +754,7 @@ private[graft] object SegSwap {
     * `java.lang.Double.toString/parseDouble` (shortest-exact). The
     * atomic tmp+rename is [[writeTextAtomic]]'s — a torn write can
     * never masquerade as params, same contract the parquet form's
-    * _SUCCESS-less dir never actually had. [[paramsRowFrom]] keeps a
-    * parquet-read fallback so a store written by an older build stays
-    * readable (same spirit as the `defaults` schema-evolution hatch). */
+    * _SUCCESS-less dir never actually had. */
   private val ParamsKvFile = "kv.txt"
 
   private[graft] def writeParamsTo(spark: SparkSession, dst: String,
@@ -779,85 +777,68 @@ private[graft] object SegSwap {
       lines.mkString("\n"))
   }
 
-  /** The params record at `dir` as (name → typed value), or None when
-    * no kv file exists (pre-r15 parquet-format store). */
-  private def readParamsKv(fs: FileSystem,
-      dir: String): Option[Map[String, Any]] =
-    readText(fs, new HPath(s"$dir/$ParamsKvFile")).map { text =>
-      def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-      text.linesIterator.filter(_.nonEmpty).map { line =>
-        line.split(" ", 3) match {
-          case Array(n, t, v) =>
-            val value: Any = t match {
-              case "i" => v.toInt
-              case "l" => v.toLong
-              case "d" => v.toDouble
-              case "z" => v.toBoolean
-              case "s" => dec(v)
-              case other => throw new IllegalStateException(
-                s"segswap: corrupt params line type '$other' in $dir")
-            }
-            dec(n) -> value
-          case _ => throw new IllegalStateException(
-            s"segswap: corrupt params line '$line' in $dir")
-        }
-      }.toMap
-    }
+  /** The params record at `dir`, fields in file order. A dir without
+    * the kv file fails loudly: its store predates the text codec (or
+    * its init never finished). */
+  private def readParamsKv(fs: FileSystem, path: String, dir: String,
+      what: String): Seq[(String, Any)] = {
+    val text = readText(fs, new HPath(s"$dir/$ParamsKvFile"))
+    require(text.isDefined,
+      s"$what: store at $path has no params record ($dir/$ParamsKvFile) " +
+        "— written by an older build; re-init the store")
+    def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
+    text.get.linesIterator.filter(_.nonEmpty).map { line =>
+      line.split(" ", 3) match {
+        case Array(n, t, v) =>
+          val value: Any = t match {
+            case "i" => v.toInt
+            case "l" => v.toLong
+            case "d" => v.toDouble
+            case "z" => v.toBoolean
+            case "s" => dec(v)
+            case other => throw new IllegalStateException(
+              s"segswap: corrupt params line type '$other' in $dir")
+          }
+          dec(n) -> value
+        case _ => throw new IllegalStateException(
+          s"segswap: corrupt params line '$line' in $dir")
+      }
+    }.toSeq
+  }
 
   /** ONE params reader: journal-aware ([[resolvedDirPath]] — a
     * committed-but-uninstalled rebucket's NEW params are visible
-    * without mutating anything) and NAME-based (a store written by an
-    * older params layout fails with a clear column-not-found telling
-    * the operator to re-init, never a positional ClassCastException
-    * deep in a getter). Returns the single row in `want` order.
-    * `defaults` is the params-schema-EVOLUTION escape hatch: a key a
-    * NEWER build added (e.g. the IVF-PQ `residual` flag) reads its
-    * default from a store an older build wrote, instead of forcing a
-    * re-init of a perfectly readable durable store — only keys with
+    * without mutating anything) and NAME-based (a field missing from
+    * an older layout fails with a clear message telling the operator
+    * to re-init, never a positional ClassCastException deep in a
+    * getter). `defaults` is the params-schema-EVOLUTION escape hatch:
+    * a key a NEWER build added (e.g. the IVF-PQ `residual` flag) reads
+    * its default from a store an older build wrote, instead of forcing
+    * a re-init of a perfectly readable durable store — only keys with
     * no default keep the fail-loudly contract. */
+  private[graft] def readParams(spark: SparkSession, path: String,
+      what: String, defaults: Map[String, Any] = Map.empty): SegStore.Params = {
+    val fs = fsOf(spark, path)
+    new SegStore.Params(readParamsKv(fs, path,
+      resolvedDirPath(fs, path, "params"), what), what, path, defaults)
+  }
+
+  /** [[readParams]] AS OF an epoch — params metadata (N, bucket mode,
+    * fences) resolved from the same commit the snapshot data tables
+    * come from, so an as-of derived read is consistent end to end. */
+  private[graft] def readParamsAt(spark: SparkSession, path: String,
+      what: String, epoch: Long,
+      defaults: Map[String, Any] = Map.empty): SegStore.Params = {
+    val fs = fsOf(spark, path)
+    new SegStore.Params(readParamsKv(fs, path,
+      snapshotDirPath(fs, path, "params", epoch), what), what, path, defaults)
+  }
+
+  /** The `want` fields of [[readParams]] as one row, in `want` order. */
   private[graft] def readParamsRow(spark: SparkSession, path: String,
       want: Seq[String], what: String,
       defaults: Map[String, Any] = Map.empty): org.apache.spark.sql.Row =
-    paramsRowFrom(spark, path,
-      resolvedDirPath(fsOf(spark, path), path, "params"), want, what,
-      defaults)
-
-  /** [[readParamsRow]] AS OF an epoch — params metadata (N, bucket
-    * mode, fences) resolved from the same commit the snapshot data
-    * tables come from, so an as-of derived read is consistent end to
-    * end. */
-  private[graft] def readParamsRowAt(spark: SparkSession, path: String,
-      want: Seq[String], what: String, epoch: Long,
-      defaults: Map[String, Any] = Map.empty): org.apache.spark.sql.Row =
-    paramsRowFrom(spark, path,
-      snapshotDirPath(fsOf(spark, path), path, "params", epoch), want, what,
-      defaults)
-
-  private def paramsRowFrom(spark: SparkSession, path: String, dir: String,
-      want: Seq[String], what: String,
-      defaults: Map[String, Any] = Map.empty): org.apache.spark.sql.Row =
-    readParamsKv(fsOf(spark, path), dir) match {
-      case Some(kv) =>
-        val undefaulted =
-          want.filterNot(kv.contains).filterNot(defaults.contains)
-        require(undefaulted.isEmpty,
-          s"$what: store at $path has an incompatible params layout " +
-            s"(missing ${undefaulted.mkString(",")}) — written by an " +
-            "older build; re-init the store")
-        org.apache.spark.sql.Row.fromSeq(
-          want.map(w => kv.getOrElse(w, defaults(w))))
-      case None => // pre-r15 store: params as a parquet table
-        val df = spark.read.parquet(dir)
-        val missing = want.filterNot(df.columns.contains)
-        val undefaulted = missing.filterNot(defaults.contains)
-        require(undefaulted.isEmpty,
-          s"$what: store at $path has an incompatible params layout " +
-            s"(missing ${undefaulted.mkString(",")}) — written by an " +
-            "older build; re-init the store")
-        df.select(want.map(w =>
-          if (df.columns.contains(w)) col(w) else lit(defaults(w)).as(w)): _*)
-          .collect()(0)
-    }
+    readParams(spark, path, what, defaults).row(want)
 
   /** Stage, journal, and install `touched` = (table, replacement rows
     * for the touched buckets, touched bucket set). Replacement-frame

@@ -210,49 +210,45 @@ object Similarity {
     * locate silently misses and a Forget purge no-ops. */
   private[operators] def locBucket(c: org.apache.spark.sql.Column,
       b: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(c.cast("long")), lit(b.toLong)).cast("int")
+    SegStore.hashBucket(b, c.cast("long"))
 
   private def writeLoc(assigned: DataFrame, dst: String, b: Int): Unit =
     SegSwap.writeBuckets(assigned.select(col("nid"), col("cid"))
       .withColumn("_b", locBucket(col("nid"), b)), dst)
 
-  /** Journaled locator RE-BUCKETING — the family lifecycle op on the
-    * ANN stores' one hash-bucketed table: `locB` freezes at build, so
-    * under a long-lived maintainer the corpus outgrows it and per-batch
-    * locator rewrites erode toward O(corpus/locB) (the round's
-    * `upsert_rebucket` erosion, on the locator). This migrates B in
-    * one crash-safe swap — the new `locB` installs atomically with the
-    * re-hashed rows THROUGH THE SAME JOURNAL (a crash cannot leave
-    * readers deriving buckets with the wrong B) and the stream batch
-    * fence carries forward, so a rebucket BETWEEN micro-batches
-    * preserves replay-skip semantics. The LISTS need no analog: their
-    * partitioning is the coarse quantizer, and re-granulating that is
-    * a retrain (= rebuild) by the frozen-quantizer contract.
-    * `paramsFor(lastBatch, newLocB)` writes the store's params row —
-    * kind-specific, supplied by the public wrappers. */
-  private[operators] def rebucketLoc(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newLocB: Int, what: String,
-      paramsFor: (Long, Int) => Seq[(String, Any)]): Unit =
-    SegSwap.withWriterLease(spark, path) { lease =>
-      SegSwap.recover(spark, path)
-      val fs = SegSwap.fsOf(spark, path)
-      val fence = SegSwap.readParamsRow(spark, path,
-        Seq("lastBatch"), what).getLong(0)
-      val staged = SegSwap.resolvedTable(spark, path, "loc", locSchemaB)
-        .drop("_b").withColumn("_b", locBucket(col("nid"), newLocB))
-      SegSwap.commit(spark, path,
-        Seq(("loc", staged, SegSwap.liveBuckets(fs, path, "loc"))),
-        dirSwaps = Seq("params" -> ((dst: String) =>
-          SegSwap.writeParamsTo(spark, dst, paramsFor(fence, newLocB)))),
-        fence = Some(lease), augmentFromStaging = true)
-    }
+  /** The on-disk ANN index stores' layout ([[SegStore]]): `lists`
+    * partitioned by coarse list id (placed by the frozen quantizer, so
+    * never rebucketed — re-granulating it is a retrain, i.e. a
+    * rebuild), the nid-hash `loc` locator, and the frozen quantizer
+    * dirs. */
+  private[graft] class IvfIndexStore(kind: String,
+      listsSchema: org.apache.spark.sql.types.StructType, frozen: Seq[String],
+      override protected val defaults: Map[String, Any] = Map.empty)
+      extends SegStore(kind, kind) {
+    protected def tables(p: SegStore.Params): Seq[SegStore.Table] = Seq(
+      SegStore.Table("lists", listsSchema, col("cid").cast("int"),
+        rebuckets = false),
+      SegStore.Table("loc", locSchemaB, locBucket(col("nid"), p.int("locB"))))
+    override protected def frozenDirs: Seq[String] = frozen
 
-  /** [[rebucketLoc]] for the raw IVF index. */
+    /** Journaled locator RE-BUCKETING ([[SegStore.relayout]]): `locB`
+      * freezes at build, so under a long-lived maintainer the corpus
+      * outgrows it and per-batch locator rewrites erode toward
+      * O(corpus/locB) (the round's `upsert_rebucket` erosion, on the
+      * locator). The stream batch fence carries forward, so a rebucket
+      * BETWEEN micro-batches preserves replay-skip semantics. */
+    def rebucketLoc(spark: org.apache.spark.sql.SparkSession, path: String,
+        newLocB: Int): Unit =
+      relayout(spark, path, Seq("locB" -> newLocB))
+  }
+
+  private[graft] object IvfStore
+      extends IvfIndexStore("ivf", listsSchemaB, Seq("centroids"))
+
+  /** [[IvfIndexStore.rebucketLoc]] for the raw IVF index. */
   def ivfRebucketLoc(spark: org.apache.spark.sql.SparkSession,
       path: String, newLocB: Int): Unit =
-    rebucketLoc(spark, path, newLocB, "ivf",
-      (fence, b) => ivfParams(fence, b))
+    IvfStore.rebucketLoc(spark, path, newLocB)
 
   /** The IVF store's params row: the lists DDL, the locator bucket
     * count, and the stream batch fence (−1 = never maintained by a
@@ -267,7 +263,7 @@ object Similarity {
   /** The index's stream fence: the last micro-batch id applied by a
     * [[updateIvfIndex]] call that carried one (−1 = none yet). */
   def ivfLastBatch(spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    SegSwap.readParamsRow(spark, path, Seq("lastBatch"), "ivf").getLong(0)
+    IvfStore.lastBatch(spark, path)
 
   /** Probe a [[buildIvfIndex]] index: same results contract as
     * [[ivfTopK]] with the same centroids/nprobe, but the list scan
@@ -288,7 +284,7 @@ object Similarity {
 
   /** The on-disk index's current commit epoch (0 = as-built). */
   def ivfEpoch(spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    SegSwap.currentEpoch(SegSwap.fsOf(spark, path), path)
+    IvfStore.currentEpoch(spark, path)
 
   /** Probe the index AS OF `epoch` — yesterday's ANN results under
     * yesterday's lists (the quantizer is frozen, so centroids need no
@@ -306,17 +302,14 @@ object Similarity {
     * history-preserving, redo-able, loud past the horizon. */
   def ivfRollbackTo(spark: org.apache.spark.sql.SparkSession, path: String,
       epoch: Long): Unit =
-    SegSwap.rollbackTo(spark, path, epoch,
-      Seq("lists" -> listsSchemaB, "loc" -> locSchemaB),
-      dirTables = Seq("params"))
+    IvfStore.rollbackTo(spark, path, epoch)
 
   /** Publish the index AS OF `epoch` to `dst` as a fresh standalone
     * index (lists + frozen quantizer + params) — the family's
     * model-versioning release step on the ANN surface. */
   def ivfExportAt(spark: org.apache.spark.sql.SparkSession, path: String,
       epoch: Long, dst: String): Unit =
-    SegSwap.exportSnapshot(spark, path, epoch, dst,
-      Seq("lists", "loc"), dirTables = Seq("params", "centroids"))
+    IvfStore.exportAt(spark, path, epoch, dst)
 
   /** Incrementally maintain an on-disk [[buildIvfIndex]] index over a
     * vector delta — the incremental thesis (F27–F31,
@@ -429,10 +422,7 @@ object Similarity {
     val goneB = gone
       .select(locBucket(col("_rid"), locB).as("_b")).distinct()
       .collect().map(_.getInt(0)).toSet
-    def inB(bs: Set[Int]) =
-      if (bs.isEmpty) lit(false)
-      else col("_b").isin(bs.toSeq.map(Integer.valueOf): _*)
-    val locPruned = loc.filter(inB(goneB))
+    val locPruned = loc.filter(SegStore.inBuckets(goneB))
     // which lists hold the evicted ids — a pruned locator read, not a
     // corpus-wide (cid, nid) column scan
     val locatedB = locPruned

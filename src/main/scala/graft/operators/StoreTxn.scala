@@ -56,23 +56,10 @@ object StoreTxn {
     * [[recover]] can rebuild the compensation without any live state. */
   type Rollback = (SparkSession, String, Long) => Unit
 
-  /** Registry of manifest-recoverable store kinds (the whole durable
-    * family; [[graft.core.SegmentedStateStore]] participates as
-    * "state"). */
-  val kinds: Map[String, Rollback] = Map(
-    "state" -> ((s: SparkSession, p: String, e: Long) =>
-      graft.core.SegmentedStateStore.openForRead(s, p).rollbackTo(e)),
-    "dupspans" -> (DupSpansStore.rollbackTo _),
-    "lmcounts" -> (LmCountsStore.rollbackTo _),
-    "dedupclusters" -> (DedupClusterStore.rollbackTo _),
-    "linededup" -> (LineDedupStore.rollbackTo _),
-    "decontam" -> (DecontamStore.rollbackTo _),
-    "tfidf" -> (TfidfStore.rollbackTo _),
-    "semdedup" -> (SemanticDedupStore.rollbackTo _),
-    "keyedupsert" -> (KeyedUpsertStore.rollbackTo _),
-    "ivf" -> (Similarity.ivfRollbackTo _),
-    "ivfpq" -> (Pq.ivfPqRollbackTo _),
-    "tiledmat" -> (TiledMatrixStore.rollbackTo _))
+  /** Registry of manifest-recoverable store kinds: every store of the
+    * family ([[SegStore.family]]) under its declared kind name. */
+  val kinds: Map[String, Rollback] =
+    SegStore.family.map(s => s.kind -> (s.rollbackTo _)).toMap
 
   private def manifest(txnDir: String) = new HPath(s"$txnDir/txn_manifest")
 

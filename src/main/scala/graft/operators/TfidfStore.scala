@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** SEGMENTED durable form of [[TfidfState]] — corpus TF-IDF statistics
   * on the family's journaled touched-bucket layout ([[SegSwap]]),
@@ -32,40 +31,13 @@ import org.apache.spark.sql.types.StructType
   * must be present, added ids fresh. Single fenced writer
   * ([[SegSwap.withWriterLease]]); crash contract is the family's.
   */
-object TfidfStore {
+object TfidfStore extends SegStore("tfidf", "tfidfstore") {
+  import SegStore.{Params, Table, hashBucket, inBuckets}
 
-  private def docBucket(c: Column, b: Int): Column =
-    pmod(xxhash64(c), lit(b.toLong)).cast("int")
-  private def tokBucket(c: Column, b: Int): Column =
-    pmod(xxhash64(c), lit(b.toLong)).cast("int")
-
-  private case class Params(b: Int, n: Long, idDdl: String,
-      ddl: Map[String, String], lastBatch: Long = -1L)
-
-  private def writeParamsTo(spark: SparkSession, dst: String,
-      p: Params): Unit =
-    SegSwap.writeParamsTo(spark, dst, Seq(
-      "b" -> p.b, "n" -> p.n, "idDdl" -> p.idDdl,
-      "tfDdl" -> p.ddl("tf"), "dfreqDdl" -> p.ddl("dfreq"),
-      "docsDdl" -> p.ddl("docs"), "lastBatch" -> p.lastBatch))
-
-  private def readParams(spark: SparkSession, path: String): Params = {
-    val r = SegSwap.readParamsRow(spark, path,
-      Seq("b", "n", "idDdl", "tfDdl", "dfreqDdl", "docsDdl", "lastBatch"),
-      "tfidfstore")
-    Params(r.getInt(0), r.getLong(1), r.getString(2),
-      Map("tf" -> r.getString(3), "dfreq" -> r.getString(4),
-        "docs" -> r.getString(5)), r.getLong(6))
-  }
-
-  private def readTable(spark: SparkSession, path: String, p: Params,
-      name: String): DataFrame =
-    SegSwap.resolvedTable(spark, path, name,
-      StructType.fromDDL(p.ddl(name)))
-
-  /** The store's current commit epoch (0 = as-inited). */
-  def currentEpoch(spark: SparkSession, path: String): Long =
-    SegSwap.currentEpoch(SegSwap.fsOf(spark, path), path)
+  protected def tables(p: Params): Seq[Table] = Seq(
+    Table("tf", p.ddl("tf"), hashBucket(p.b, col("doc_id"))),
+    Table("dfreq", p.ddl("dfreq"), hashBucket(p.b, col("token"))),
+    Table("docs", p.ddl("docs"), hashBucket(p.b, col("doc_id"))))
 
   /** The TF-IDF rows AS OF `epoch` — same columns and arithmetic as
     * [[tfidf]], with EVERY input (tf, dfreq, and the corpus size N in
@@ -74,46 +46,12 @@ object TfidfStore {
     * the retention horizon, or for as long as a pin covers it
     * ([[SegSwap.pinEpoch]]). */
   def tfidfAt(spark: SparkSession, path: String, epoch: Long): DataFrame = {
-    val r = SegSwap.readParamsRowAt(spark, path,
-      Seq("b", "n", "idDdl", "tfDdl", "dfreqDdl"), "tfidfstore", epoch)
-    val p = Params(r.getInt(0), r.getLong(1), r.getString(2),
-      Map("tf" -> r.getString(3), "dfreq" -> r.getString(4)))
-    val tf = SegSwap.snapshotTable(spark, path, "tf",
-      StructType.fromDDL(p.ddl("tf")), epoch)
-    val dfreq = SegSwap.snapshotTable(spark, path, "dfreq",
-      StructType.fromDDL(p.ddl("dfreq")), epoch)
-    tf.drop("_b").join(dfreq.drop("_b"), "token")
+    val p = paramsAt(spark, path, epoch)
+    readTableAt(spark, path, p, "tf", epoch).drop("_b")
+      .join(readTableAt(spark, path, p, "dfreq", epoch).drop("_b"), "token")
       .select(col("doc_id"), col("token"), col("tf"), col("df"),
-        (col("tf") * log(lit(p.n.toDouble) / col("df"))).as("tfidf"))
+        (col("tf") * log(lit(p.long("n").toDouble) / col("df"))).as("tfidf"))
   }
-
-  /** Publish the store AS OF `epoch` to `dst` as a fresh standalone
-    * TfidfStore (readable, continuable, no inherited history) —
-    * [[SegSwap.exportSnapshot]] with this store's table set. The
-    * model-versioning release step: freeze a corpus-statistics epoch
-    * for a serving/reproducibility path while this store keeps moving. */
-  def exportAt(spark: SparkSession, path: String, epoch: Long,
-      dst: String): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.exportSnapshot(spark, path, epoch, dst,
-      p.ddl.keys.toSeq, dirTables = Seq("params"))
-  }
-
-  /** Roll every table of the store (and params) back to `epoch` as one
-    * journaled revert — [[SegSwap.rollbackTo]] with this store's table
-    * set (see [[DupSpansStore.rollbackTo]], the family exemplar, for
-    * the contract: history-preserving, redo-able, delta-proportional,
-    * loud past the retention horizon). */
-  def rollbackTo(spark: SparkSession, path: String, epoch: Long): Unit = {
-    val p = readParams(spark, path)
-    SegSwap.rollbackTo(spark, path, epoch,
-      p.ddl.toSeq.map { case (n, d) => n -> StructType.fromDDL(d) },
-      dirTables = Seq("params"))
-  }
-
-  private def inBuckets(bs: Set[Int]): Column =
-    if (bs.isEmpty) lit(false)
-    else col("_b").isin(bs.toSeq.map(Integer.valueOf): _*)
 
   /** Tokenize + count once, lay tf/dfreq out bucket-partitioned
     * (params — carrying N, the completeness marker — last). The
@@ -129,11 +67,11 @@ object TfidfStore {
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
     val intern = new IncrMat.Tracker
     val tf = intern.mat(IncrementalTfidf.tfOf(docs, idCol, textCol)
-      .withColumn("_b", docBucket(col("doc_id"), nBuckets)))
+      .withColumn("_b", hashBucket(nBuckets, col("doc_id"))))
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      .withColumn("_b", tokBucket(col("token"), nBuckets))
+      .withColumn("_b", hashBucket(nBuckets, col("token")))
     val members = docs.select(col(idCol).as("doc_id")).distinct()
-      .withColumn("_b", docBucket(col("doc_id"), nBuckets))
+      .withColumn("_b", hashBucket(nBuckets, col("doc_id")))
     var ddl = Map.empty[String, String]
     // tf is a materialized leaf, so the three writes are independent
     // scans over cached blocks / the docs source — overlap them (§2.6)
@@ -143,8 +81,11 @@ object TfidfStore {
           ddl += n -> df.schema.toDDL
           SegSwap.stageBuckets(df, s"$path/$n")
       })
-    writeParamsTo(spark, s"$path/params", Params(nBuckets, docs.count(),
-      docs.schema(idCol).dataType.sql, ddl))
+    SegSwap.writeParamsTo(spark, s"$path/params", Seq(
+      "b" -> nBuckets, "n" -> docs.count(),
+      "idDdl" -> docs.schema(idCol).dataType.sql, "tfDdl" -> ddl("tf"),
+      "dfreqDdl" -> ddl("dfreq"), "docsDdl" -> ddl("docs"),
+      "lastBatch" -> -1L))
     intern.releaseAll()
   }
 
@@ -152,11 +93,11 @@ object TfidfStore {
     * arithmetic as [[Pipeline.tfidf]]. Journal-resolved, never
     * mutating; consume before the next writer commit. */
   def tfidf(spark: SparkSession, path: String): DataFrame = {
-    val p = readParams(spark, path)
+    val p = params(spark, path)
     readTable(spark, path, p, "tf").drop("_b")
       .join(readTable(spark, path, p, "dfreq").drop("_b"), "token")
       .select(col("doc_id"), col("token"), col("tf"), col("df"),
-        (col("tf") * log(lit(p.n.toDouble) / col("df"))).as("tfidf"))
+        (col("tf") * log(lit(p.long("n").toDouble) / col("df"))).as("tfidf"))
   }
 
   /** Roll the store forward over a ±document delta
@@ -169,10 +110,6 @@ object TfidfStore {
       : StorePolicy.ContinueAdvice =
     continueImpl(spark, path, addedDocs, removedIds, idCol, textCol,
       batchId = None).get
-
-  /** The stream batch fence (−1 = never maintained by a stream). */
-  def lastBatch(spark: SparkSession, path: String): Long =
-    readParams(spark, path).lastBatch
 
   /** [[continueAt]] fenced by a stream micro-batch id — applied AT
     * MOST ONCE per `batchId` (None on a replayed batch), the fence
@@ -193,8 +130,8 @@ object TfidfStore {
    val advice = SegSwap.withWriterLease(spark, path) { lease =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.recover(spark, path)
-    val p = readParams(spark, path)
-    if (batchId.exists(_ <= p.lastBatch)) None
+    val p = params(spark, path)
+    if (batchId.exists(_ <= p.long("lastBatch"))) None
     else continueBody(spark, path, addedDocs, removedIds, idCol,
       textCol, batchId, p, lease)
    }
@@ -207,7 +144,7 @@ object TfidfStore {
       : Option[StorePolicy.ContinueAdvice] = {
     val B = p.b
     val intern = new IncrMat.Tracker
-    val added = SegSwap.castToPinned(addedDocs, idCol, p.idDdl,
+    val added = SegSwap.castToPinned(addedDocs, idCol, p.str("idDdl"),
       "tfidfstore continueAt addedDocs")
     // the delta's ids, distinct per side (a duplicate-immune removal
     // set), with their doc buckets: the tf/docs rewrite set `td` rides
@@ -216,16 +153,16 @@ object TfidfStore {
     // in a journaled bucket.
     val (ids, idSets) = intern.matStats(SegSwap.castToPinned(
         removedIds.select(col(removedIds.columns.head).as("_id")),
-        "_id", p.idDdl, "tfidfstore continueAt removedIds")
+        "_id", p.str("idDdl"), "tfidfstore continueAt removedIds")
       .withColumn("_rm", lit(true))
       .unionByName(added.select(col(idCol).as("_id"), lit(false).as("_rm")))
-      .distinct().withColumn("_b", docBucket(col("_id"), B)), Seq("_b"))
+      .distinct().withColumn("_b", hashBucket(B, col("_id"))), Seq("_b"))
     val td = idSets.head
     val rem = ids.filter(col("_rm")).select(col("_id").as("_rid"))
     val addedIds = ids.filter(!col("_rm"))
       .select(col("_id").as("doc_id"), col("_b"))
     val tfAdded = intern.mat(IncrementalTfidf.tfOf(added, idCol, textCol)
-      .withColumn("_b", docBucket(col("doc_id"), B)))
+      .withColumn("_b", hashBucket(B, col("doc_id"))))
 
     // tf rewrite: the delta ids' buckets; departing bags from ONE
     // pruned scan feeding both the rewrite and the df decrement.
@@ -259,7 +196,7 @@ object TfidfStore {
     // the touched token-bucket set (ts) rides the same job
     val (touchedRaw, touchedSets) = intern.matStats(
       dfAdd.select("token").unionByName(dfSub.select("token")).distinct()
-        .withColumn("_tkb", tokBucket(col("token"), B)), Seq("_tkb"))
+        .withColumn("_tkb", hashBucket(B, col("token"))), Seq("_tkb"))
     val touched = touchedRaw.drop("_tkb")
     val ts = touchedSets.head
     val dfreqLive = readTable(spark, path, p, "dfreq")
@@ -274,43 +211,23 @@ object TfidfStore {
     val dfreqNextT = intern.mat(dfreqLive.filter(inBuckets(ts))
       .join(touched, Seq("token"), "left_anti")
       .unionByName(mergedTouched.withColumn("_b",
-        tokBucket(col("token"), B))))
+        hashBucket(B, col("token")))))
 
-    val n2 = p.n - nOld + nNext
+    val n2 = p.long("n") - nOld + nNext
     val liveB = math.max(1,
       SegSwap.liveBuckets(SegSwap.fsOf(spark, path), path, "tf").size)
     SegSwap.commit(spark, path, Seq(
       ("tf", tfNextT, td), ("dfreq", dfreqNextT, ts),
       ("docs", docsNextT, td)),
       dirSwaps = Seq("params" -> ((dst: String) =>
-        writeParamsTo(spark, dst, p.copy(n = n2,
-          lastBatch = batchId.getOrElse(p.lastBatch))))),
+        writeParams(spark, dst, p.updated("n" -> n2,
+          "lastBatch" -> batchId.getOrElse(p.long("lastBatch")))))),
       fence = Some(lease))
     intern.releaseAll()
     Some(StorePolicy.advise("tfidfstore", td.size, liveB))
   }
 
-  /** Journaled RE-BUCKETING / COMPACTION — lazy staged frames streamed
-    * to seg_staging, destination buckets from the staged dirs, params
-    * through the journal's whole-dir entry. */
+  /** Journaled RE-BUCKETING ([[SegStore.relayout]]). */
   def rebucket(spark: SparkSession, path: String, nBuckets: Int): Unit =
-    SegSwap.withWriterLease(spark, path) { lease =>
-      val fs = SegSwap.fsOf(spark, path)
-      SegSwap.recover(spark, path)
-      val p = readParams(spark, path)
-      val p2 = p.copy(b = nBuckets)
-      val staged = Seq(
-        ("tf", docBucket(col("doc_id"), nBuckets)),
-        ("dfreq", tokBucket(col("token"), nBuckets)),
-        ("docs", docBucket(col("doc_id"), nBuckets))).map { case (t, nb) =>
-        (t, readTable(spark, path, p, t).withColumn("_b", nb),
-          SegSwap.liveBuckets(fs, path, t))
-      }
-      SegSwap.commit(spark, path, staged, dirSwaps = Seq(
-        "params" -> ((dst: String) => writeParamsTo(spark, dst, p2))),
-        fence = Some(lease), augmentFromStaging = true)
-    }
-
-  def compact(spark: SparkSession, path: String): Unit =
-    rebucket(spark, path, readParams(spark, path).b)
+    relayout(spark, path, Seq("b" -> nBuckets))
 }

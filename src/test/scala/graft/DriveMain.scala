@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scratch driver for manual verification runs (see .claude/skills/verify).
-  * Round-10 drive: the family-wide store time-travel API end-to-end on
-  * real sf0.001 documents (epochs, rollback, redo, as-of reads).
-  * Round-12 drive (appended): stream maintenance with DELETION batches
-  * plus a MID-STREAM rebucket of both durable stores over the real
-  * testdata graph — the 24/7-maintainer lifecycle story end to end. */
+/** Gate driver: runs the named [[SparkEntry]] queries over the
+  * testdata dir (`GRAFT_SF_DIR`, default sf0.001) and prints each one's
+  * row count and wall time; with `GRAFT_OUT` set, each result is also
+  * written there as parquet.
+  * `sbt "Test/runMain graft.DriveMain <query>..."` */
 object DriveMain {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: DriveMain <query>...")
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
@@ -18,244 +18,19 @@ object DriveMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.util.LogQuiet()
-    import spark.implicits._
-    import graft.operators.{TfidfStore, DedupClusterStore}
     val dir = sys.env.getOrElse("GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    if (args.nonEmpty) { // gate mode: run the named SparkEntry queries
-      args.foreach { n =>
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(n)(spark, dir)
-        val c = sys.env.get("GRAFT_OUT") match {
-          case Some(out) =>
-            df.write.mode("overwrite").parquet(s"$out/$n")
-            spark.read.parquet(s"$out/$n").count()
-          case None => df.count()
-        }
-        println(f"$n: $c rows, ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        spark.catalog.clearCache()
+    args.foreach { n =>
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(n)(spark, dir)
+      val c = sys.env.get("GRAFT_OUT") match {
+        case Some(out) =>
+          df.write.mode("overwrite").parquet(s"$out/$n")
+          spark.read.parquet(s"$out/$n").count()
+        case None => df.count()
       }
-      spark.stop(); return
+      println(f"$n: $c rows, ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      spark.catalog.clearCache()
     }
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .selectExpr("doc_id", "text")
-
-    // --- TfidfStore: epoch + rollback + redo over real documents ---
-    val tp = java.nio.file.Files.createTempDirectory("drive_tfidf").toString
-    val base = docs.filter("doc_id % 10 < 8")
-    val delta = docs.filter("doc_id % 10 >= 8")
-    TfidfStore.init(spark, tp, base, "doc_id", "text", nBuckets = 16)
-    require(TfidfStore.currentEpoch(spark, tp) == 0L, "fresh store at epoch 0")
-    def tfidfTop(p: String): Seq[(Long, String, Double)] =
-      TfidfStore.tfidf(spark, p)
-        .orderBy(org.apache.spark.sql.functions.desc("tfidf"), $"doc_id", $"token")
-        .limit(20).selectExpr("doc_id", "token", "tfidf")
-        .as[(Long, String, Double)].collect().toSeq
-    val pre = tfidfTop(tp)
-    TfidfStore.continueAt(spark, tp, delta,
-      Seq.empty[Long].toDF("doc_id"), "doc_id", "text")
-    val e1 = TfidfStore.currentEpoch(spark, tp)
-    require(e1 == 1L, s"continuation bumps epoch to 1, got $e1")
-    val post = tfidfTop(tp)
-    require(post != pre, "delta must move the top TF-IDF list")
-    TfidfStore.rollbackTo(spark, tp, 0L)
-    require(tfidfTop(tp) == pre, "rollback to 0 restores pre-delta scores")
-    TfidfStore.rollbackTo(spark, tp, 1L) // redo
-    require(tfidfTop(tp) == post, "redo to 1 restores post-delta scores")
-    println(s"tfidf store drive OK: ${pre.size} top rows, epochs 0->1->0->1")
-
-    // --- DedupClusterStore: rollback undoes a clustering shard ---
-    val cp = java.nio.file.Files.createTempDirectory("drive_clus").toString
-    DedupClusterStore.init(spark, cp, base, "doc_id", "text",
-      nBuckets = 16)
-    def clusters(p: String): Map[Long, Long] =
-      DedupClusterStore.clusters(spark, p)
-        .as[(Long, Long)].collect().toMap
-    val c0 = clusters(cp)
-    DedupClusterStore.continueAt(spark, cp, delta,
-      Seq.empty[Long].toDF("doc_id"), "doc_id", "text")
-    require(DedupClusterStore.currentEpoch(spark, cp) == 1L)
-    require(clusters(cp).size > c0.size, "delta docs join the clustering")
-    require(DedupClusterStore.clustersAt(spark, cp, 0L)
-      .as[(Long, Long)].collect().toMap == c0,
-      "the as-of read must equal the pre-delta clustering")
-    DedupClusterStore.rollbackTo(spark, cp, 0L)
-    require(clusters(cp) == c0, "rollback restores the pre-delta clustering")
-    println(s"dedup-cluster store drive OK: ${c0.size} base assignments")
-
-    // --- LmCountsStore: score against yesterday's model ---
-    val lp = java.nio.file.Files.createTempDirectory("drive_lm").toString
-    import graft.operators.LmCountsStore
-    LmCountsStore.init(spark, lp, base, "doc_id", "text", nBuckets = 16)
-    val audit = docs.limit(50)
-    def lmset(f: => org.apache.spark.sql.DataFrame) =
-      f.as[(Long, Long, Double, Int)].collect().toSet
-    val s0 = lmset(LmCountsStore.scoreAgainst(spark, lp, audit,
-      "doc_id", "text"))
-    LmCountsStore.continueAt(spark, lp, delta,
-      Seq.empty[Long].toDF("doc_id"), "doc_id", "text")
-    require(lmset(LmCountsStore.scoreAgainstAt(spark, lp, audit,
-      "doc_id", "text", epoch = 0L)) == s0,
-      "the epoch-0 model must reproduce pre-delta scores exactly")
-    println(s"lm model-versioning drive OK: ${s0.size} audit scores")
-
-    // --- KeyedUpsertStore: rollback reverts fence with rows ---
-    val up = java.nio.file.Files.createTempDirectory("drive_ups").toString
-    import graft.operators.KeyedUpsertStore
-    KeyedUpsertStore.init(spark, up,
-      docs.filter("doc_id % 10 < 8").selectExpr("doc_id as k", "text as v"),
-      "k", nBuckets = 16)
-    val r0 = KeyedUpsertStore.rows(spark, up).count()
-    require(KeyedUpsertStore.upsertBatch(spark, up,
-      docs.filter("doc_id % 10 >= 8").selectExpr("doc_id as k", "text as v"),
-      Seq.empty[Long].toDF("k"), batchId = 0L))
-    require(KeyedUpsertStore.rows(spark, up).count() > r0)
-    KeyedUpsertStore.rollbackTo(spark, up, 0L)
-    require(KeyedUpsertStore.rows(spark, up).count() == r0 &&
-      KeyedUpsertStore.lastBatch(spark, up) == -1L,
-      "rollback must revert rows and the batch fence together")
-    println(s"keyed-upsert store drive OK: $r0 base rows restored")
-
-    // --- Round 12: stream deletions + mid-stream rebucket over the
-    // real testdata graph ---
-    locally {
-      import graft.algorithms.{IncrementalPageRank, PageRank}
-      import graft.core.SegmentedStateStore
-      import graft.streaming.StreamMaintain
-      val ncust = spark.read.parquet(s"$dir/customer.parquet").count()
-      val edges1 = spark.read.parquet(s"$dir/orders.parquet")
-        .filter("o_orderkey % 5 = 0")
-        .selectExpr("o_custkey as src",
-          s"1 + (o_custkey * 7 + o_orderkey * 3) % $ncust as dst")
-        .distinct().localCheckpoint(true)
-      val rk = java.nio.file.Files.createTempDirectory("drive_srank").toString
-      val es = java.nio.file.Files.createTempDirectory("drive_sedge").toString
-      IncrementalPageRank.preserveTo(spark, rk, edges1, 0.8,
-        iterations = 2, nBuckets = 8, numPartitions = 8)
-      IncrementalPageRank.initEdgeStore(spark, es, edges1, nBuckets = 4)
-      // batch 0: rewire src%10==3 (upserts)
-      val chg1 = edges1.filter("src % 10 = 3").select("src").distinct()
-      val d1 = chg1.selectExpr("src",
-        s"1 + (src * 11 + 5) % $ncust as dst", "'U' as op")
-        .localCheckpoint(true)
-      StreamMaintain.pageRankBatch(spark, rk, es, d1, 0L, 0.8,
-        iterations = 2, numPartitions = 8)
-      // MID-STREAM lifecycle: widen both stores between batches
-      SegmentedStateStore.rebucket(spark, rk, 32)
-      graft.operators.KeyedUpsertStore.rebucket(spark, es, 16)
-      require(SegmentedStateStore.openForRead(spark, rk).appliedBatch == 0L &&
-        KeyedUpsertStore.lastBatch(spark, es) == 0L,
-        "rebucket must preserve the stream fences")
-      // batch 1: DELETE every src%10==6 source outright
-      val e2 = edges1.filter("src % 10 <> 3").unionByName(d1.drop("op"))
-        .localCheckpoint(true)
-      val d2 = e2.filter("src % 10 = 6").select("src").distinct()
-        .selectExpr("src", "cast(null as bigint) as dst", "'D' as op")
-        .localCheckpoint(true)
-      StreamMaintain.pageRankBatch(spark, rk, es, d2, 1L, 0.8,
-        iterations = 2, numPartitions = 8)
-      val e3 = e2.filter("src % 10 <> 6").localCheckpoint(true)
-      require(KeyedUpsertStore.rows(spark, es)
-        .selectExpr("src", "dst", "deg").as[(Long, Long, Long)]
-        .collect().toSet ==
-        PageRank.prepare(e3).as[(Long, Long, Long)].collect().toSet,
-        "post-deletion edge store must equal a full re-prepare")
-      // exactness vs the frame-fed chain (different bucket count)
-      val rk2 = java.nio.file.Files.createTempDirectory("drive_srank2").toString
-      IncrementalPageRank.preserveTo(spark, rk2, edges1, 0.8,
-        iterations = 2, nBuckets = 16, numPartitions = 8)
-      IncrementalPageRank.incrementalSeg(spark, rk2, e2, chg1, 0.8,
-        iterations = 2, numPartitions = 8).unpersist(blocking = false)
-      IncrementalPageRank.incrementalSeg(spark, rk2, e3,
-        d2.select("src"), 0.8, iterations = 2, numPartitions = 8)
-        .unpersist(blocking = false)
-      val got = SegmentedStateStore.openForRead(spark, rk)
-        .preserved.out.as[(Long, Double)].collect().toMap
-      val want = SegmentedStateStore.openForRead(spark, rk2)
-        .preserved.out.as[(Long, Double)].collect().toMap
-      require(got.keySet == want.keySet,
-        s"node sets diverge: ${got.size} vs ${want.size}")
-      got.keySet.foreach { k =>
-        require(math.abs(got(k) - want(k)) < 1e-12,
-          s"node $k stream=${got(k)} chain=${want(k)}")
-      }
-      println(s"stream deletion + mid-stream rebucket drive OK: " +
-        s"${got.size} ranks match the chain, edge store re-prepared clean")
-    }
-
-    // --- Round 12: the One2All maintainer (kmeansBatch) over the real
-    // embeddings table ---
-    locally {
-      import graft.algorithms.IncrementalKMeans
-      import graft.core.SegmentedStateStore
-      import graft.streaming.StreamMaintain
-      val pts = spark.read.parquet(s"$dir/embeddings.parquet")
-        .selectExpr("vec_id as id", "cast(embedding as array<double>) as vec")
-        .localCheckpoint(true)
-      val cs = java.nio.file.Files.createTempDirectory("drive_kmc").toString
-      val ps = java.nio.file.Files.createTempDirectory("drive_kmp").toString
-      IncrementalKMeans.preserveToSeg(spark, cs, pts, k = 4,
-        iterations = 3, nBuckets = 8)
-      IncrementalKMeans.initPointStore(spark, ps, pts, nBuckets = 8)
-      def cents() = SegmentedStateStore.openForRead(spark, cs)
-        .preserved.out.as[(Int, Seq[Double], Long)].collect()
-        .map(t => t._1 -> ((t._2, t._3))).toMap
-      val c0 = cents()
-      // batch 0: re-vector ids % 50 == 3; batch 1: DELETE ids % 50 == 7
-      val d1 = pts.filter("id % 50 = 3")
-        .selectExpr("id", "transform(vec, x -> x * 0.5 + 1.0) as vec",
-          "'U' as op").localCheckpoint(true)
-      StreamMaintain.kmeansBatch(spark, cs, ps, d1, 0L, iterations = 2)
-      val c1 = cents()
-      require(c1 != c0, "batch 0 must move at least one center")
-      val d2 = pts.filter("id % 50 = 7")
-        .selectExpr("id", "vec", "'D' as op").localCheckpoint(true)
-      StreamMaintain.kmeansBatch(spark, cs, ps, d2, 1L, iterations = 2)
-      val c2 = cents()
-      // replay of both batches: fences skip, centers unchanged
-      StreamMaintain.kmeansBatch(spark, cs, ps, d1, 0L, iterations = 2)
-      StreamMaintain.kmeansBatch(spark, cs, ps, d2, 1L, iterations = 2)
-      require(cents() == c2, "replayed kmeans batches mutated the centers")
-      // the point store holds exactly the post-deletion point set, and
-      // every surviving point is accounted for in the center counts
-      val stored = KeyedUpsertStore.rows(spark, ps).count()
-      val wantN = pts.filter("id % 50 <> 7").count()
-      require(stored == wantN, s"point store $stored != expected $wantN")
-      require(c2.values.map(_._2).sum == wantN,
-        s"center counts ${c2.values.map(_._2).sum} != surviving points $wantN")
-      println(s"kmeans stream maintainer drive OK: $wantN points, " +
-        s"${c2.size} centers, fences exact across replay")
-    }
-
-    // --- GRAW multimodal: pack real bytes, decode them back ---
-    import org.apache.spark.sql.functions._
-    import graft.operators.Multimodal
-    val px = docs.limit(64).select(col("doc_id"),
-      transform(sequence(lit(0), lit(8 * 8 * 3 - 1)),
-        i => pmod(col("doc_id") * 131 + i * 7 + 13, lit(256)).cast("int"))
-        .as("pixels"))
-    val packed = Multimodal.packRaw(px, "doc_id", "pixels", 8, 8, 3)
-    val stats = Multimodal.rawStats(packed)
-      .selectExpr("id", "width", "height", "channels", "channel_means")
-      .as[(Long, Int, Int, Int, Array[Double])].collect()
-    require(stats.length == 64 && stats.forall { case (_, w, h, c, ms) =>
-      w == 8 && h == 8 && c == 3 && ms.length == 3 }, "graw header parse")
-    // oracle by formula: mean over pixels of channel ch
-    stats.foreach { case (id, _, _, _, ms) =>
-      for (ch <- 0 until 3) {
-        val exp = (0 until 64).map(p =>
-          ((id * 131 + (p * 3 + ch) * 7 + 13) % 256).toDouble).sum / 64
-        require(math.abs(ms(ch) - exp) < 1e-9,
-          s"graw mean mismatch id=$id ch=$ch got=${ms(ch)} exp=$exp")
-      }
-    }
-    // JVM twin equals the columnar decode
-    val one = packed.filter("id = " + stats.head._1)
-      .select("media").as[Array[Byte]].head()
-    val (jw, jh, jc, jm) = Multimodal.rawBytesToStats(one)
-    require(jw == 8 && jh == 8 && jc == 3 &&
-      jm.zip(stats.head._5).forall { case (a, b) => math.abs(a - b) < 1e-9 },
-      "graw JVM twin mismatch")
-    println(s"graw drive OK: ${stats.length} blobs decoded, means match formula")
     spark.stop()
   }
 }

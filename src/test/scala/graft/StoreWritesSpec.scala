@@ -139,4 +139,21 @@ class StoreWritesSpec extends SparkSpec {
         "SegSwap.scala" -> Seq("partitionBy(\"_b\")")),
       hits.map(_._3).mkString("\n"))
   }
+
+  test("store lifecycle ops are called only from SegStore") {
+    // rollback, export and rebucket live once, in SegStore; a store
+    // calling them itself would be a new copy of the lifecycle
+    val patterns = Seq("SegSwap.rollbackTo(", "SegSwap.exportSnapshot(",
+      "augmentFromStaging = true")
+    val files = Files.walk(Paths.get("src/main"))
+    val hits = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .toList.flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if patterns.exists(l.contains) =>
+            (f.getFileName.toString, s"$f:${i + 1}")
+        }
+      } finally files.close()
+    assert(hits.map(_._1).toSet == Set("SegStore.scala") && hits.size == 3,
+      hits.map(_._2).mkString("\n"))
+  }
 }
