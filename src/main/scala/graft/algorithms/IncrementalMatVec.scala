@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{IncrementalJob, IterConfig, IterResult, IterativeJob, PreservedState, ProjectKind}
+import graft.core.{IncrementalJob, IterConfig, IterResult, IterativeJob, Pins,
+  PreservedState, ProjectKind}
 
 /** Incremental Jacobi-style matrix-vector iteration x ← b + M·x — the
   * second instantiation of [[graft.core.IncrementalJob]] (A7/F28-F31;
@@ -331,14 +332,13 @@ object IncrementalMatVec {
       filterThreshold: Double = 0.0,
       numPartitions: Int = 32,
       durableStatePath: Option[String] = None,
-      segStore: Option[graft.core.SegmentedStateStore] = None): DataFrame = {
-
+      segStore: Option[graft.core.SegmentedStateStore] = None): DataFrame =
+    Pins.scope { pins =>
     val static = tiles(updatedM, blockSize)
     // (jb → tid) dependency relation for backProject: one tiny leaf,
     // computed once, released after the run (re-deriving it from the
     // cell table would pay the blocking groupBy every iteration).
-    val (tileIdx, _, releaseIdx) = org.apache.spark.sql.graft.GraftSqlShim
-      .checkpointedLeafWithHandle(static.select(col("jb").as("_tjb"), col("tid")))
+    val tileIdx = pins(static.select(col("jb").as("_tjb"), col("tid")))
 
     val job = buildBlockedJob(static, b, preserved, changedTiles, blockSize,
       backProjectFn = moved => moved
@@ -349,9 +349,7 @@ object IncrementalMatVec {
       numPartitions = numPartitions, durableStatePath = durableStatePath,
       segStore = segStore, segStoreBatchId = None, staticSource = None)
 
-    val out = IncrementalJob.finish(job.run())
-    releaseIdx()
-    out
+    IncrementalJob.finish(job.run())
   }
 
   /** STORE-FED BLOCKED continuation — the ONE2MUL member of the

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Pins
+
 /** Iterative KMeans (A2/A3, reference `IterKmeans.java`: assign map
   * `:288-407`, recenter reduce `:409-490`, ONE2ALL projector `:492-539`).
   *
@@ -177,14 +179,9 @@ object KMeans {
     * write. Fixed iteration count, no convergence check — naive.
     *
     * Returns (cid, cvec, n) with `n` the final assignment sizes. */
-  def runNaive(points: DataFrame, k: Int, iterations: Int): DataFrame = {
+  def runNaive(points: DataFrame, k: Int, iterations: Int): DataFrame =
+    Pins.scope { pins =>
     import org.apache.spark.sql.expressions.Window
-    val shim = org.apache.spark.sql.graft.GraftSqlShim
-    val releases = scala.collection.mutable.ListBuffer.empty[() => Unit]
-    def mat(df: DataFrame): DataFrame = {
-      val (leaf, _, rel) = shim.checkpointedLeafWithHandle(df)
-      releases += rel; leaf
-    }
     val pts = points
       .select(col("id").cast("long"), col("vec").cast("array<double>").as("vec"))
     // Pinned init: k lowest-id points, center ids 0..k-1 (same as run).
@@ -192,7 +189,7 @@ object KMeans {
     // partition `orderBy.limit` produces — an unpartitioned rank window
     // here would spray WindowExec's single-partition warning (and Spark
     // 4's EliminateWindowPartitions folds away constant partition specs).
-    var centers = mat {
+    var centers = pins {
       val initRows = pts.orderBy("id").limit(k)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("cid",
@@ -210,7 +207,7 @@ object KMeans {
         zip_with(col("vec"), col("cvec"), (a, b) => (a - b) * (a - b)),
         lit(0.0), (acc, v) => acc + v)
       val w = Window.partitionBy("id").orderBy(col("dist"), col("cid"))
-      val assigned = mat(pts.crossJoin(broadcast(centers))
+      val assigned = pins(pts.crossJoin(broadcast(centers))
         .withColumn("dist", dist)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
@@ -222,7 +219,7 @@ object KMeans {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s("m")).as("mvec"))
       // A cluster that attracted no points keeps its previous center.
-      centers = mat(centers.join(means, Seq("cid"), "left")
+      centers = pins(centers.join(means, Seq("cid"), "left")
         .select(col("cid"), coalesce(col("mvec"), col("cvec")).as("cvec")))
     }
     val counts = lastAssign.groupBy("cid").agg(count(lit(1)).as("n"))
@@ -232,7 +229,6 @@ object KMeans {
       .select(col("cid"), col("cvec"), coalesce(col("n"), lit(0L)).as("n"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    releases.foreach(_.apply())
     out
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{IterConfig, IterResult, IterativeJob, ProjectKind}
+import graft.core.{IterConfig, IterResult, IterativeJob, Pins, ProjectKind}
 
 /** Iterative (blocked) matrix–vector multiplication, GIM-V style (A4,
   * reference `MatrixVector.java`: blocking job `:93-147`, multiply map
@@ -84,19 +84,13 @@ object MatrixVector {
     * global value, and each round's vector is materialized like the
     * reference's per-job HDFS write. Differential oracle for [[run]]. */
   def runNaive(m: DataFrame, x0: DataFrame, iterations: Int,
-      normalize: Boolean = true): DataFrame = {
-    val shim = org.apache.spark.sql.graft.GraftSqlShim
-    val releases = scala.collection.mutable.ListBuffer.empty[() => Unit]
-    def mat(df: DataFrame): DataFrame = {
-      val (leaf, _, rel) = shim.checkpointedLeafWithHandle(df)
-      releases += rel; leaf
-    }
-    var x = mat(x0.select(col("j").cast("long"), col("x").cast("double")))
+      normalize: Boolean = true): DataFrame = Pins.scope { pins =>
+    var x = pins(x0.select(col("j").cast("long"), col("x").cast("double")))
     for (_ <- 1 to iterations) {
       val mm = m.select(col("i").cast("long"), col("j").cast("long"),
         col("v").cast("double")) // re-derived every round, like re-running the job chain
       val y = multiply(mm, x)
-      x = mat(if (normalize) {
+      x = pins(if (normalize) {
         val norm = y.agg(sum(abs(col("x"))).as("_nrm"))
         y.crossJoin(broadcast(norm))
           .select(col("j"), (col("x") / col("_nrm")).as("x"))
@@ -106,7 +100,6 @@ object MatrixVector {
     // per-iteration leaves (raw checkpoint blocks clearCache can't see)
     val out = x.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    releases.foreach(_.apply())
     out
   }
 

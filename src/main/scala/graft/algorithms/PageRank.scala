@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{IterConfig, IterResult, IterativeJob, ProjectKind}
+import graft.core.{IterConfig, IterResult, IterativeJob, Pins, ProjectKind}
 
 /** Iterative PageRank, the reference's flagship workload (A1,
   * `ExampleDriver.java:96`; map `IterPageRank.java:137-169`, reduce
@@ -113,9 +113,8 @@ object PageRank {
     * DataFrame via localCheckpoint only. Exists as the perf/semantics
     * oracle for [[run]] (the reference ships `naivepagerank` for exactly
     * this purpose). */
-  def runNaive(edges: DataFrame, damping: Double, iterations: Int): DataFrame = {
-    val shim = org.apache.spark.sql.graft.GraftSqlShim
-    val releases = scala.collection.mutable.ListBuffer.empty[() => Unit]
+  def runNaive(edges: DataFrame, damping: Double, iterations: Int): DataFrame =
+    Pins.scope { pins =>
     var ranks = nodes(edges).withColumn("rank", lit(1.0))
     for (_ <- 1 to iterations) {
       val static = prepare(edges) // recomputed every iteration, like re-running the MR job chain
@@ -123,18 +122,15 @@ object PageRank {
       val contribs = static.join(ranks, static("src") === ranks("node"))
         .select(static("dst"), (ranks("rank") / static("deg") * damping).as("c"))
         .groupBy("dst").agg(sum("c").as("c"))
-      val (leaf, _, rel) = shim.checkpointedLeafWithHandle(
+      ranks = pins(
         base.join(contribs, base("node") === contribs("dst"), "left")
           .select(base("node"),
             (lit(1.0 - damping) + coalesce(col("c"), lit(0.0))).as("rank")))
-      releases += rel
-      ranks = leaf
     }
     // final ranks into a catalog-visible cache; per-iteration checkpoint
     // leaves (invisible to clearCache) are then freed on the spot
     val out = ranks.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    releases.foreach(_.apply())
     out
   }
 }

@@ -2,8 +2,11 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.types.StructField
 import org.apache.spark.storage.StorageLevel
+
+import graft.operators.SegStore
 
 /** Preserved state of a converged iterative run (the paper's "MRBGraph";
   * reference `IFile.PreserveFile`, `IFile.java:478-800`, written by
@@ -258,7 +261,7 @@ final class IncrementalJob(
     // a concurrent caller sharing the SparkSession on another thread
     // never does — the session-wide mutation (and its newSession()
     // caveat) is gone (round-11 residual #4).
-    try org.apache.spark.sql.graft.GraftSqlShim.withConfOverrides(spark,
+    try GraftSqlShim.withConfOverrides(spark,
       Map("spark.sql.analyzer.failAmbiguousSelfJoin" -> "false"))(runLoop(n))
     finally {
       // store mode: the commit released the lease on success; this
@@ -268,30 +271,21 @@ final class IncrementalJob(
   }
 
   private val debugTiming = IncrementalJob.timingEnabled
-  private def timed[T](label: String)(f: => T): T =
-    if (!debugTiming) f else {
-      val t0 = System.nanoTime(); val r = f
-      val rows = r match {
-        case (_, n: Long) => s" rows=$n"
-        case (_, n: Long, _) => s" rows=$n"
-        case (_, n: Long, _, _) => s" rows=$n"
-        case _            => ""
-      }
-      System.err.println(f"[incr] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s$rows"); r
-    }
+  private def timed[T](label: => String)(f: => T): T =
+    IncrementalJob.timed("[incr]")(label)(f)
 
   /** Materialize `df` as a lineage-truncated leaf with real (cached-
-    * block-derived) statistics; returns (leaf, rowCount, release).
+    * block-derived) statistics, plus the distinct values of the INT
+    * columns named in `sets` from the same job.
     *
     * Plain `localCheckpoint` bakes `originStats` from the *optimized
     * plan's* estimate; in a loop whose frames feed each other (frontier ←
     * affected ← kvs/out ← frontier …) those estimated `sizeInBytes`
     * products compound geometrically across iterations until the BigInt
     * arithmetic inside Catalyst's stats visitor dominates the wall clock
-    * (digit count doubles per round).
-    * [[org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle]]
-    * checkpoints the plan's own InternalRow RDD and attaches explicit
-    * statistics from the cached block sizes: one cached copy, one job,
+    * (digit count doubles per round). [[GraftSqlShim.pin]] checkpoints
+    * the plan's own InternalRow RDD and attaches explicit statistics
+    * from the cached block sizes: one cached copy, one job,
     * constant-size stats. The release thunk unpersists the raw-RDD
     * blocks — which `spark.catalog.clearCache()` CANNOT see — so the
     * loop frees superseded state deterministically instead of leaving
@@ -304,13 +298,14 @@ final class IncrementalJob(
     * executor loss mid-loop can then recompute from files, where
     * `localCheckpoint` blocks are non-replicated and die with their
     * executor. Scratch frames (frontier/affected/fresh — recomputable
-    * from the stores) never hit the durable path. A durable segment's
-    * release DELETES its directory, so retiring/compacting segments
-    * cleans dead dirs; the final manifest's dirs are kept by
-    * [[IncrResult.release]] (they are the durable artifact). */
+    * from the stores, and the only ones that ask for `sets`) never hit
+    * the durable path. A durable segment's release DELETES its
+    * directory, so retiring/compacting segments cleans dead dirs; the
+    * final manifest's dirs are kept by [[IncrResult.release]] (they are
+    * the durable artifact). */
   private var segCounter = 0L
-  private def materialize(df: DataFrame,
-      durable: Boolean = false): (DataFrame, Long, () => Unit) =
+  private def materialize(df: DataFrame, durable: Boolean = false,
+      sets: Seq[String] = Nil): GraftSqlShim.Pinned =
     (if (segStore.isDefined) None else durableStatePath) match {
       case Some(dir) if durable =>
         val path = s"$dir/seg-$segCounter"
@@ -323,22 +318,9 @@ final class IncrementalJob(
             .delete(new org.apache.hadoop.fs.Path(path), true)
           ()
         }
-        (back, back.count(), release)
-      case _ =>
-        org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle(df)
+        GraftSqlShim.Pinned(back, back.count(), release, Nil, Nil)
+      case _ => GraftSqlShim.pin(df, sets)
     }
-
-  /** [[materialize]] for SCRATCH frames that also need small distinct-
-    * int column sets (bucket ids): the sets come out of the SAME job
-    * that materializes the leaf
-    * ([[org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithStats]])
-    * instead of one `select(bucket).distinct().collect()` job per set
-    * per iteration (guide §1.2 — in these driver loops the job count,
-    * not the byte count, is the cost). Scratch frames never take the
-    * durable-parquet path, so this is always the shim. */
-  private def materializeStats(df: DataFrame, intCols: Seq[String])
-      : (DataFrame, Long, () => Unit, Seq[Set[Int]]) =
-    org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithStats(df, intCols)
 
   /** The in-task path's gate: `(estimated state bytes, bound)` when
     * this continuation may run in one task — store mode, One2One
@@ -350,7 +332,6 @@ final class IncrementalJob(
     * when that is lower. The caller compares the two. */
   private def inTaskEstimate(st: SegmentedStateStore)
       : Option[(Option[BigInt], Long)] = {
-    import org.apache.spark.sql.graft.GraftSqlShim
     val (kvs, out) = (st.kvs, st.out)
     val threshold = GraftSqlShim.broadcastThreshold
     val eligible = kernel.isDefined && projectKind == ProjectKind.One2One &&
@@ -400,9 +381,10 @@ final class IncrementalJob(
     val (nKvs, nOut) = (kvsFields.size, outFields.size)
     val emitted = input.mapPartitions(it =>
       InTaskLoop.run(InTaskLoop.load(it), k, bucket, theta, maxIter, nKvs, nOut))
-    val (leaf, _, rel, sets) = timed("in-task loop")(
-      materializeStats(spark.createDataFrame(emitted,
-        InTaskLoop.wideSchema(kvsFields, outFields)), Seq("_kb", "_ob")))
+    val loop = timed("in-task loop")(
+      materialize(spark.createDataFrame(emitted,
+        InTaskLoop.wideSchema(kvsFields, outFields)), sets = Seq("_kb", "_ob")))
+    val (leaf, sets) = (loop.leaf, loop.sets)
     try {
       val meta = leaf.filter(col("_t") === InTaskLoop.Meta)
         .select("_iters", "_fs").head()
@@ -425,7 +407,7 @@ final class IncrementalJob(
       }
       IncrResult(st.out.drop("_b"), st.kvs.drop("_b"), meta.getInt(0),
         () => (), advice, meta.getSeq[Long](1), inTask = true)
-    } finally rel()
+    } finally loop.release()
   }
 
   private def runDistributed(nCap: Int): IncrResult = {
@@ -549,9 +531,9 @@ final class IncrementalJob(
         val base = if (isKvs) st.kvs else st.out
         List(Seg(base, (0 until B).toSet, () => (), base = true))
       case None => timed(label) {
-        val (leaf, _, rel) = materialize(df.repartition(n, col(k2Col))
+        val p = materialize(df.repartition(n, col(k2Col))
           .withColumn("_b", bucketOf(col(k2Col))), durable = true)
-        List(Seg(leaf, (0 until B).toSet, rel))
+        List(Seg(p.leaf, (0 until B).toSet, p.release))
       }
     }
     def unionSegs(segs: List[Seg]): DataFrame = segs.map(_.df).reduce(_ unionByName _)
@@ -597,8 +579,8 @@ final class IncrementalJob(
     // released wholesale.
     var scratchPrev = List.empty[() => Unit]
     var scratchCur = List.empty[() => Unit]
-    def scratchLeaf(m: (DataFrame, Long, () => Unit)): (DataFrame, Long) = {
-      scratchCur ::= m._3; (m._1, m._2)
+    def scratchLeaf(p: GraftSqlShim.Pinned): (DataFrame, Long) = {
+      scratchCur ::= p.release; (p.leaf, p.rows)
     }
 
     // binds the frontier to the distinct `sk` keys of `keys`: its bucket
@@ -615,11 +597,11 @@ final class IncrementalJob(
         withFb.withColumn("_fsb", ss.bucketOf(col(skCol)))).getOrElse(withFb)
       val statCols = (if (wantFb) Seq("_fb") else Nil) ++
         (if (wantSb) Seq("_fsb") else Nil)
-      val (leaf, s0, rel, sets) = materializeStats(withSb, statCols)
-      scratchCur ::= rel
-      val segBs = if (wantFb) Some(sets.head) else None
-      val staticBs = if (wantSb) Some(sets.last) else None
-      bindFrontier(leaf.select(col(skCol)), s0, staticBs, segBs)
+      val p = materialize(withSb, sets = statCols)
+      scratchCur ::= p.release
+      val segBs = if (wantFb) Some(p.sets.head) else None
+      val staticBs = if (wantSb) Some(p.sets.last) else None
+      bindFrontier(p.leaf.select(col(skCol)), p.rows, staticBs, segBs)
     }
     bindKeys(initialFrontier)
     // θ>0 only: each round's brand-new sources (see the class doc) as
@@ -635,11 +617,12 @@ final class IncrementalJob(
     // Computed at most once (first use), reused, and released at loop
     // end — the static side is fixed for the whole run.
     var allSourcesRelease: () => Unit = () => ()
-    lazy val allSources: (DataFrame, Long) = timed("all-sources leaf") {
+    lazy val allSources: (DataFrame, Long) = {
       val allStatic = staticSource.map(_.all).getOrElse(staticCached.get)
-      val (df, rows, rel) = materialize(allStatic.select(col(skCol)).distinct())
-      allSourcesRelease = rel
-      (df, rows)
+      val p = timed("all-sources leaf")(
+        materialize(allStatic.select(col(skCol)).distinct()))
+      allSourcesRelease = p.release
+      (p.leaf, p.rows)
     }
 
     /** One2One: the frontier keys' own out rows — the only dynamic
@@ -655,8 +638,7 @@ final class IncrementalJob(
           val fb = frontierSegBs.getOrElse(
             frontier.select(bucketOf(col(skCol)).as("_b"))
               .distinct().collect().map(_.getInt(0)).toSet)
-          scanTouched(outSegs, fb,
-            col("_b").isin(fb.toSeq.map(Integer.valueOf): _*)).drop("_b")
+          scanTouched(outSegs, fb, SegStore.inBuckets(fb)).drop("_b")
         }
         Some(outScan.join(fk, col(k2Col) === col("_fk")).drop("_fk"))
       }
@@ -732,14 +714,14 @@ final class IncrementalJob(
       val faPlan = if (!trackNew) faPlan1 else
         faPlan1.withColumn("_nsb", when(col("_tag") === "n", col("_b")))
       val (faRaw, faSets) = timed(s"iter $i fresh+affected") {
-        val (leaf, _, rel, sets) = materializeStats(faPlan, "_b" +:
+        val p = materialize(faPlan, sets = "_b" +:
           ((if (wantFsb) Seq("_fsb") else Nil) ++ (if (trackNew) Seq("_nsb") else Nil)))
-        if (trackNew && sets.last.nonEmpty) {
-          newSources ::= leaf.filter(col("_tag") === "n")
+        if (trackNew && p.sets.last.nonEmpty) {
+          newSources ::= p.leaf.filter(col("_tag") === "n")
             .select(col(k2Col).as(skCol))
-          newSourcesRelease ::= rel
-        } else scratchCur ::= rel
-        (leaf, sets)
+          newSourcesRelease ::= p.release
+        } else scratchCur ::= p.release
+        (p.leaf, p.sets)
       }
       val fa = faRaw.drop("_fsb", "_nsb")
       val faTouched = faSets.head
@@ -747,8 +729,8 @@ final class IncrementalJob(
       val fresh = fa.filter(col("_tag") === "f").drop("_tag")
       // affected keys as a leaf (they seed 3 joins and the next
       // frontier), counted by the materialization itself
-      val (affected, affectedSize) = timed(s"iter $i affected")(
-        scratchLeaf(materialize(fa.select(col(k2Col).as("_aff")).distinct())))
+      val (affected, affectedSize) = scratchLeaf(timed(s"iter $i affected")(
+        materialize(fa.select(col(k2Col).as("_aff")).distinct())))
       if (affectedSize == 0) {
         // nothing to merge or re-reduce: the change is fully absorbed
         frontierSize = 0
@@ -758,7 +740,7 @@ final class IncrementalJob(
         val touched = faTouched
         cumTouchedKvs ++= touched
         cumTouchedOut ++= touched
-        val isTouched = col("_b").isin(touched.toSeq.map(Integer.valueOf): _*)
+        val isTouched = SegStore.inBuckets(touched)
 
         // MRBGraph merge: copy ONLY touched-bucket rows into a new dirty
         // segment, dropping frontier sources' old contributions and
@@ -772,12 +754,12 @@ final class IncrementalJob(
         // every round). The exchange moves only the touched rows and
         // leaves them co-located by key for the next iteration's probes.
         val dirtyKvs = {
-          val (leaf, _, rel) = timed(s"iter $i kvs merge (${touched.size}/$B buckets)")(
+          val p = timed(s"iter $i kvs merge (${touched.size}/$B buckets)")(
             materialize(scanTouched(kvsSegs, touched, isTouched)
               .join(fk, col(skCol) === col("_fk"), "left_anti")
               .unionByName(fresh)
               .repartition(n, col(k2Col)), durable = true))
-          Seg(leaf, touched, rel)
+          Seg(p.leaf, touched, p.release)
         }
         kvsSegs = dropTouched(kvsSegs, touched, isTouched) :+ dirtyKvs
 
@@ -807,12 +789,12 @@ final class IncrementalJob(
           pinK2(reduce(affectedForReduce, kvsAffected))
             .withColumn("_b", bucketOf(col(k2Col)))
         val dirtyOut = {
-          val (leaf, _, rel) = timed(s"iter $i reduce+out (${touched.size}/$B buckets)")(
+          val p = timed(s"iter $i reduce+out (${touched.size}/$B buckets)")(
             materialize(scanTouched(outSegs, touched, isTouched)
               .join(aff, col(k2Col) === col("_aff"), "left_anti")
               .unionByName(newOutPlan)
               .repartition(n, col(k2Col)), durable = true))
-          Seg(leaf, touched, rel)
+          Seg(p.leaf, touched, p.release)
         }
 
         // F30 change-propagation filter — computed BEFORE the out store
@@ -842,13 +824,11 @@ final class IncrementalJob(
               val bpPlan = staticSource.map(ss =>
                 bp.withColumn("_fsb", ss.bucketOf(col(skCol)))).getOrElse(bp)
               val statCols = if (staticSource.isDefined) Seq("_fsb") else Nil
-              val (f3, s3, bpSets) = timed(s"iter $i backproject") {
-                val (leaf, rows, rel, sets) = materializeStats(bpPlan, statCols)
-                scratchCur ::= rel
-                (leaf.select(col(skCol)), rows, sets)
-              }
-              bindFrontier(f3, s3,
-                if (staticSource.isDefined) Some(bpSets.head) else None, None)
+              val p = timed(s"iter $i backproject")(
+                materialize(bpPlan, sets = statCols))
+              scratchCur ::= p.release
+              bindFrontier(p.leaf.select(col(skCol)), p.rows,
+                if (staticSource.isDefined) Some(p.sets.head) else None, None)
             case ProjectKind.One2All | ProjectKind.One2Mul =>
               frontierSize = 0 // nothing moved; frontier content unused
             case _ =>
@@ -867,8 +847,8 @@ final class IncrementalJob(
             .select(col(k2Col).as("_ok"), struct(col("*")).as("_old"))
           val neu = newOut.drop("_b")
             .select(col(k2Col), struct(col("*")).as("_new"))
-          val (f2, s2) = timed(s"iter $i frontier")(
-            scratchLeaf(materialize(old.join(neu, col("_ok") === col(k2Col))
+          val (f2, s2) = scratchLeaf(timed(s"iter $i frontier")(
+            materialize(old.join(neu, col("_ok") === col(k2Col))
               .filter(distance(col("_old"), col("_new")) >= filterThreshold)
               .select(col(k2Col))
               .distinct())))
@@ -891,13 +871,13 @@ final class IncrementalJob(
           def compact(segs: List[Seg], label: String): List[Seg] = {
             val (baseSegs, dirty) = segs.partition(_.base)
             if (dirty.length <= 1) segs else {
-              val (leaf, _, rel) = timed(label)(
+              val p = timed(label)(
                 materialize(unionSegs(dirty).repartition(n, col(k2Col)),
                   durable = true))
               dirty.foreach(_.release())
               val bs = if (baseSegs.isEmpty) (0 until B).toSet
                 else dirty.flatMap(_.buckets).toSet
-              baseSegs :+ Seg(leaf, bs, rel)
+              baseSegs :+ Seg(p.leaf, bs, p.release)
             }
           }
           kvsSegs = compact(kvsSegs, s"iter $i compact kvs")
@@ -945,27 +925,26 @@ final class IncrementalJob(
         .select(col(k2Col) +:
           payloadCols.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
       // the touched set rides the refresh materialization job
-      val (fa, faRows, relFa, faSets) = timed("exit kvs refresh")(
-        materializeStats(freshPlan.withColumn("_tag", lit("f"))
+      val fa = timed("exit kvs refresh")(
+        materialize(freshPlan.withColumn("_tag", lit("f"))
           .unionByName(oldKeyRows.withColumn("_tag", lit("a")))
-          .withColumn("_b", bucketOf(col(k2Col))), Seq("_b")))
-      if (faRows > 0) {
-        val fresh = fa.filter(col("_tag") === "f").drop("_tag")
-        val touched = faSets.head
+          .withColumn("_b", bucketOf(col(k2Col))), sets = Seq("_b")))
+      if (fa.rows > 0) {
+        val fresh = fa.leaf.filter(col("_tag") === "f").drop("_tag")
+        val touched = fa.sets.head
         cumTouchedKvs ++= touched // kvs ONLY — out is final and unstaged here
-        val isTouched = col("_b").isin(touched.toSeq.map(Integer.valueOf): _*)
+        val isTouched = SegStore.inBuckets(touched)
         val dirtyKvs = {
-          val (leaf, _, rel) = timed(
-            s"exit kvs merge (${touched.size}/$B buckets)")(
+          val p = timed(s"exit kvs merge (${touched.size}/$B buckets)")(
             materialize(scanTouched(kvsSegs, touched, isTouched)
               .join(fk, col(skCol) === col("_fk"), "left_anti")
               .unionByName(fresh)
               .repartition(n, col(k2Col)), durable = true))
-          Seg(leaf, touched, rel)
+          Seg(p.leaf, touched, p.release)
         }
         kvsSegs = dropTouched(kvsSegs, touched, isTouched) :+ dirtyKvs
       }
-      relFa()
+      fa.release()
     }
     staticCached.foreach(_.unpersist(blocking = false))
     // Remaining scratch (last two generations + the One2All/One2Mul
@@ -1047,6 +1026,23 @@ object IncrementalJob {
   private[graft] def timingEnabled: Boolean =
     sys.env.contains("GRAFT_TIMING") ||
       sys.props.get("graft.timing").exists(_ != "0")
+
+  /** The one per-phase timing line, `$prefix $label: N.NN s` on stderr
+    * when [[timingEnabled]] — plus ` rows=N` when the phase returns a
+    * pinned frame, whose row count the pin job already computed. The
+    * label is by name: building it (row counts included) costs nothing
+    * on the timing-disabled path. */
+  private[graft] def timed[T](prefix: String)(label: => String)(f: => T): T =
+    if (!timingEnabled) f else {
+      val t0 = System.nanoTime(); val r = f
+      val rows = r match {
+        case p: GraftSqlShim.Pinned => s" rows=${p.rows}"
+        case _ => ""
+      }
+      System.err.println(
+        f"$prefix $label: ${(System.nanoTime() - t0) / 1e9}%.2f s$rows")
+      r
+    }
 
   /** Standard consume-then-release: copy the result's `out` into a
     * catalog-visible cache (`Dataset.persist` — freed by the session's

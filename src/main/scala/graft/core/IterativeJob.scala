@@ -131,8 +131,8 @@ final class IterativeJob(
         (config.checkpointInterval > 0 && i % config.checkpointInterval == 0)
       if (eagerPoint) {
         val t0 = System.nanoTime()
-        val (materialized, _, release) =
-          org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle(next)
+        val pinned = org.apache.spark.sql.graft.GraftSqlShim.pin(next)
+        val materialized = pinned.leaf
         if (IncrementalJob.timingEnabled)
           System.err.println(
             f"[iter] checkpoint i=$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -144,7 +144,7 @@ final class IterativeJob(
         pendingLazy = Nil
         if (initCache ne null) { initCache.unpersist(blocking = false); initCache = null }
         materializedRelease()
-        materializedRelease = release
+        materializedRelease = pinned.release
         dyn = materialized
       } else {
         val lazyNext = next.persist(StorageLevel.MEMORY_AND_DISK)

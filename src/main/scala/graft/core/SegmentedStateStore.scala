@@ -149,7 +149,7 @@ final class SegmentedStateStore private[core] (
     def side(e: Long, tag: String): DataFrame = {
       val f0 = SegSwap.snapshotTable(spark, path, "out", schema, e)
       val f = if (changed.isEmpty) f0.limit(0)
-        else f0.filter(col("_b").isin(changed.toSeq.map(Integer.valueOf): _*))
+        else f0.filter(SegStore.inBuckets(changed))
       f.select(col(k2Col) +: valueCols.map(c => col(c).as(s"${c}_$tag")): _*)
     }
     val joined = side(a, "before").join(side(b, "after"), Seq(k2Col), "full_outer")

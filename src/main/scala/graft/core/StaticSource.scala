@@ -74,12 +74,10 @@ object StaticSource {
       chgKeys.select(col(chgKeys.columns.head).cast(kt).as("_ck")).distinct()
     private val ck =
       if (chgRows <= broadcastMaxRows) broadcast(ckRaw) else ckRaw
-    def pruned(bs: Set[Int]): DataFrame = {
-      val inBs = h.bucketOf(col(keyCol))
-        .isin(bs.toSeq.map(Integer.valueOf): _*)
+    def pruned(bs: Set[Int]): DataFrame =
       h.pruned(bs).join(ck, col(keyCol) === col("_ck"), "left_anti")
-        .unionByName(patch.filter(inBs))
-    }
+        .unionByName(patch.withColumn("_b", h.bucketOf(col(keyCol)))
+          .filter(graft.operators.SegStore.inBuckets(bs)).drop("_b"))
     def all: DataFrame =
       h.all.join(ck, col(keyCol) === col("_ck"), "left_anti")
         .unionByName(patch)

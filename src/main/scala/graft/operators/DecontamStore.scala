@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.functions.TextFunctions.tokens
 
 /** SEGMENTED durable form of [[DecontamState]] — benchmark
@@ -107,12 +108,11 @@ object DecontamStore extends SegStore("decontam", "decontamstore") {
       idCol: String, textCol: String,
       evalIdCol: String, evalTextCol: String)
       : StorePolicy.ContinueAdvice = {
-   val advice = SegSwap.withWriterLease(spark, path) { lease =>
+   val advice = SegSwap.withWriterLease(spark, path)(lease => Pins.scope { pins =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.recover(spark, path)
     val p = params(spark, path)
     val B = p.b
-    val intern = new IncrMat.Tracker
 
     /** One side's touched-bucket rewrite: evict rem rows from their
       * (pruned) buckets, install the delta's fresh shingles. */
@@ -125,14 +125,14 @@ object DecontamStore extends SegStore("decontam", "decontamstore") {
         removed.select(col(removed.columns.head).as("_rid")), "_rid",
         pinDdl, s"decontamstore continueAt $what removed")
       // the touched-bucket set (td) rides the rem leaf's own job
-      val (remRaw, remSets) = intern.matStats(removedP
+      val remP = pins.pin(removedP
         .unionByName(addedP.select(col(addedIdCol).as("_rid"))).distinct()
         .withColumn("_tdb", hashBucket(B, col("_rid"))), Seq("_tdb"))
-      val rem = remRaw.drop("_tdb")
-      val td = remSets.head
+      val rem = remP.leaf.drop("_tdb")
+      val td = remP.sets.head
       if (td.isEmpty) None else {
         val live = readTable(spark, path, p, table)
-        val nextT = intern.mat(live.filter(inBuckets(td))
+        val nextT = pins(live.filter(inBuckets(td))
           .join(rem, col(keyCol) === col("_rid"), "left_anti")
           .unionByName(
             shingled(addedP, addedIdCol, addedTextCol, p.int("w"), keyCol)
@@ -149,10 +149,9 @@ object DecontamStore extends SegStore("decontam", "decontamstore") {
       SegSwap.liveBuckets(SegSwap.fsOf(spark, path), path, "shingles").size)
     if (touched.nonEmpty)
       SegSwap.commit(spark, path, touched, fence = Some(lease))
-    intern.releaseAll()
     StorePolicy.advise("decontamstore",
       touched.flatMap(_._3).toSet.size, liveB)
-   }
+   })
    advice
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.functions.TextFunctions._
 
 /** Deduplication for large text corpora: exact, MinHash+LSH, SimHash,
@@ -270,16 +271,15 @@ object Dedup {
     * hash-partitioned by id; per round one edge⨝label shuffle, one
     * label self-join, and a map-side-combining min — no driver-side
     * graph, no N² work. Each round's label leaf frees its predecessor
-    * ([[org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle]]);
-    * the returned frame is a catalog-visible cache.
+    * ([[graft.core.Pins]]); the returned frame is a catalog-visible
+    * cache.
     *
     * @param pairs (a, b) undirected edges
     * @return (id, comp) for every id appearing in `pairs`; `comp` is
     *         the minimum id of the node's component
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 25,
-      numPartitions: Int = 32): DataFrame = {
-    val shim = org.apache.spark.sql.graft.GraftSqlShim
+      numPartitions: Int = 32): DataFrame = Pins.scope { pins =>
     val tPre = System.nanoTime()
     val e = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
     // The edge table is a checkpointed LEAF, not a persist: every round's
@@ -289,8 +289,9 @@ object Dedup {
     // (the incremental path: band-table semi-join chains) costs seconds
     // of DRIVER time per round while the actual data is a few thousand
     // rows. The leaf truncates lineage to an RDD scan once.
-    val (undAll, edgeCount, releaseUndAll) = shim.checkpointedLeafWithHandle(
+    val undAll = pins.pin(
       e.unionByName(e.select(col("v").as("u"), col("u").as("v"))).distinct())
+    val edgeCount = undAll.rows
     val tEdges = System.nanoTime()
     // Size the loop's partitioning to the pair graph, bounded above by
     // numPartitions: the label loop pays its per-round cost in TASKS
@@ -301,26 +302,26 @@ object Dedup {
     // numPartitions.
     val nParts = math.max(1L, math.min(numPartitions.toLong,
       edgeCount / 65536 + 1)).toInt
-    val (und, _, releaseUnd) = shim.checkpointedLeafWithHandle(
-      undAll.repartition(nParts, col("v")))
-    releaseUndAll()
+    val und = pins(undAll.leaf.repartition(nParts, col("v")))
+    undAll.release()
     // the convergence poll (sum of labels) rides each round's
     // materialization job (guide §1.2) — one job per round, not two
-    var (labels, nodeCount, release, _, sums0) = shim.checkpointedLeafWithAgg(
+    var labelsP = pins.pin(
       und.select(col("u").as("id")).distinct()
         .withColumn("comp", col("id"))
-        .repartition(nParts, col("id")), Nil, Seq("comp"))
+        .repartition(nParts, col("id")), sums = Seq("comp"))
     if (graft.core.IncrementalJob.timingEnabled)
       System.err.println(f"[cc] edges: ${(tEdges - tPre) / 1e9}%.2f s, " +
         f"init labels: ${(System.nanoTime() - tEdges) / 1e9}%.2f s " +
         f"(edges=$edgeCount parts=$nParts)")
-    var prevSum = sums0.head
+    var prevSum = labelsP.sums.head
     var i = 0
-    var done = nodeCount == 0
+    var done = labelsP.rows == 0
     val debugTiming = graft.core.IncrementalJob.timingEnabled
     while (i < maxIterations && !done) {
       val tRound = System.nanoTime()
       i += 1
+      val labels = labelsP.leaf
       val viaNbr = und.join(labels, und("v") === labels("id"))
         .select(und("u").as("id"), col("comp"))
       // pointer jump: my label's label (left join — every comp IS a
@@ -329,22 +330,20 @@ object Dedup {
         .join(labels.select(col("id").as("_jid"), col("comp").as("_jcomp")),
           col("comp") === col("_jid"))
         .select(col("id"), col("_jcomp").as("comp"))
-      val (leaf, _, rel, _, sums) = shim.checkpointedLeafWithAgg(
+      val next = pins.pin(
         labels.unionByName(viaNbr).unionByName(jump)
-          .groupBy("id").agg(min("comp").as("comp")), Nil, Seq("comp"))
-      val s = sums.head
-      release()
-      release = rel
-      labels = leaf
+          .groupBy("id").agg(min("comp").as("comp")), sums = Seq("comp"))
+      val s = next.sums.head
+      labelsP.release()
+      labelsP = next
       if (s == prevSum) done = true else prevSum = s
       if (debugTiming)
         System.err.println(
           f"[cc] round $i: ${(System.nanoTime() - tRound) / 1e9}%.2f s done=$done")
     }
-    val out = labels.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val out = labelsP.leaf.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    release()
-    releaseUnd()
     out
   }
 

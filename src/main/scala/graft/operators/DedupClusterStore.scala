@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** SEGMENTED durable form of [[DedupClusterState]] — the remaining
   * flagship surface named by the round-8 verdict's missing-#1
   * ("q_incr_dedup_clusters' band table"): the SimHash band table and
@@ -40,11 +42,10 @@ object DedupClusterStore extends SegStore("dedupclusters", "dedupclusters") {
     * marker). */
   def init(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String, maxHamming: Int = 3,
-      maxBucket: Int = 4096, nBuckets: Int = 64): Unit = {
+      maxBucket: Int = 4096, nBuckets: Int = 64): Unit = Pins.scope { pins =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
-    val intern = new IncrMat.Tracker
-    val bands = intern.mat(Dedup.explodeBands(
+    val bands = pins(Dedup.explodeBands(
         Dedup.simhashDigests64(docs, idCol, textCol))
       .withColumn("_b", hashBucket(nBuckets, col("doc_id"))))
     val comps = Dedup.connectedComponents(
@@ -64,7 +65,6 @@ object DedupClusterStore extends SegStore("dedupclusters", "dedupclusters") {
       "bandsDdl" -> ddl("bands"), "compsDdl" -> ddl("comps"),
       "lastBatch" -> -1L))
     comps.unpersist(blocking = false)
-    intern.releaseAll()
   }
 
   /** The post-delta component labels (`id, comp`). */
@@ -135,40 +135,39 @@ object DedupClusterStore extends SegStore("dedupclusters", "dedupclusters") {
   private def continueBody(spark: SparkSession, path: String,
       addedDocs0: DataFrame, removedIds0: DataFrame, idCol: String,
       textCol: String, batchId: Option[Long], p: Params, lease: Long)
-      : Option[StorePolicy.ContinueAdvice] = {
+      : Option[StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.str("idDdl"),
       "continueAt addedDocs")
     val removedIds = SegSwap.castToPinned(removedIds0,
       removedIds0.columns.head, p.str("idDdl"), "continueAt removedIds")
     val B = p.b
-    val intern = new IncrMat.Tracker
 
     // the delta ids' bucket set (td) rides the same job that
     // materializes the rem leaf — no separate distinct().collect()
-    val (remRaw, remSets) = intern.matStats(removedIds
+    val remP = pins.pin(removedIds
       .select(col(removedIds.columns.head).as("_rid"))
       .unionByName(addedDocs.select(col(idCol).as("_rid"))).distinct()
       .withColumn("_tb", hashBucket(B, col("_rid"))), Seq("_tb"))
-    val rem = remRaw.drop("_tb")
-    val td = remSets.head
+    val rem = remP.leaf.drop("_tb")
+    val td = remP.sets.head
     // F28-analog: band ONLY the delta
-    val newBands = intern.mat(Dedup.explodeBands(
+    val newBands = pins(Dedup.explodeBands(
         Dedup.simhashDigests64(addedDocs, idCol, textCol))
       .withColumn("_b", hashBucket(B, col("doc_id"))))
     val bandsLive = readTable(spark, path, p, "bands")
-    val (bandsOldT, relOld) = IncrMat.matWithHandle(
+    val bandsOld = pins.pin(
       bandsLive.filter(inBuckets(td)))
-    val bandsNextT = intern.mat(bandsOldT
+    val bandsNextT = pins(bandsOld.leaf
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(newBands))
     // buckets whose LSH membership changed: the delta's fresh rows'
     // (band, bv) plus the departing rows' — the F30 set-valued filter
-    val changedBuckets = intern.mat(newBands.select("band", "bv")
-      .unionByName(bandsOldT
+    val changedBuckets = pins(newBands.select("band", "bv")
+      .unionByName(bandsOld.leaf
         .join(rem, col("doc_id") === col("_rid"), "left_semi")
         .select("band", "bv"))
       .distinct())
-    relOld()
+    bandsOld.release()
 
     // post-delta band view: untouched buckets from live files
     // (column-pruned scans below), touched from the staged leaf
@@ -188,7 +187,7 @@ object DedupClusterStore extends SegStore("dedupclusters", "dedupclusters") {
     val (_, affectedComps, newComps) =
       IncrementalDedup.affectedAndReconverge(postBands, changedBuckets,
         compsLive.drop("_b"), rem, p.int("maxHamming"), p.int("maxBucket"),
-        intern.mat,
+        pins(_),
         pruneBandsFor = (_, _) => {
           // affectedBuckets was fused into the affected leaf's own
           // materialization (matAffected below) — no collect job here
@@ -196,17 +195,17 @@ object DedupClusterStore extends SegStore("dedupclusters", "dedupclusters") {
             .unionByName(bandsNextT).drop("_b")
         },
         matAffected = df => {
-          val (leaf, sets) = intern.matStats(
+          val aff = pins.pin(
             df.withColumn("_ab", hashBucket(B, col("_aid"))), Seq("_ab"))
-          affectedBuckets = sets.head
-          leaf.drop("_ab")
+          affectedBuckets = aff.sets.head
+          aff.leaf.drop("_ab")
         })
 
     // comps rewrite buckets: affected ∪ removed ids' buckets hold every
     // dropped row (affected components' members + removed docs' stale
     // labels) and every installed row (newComps ids ⊆ affected)
     val ao = affectedBuckets ++ td
-    val compsNextT = intern.mat(compsLive.filter(inBuckets(ao))
+    val compsNextT = pins(compsLive.filter(inBuckets(ao))
       .join(affectedComps, col("comp") === col("_acomp"), "left_anti")
       .join(rem, col("id") === col("_rid"), "left_anti")
       .unionByName(newComps.withColumn("_b", hashBucket(B, col("id")))))
@@ -220,7 +219,6 @@ object DedupClusterStore extends SegStore("dedupclusters", "dedupclusters") {
       dirSwaps = batchId.toSeq.map(b => "params" -> ((dst: String) =>
         writeParams(spark, dst, p.updated("lastBatch" -> b)))),
       fence = Some(lease))
-    intern.releaseAll()
     // continue-vs-rebuild economics, surfaced programmatically (the
     // family contract: every continueAt returns its ContinueAdvice)
     Some(StorePolicy.advise("dedupclusters", (td ++ ao).size, math.max(1,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Pins
+
 /** SEGMENTED durable duplicated-span state — the engineered answer to
   * the measured [[IncrementalDupSpans]] limitation (PERF_NOTES round-8
   * tail): that continuation re-materializes the corpus-width span /
@@ -93,7 +95,7 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
   def init(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String, w: Int = 8, maxFrac: Double = 0.5,
       nBuckets: Int = 64, bucketMode: String = "hash",
-      rangeSpan: Long = 0L, withCut: Boolean = false): Unit = {
+      rangeSpan: Long = 0L, withCut: Boolean = false): Unit = Pins.scope { pins =>
     require(bucketMode == "hash" || bucketMode == "range",
       s"dupspans: unknown bucketMode '$bucketMode'")
     require(bucketMode == "hash" || rangeSpan > 0,
@@ -111,14 +113,13 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
     val p0 = newParams(path, Seq("w" -> w, "maxFrac" -> maxFrac,
       "b" -> nBuckets, "mode" -> bucketMode, "span" -> rangeSpan,
       "idDdl" -> docs.schema(idCol).dataType.sql, "withCut" -> withCut))
-    val intern = new IncrMat.Tracker
-    val spans = intern.mat(
+    val spans = pins(
       IncrementalDupSpans.spansOf(docs, idCol, textCol, w)
         .withColumn("_b", docBucket(col("doc_id"), p0)))
-    val ntoks = intern.mat(
+    val ntoks = pins(
       IncrementalDupSpans.ntoksOf(docs, idCol, textCol)
         .withColumn("_b", docBucket(col("doc_id"), p0)))
-    val dfreq = intern.mat(spans.select("doc_id", "s").distinct()
+    val dfreq = pins(spans.select("doc_id", "s").distinct()
       .groupBy("s").agg(count(lit(1)).as("nd"))
       .withColumn("_b", spanBucket(col("s"), nBuckets)))
     val dup = dfreq.filter(col("nd") >= 2).select("s")
@@ -152,7 +153,6 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
     SegSwap.writeParamsTo(spark, s"$path/params", p0.fields ++
       Seq("spans", "ntoks", "dfreq", "out", "text", "cut").map(n =>
         s"${n}Ddl" -> ddl.getOrElse(n, "")) :+ ("lastBatch" -> -1L))
-    intern.releaseAll()
   }
 
   /** The post-delta scores (`doc_id, n_tokens, n_covered, dup_frac,
@@ -264,9 +264,8 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
     SegSwap.recover(spark, path)
     val p = params(spark, path)
     if (batchId.exists(_ <= p.long("lastBatch"))) None
-    else {
+    else Pins.scope { pins =>
     val B = p.b
-    val intern = new IncrMat.Tracker
 
     // the delta's id dtype is pinned to the init corpus's before any
     // bucket hash ([[SegSwap.castToPinned]] — int vs long ids would
@@ -278,21 +277,21 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
 
     // replace semantics: an incoming id evicts its existing rows; the
     // touched-bucket set (td) rides the same materialization job
-    val (remRaw, remSets) = intern.matStats(removedIds
+    val remP = pins.pin(removedIds
       .select(col(removedIds.columns.head).as("_rid"))
       .unionByName(addedDocs.select(col(idCol).as("_rid"))).distinct()
       .withColumn("_tdb", docBucket(col("_rid"), p)), Seq("_tdb"))
-    val rem = remRaw.drop("_tdb")
-    val addSpans = intern.mat(
+    val rem = remP.leaf.drop("_tdb")
+    val addSpans = pins(
       IncrementalDupSpans.spansOf(addedDocs, idCol, textCol, p.int("w"))
         .withColumn("_b", docBucket(col("doc_id"), p)))
-    val addNtoks = intern.mat(
+    val addNtoks = pins(
       IncrementalDupSpans.ntoksOf(addedDocs, idCol, textCol)
         .withColumn("_b", docBucket(col("doc_id"), p)))
 
     // ---- doc-bucketed rewrites: spans + ntoks -------------------------
     // touched doc buckets — O(delta) driver ints, fused above
-    val td = remSets.head
+    val td = remP.sets.head
     val spansLive = readTable(spark, path, p, "spans")
     val ntoksLive = readTable(spark, path, p, "ntoks")
     // the OLD touched rows feed both the rewrite and the frequency
@@ -300,18 +299,18 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
     // retired. Released EARLY (not at end-of-call): at 1000x corpus
     // the sum of all live leaves OOM'd a 48 GiB heap — peak leaf
     // memory must track the pipeline stage, not the whole call
-    val (spansOldT, relSpansOld) = IncrMat.matWithHandle(
+    val spansOld = pins.pin(
       spansLive.filter(inBuckets(td)))
-    val spansNextT = intern.mat(spansOldT
+    val spansNextT = pins(spansOld.leaf
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(addSpans))
-    val ntoksNextT = intern.mat(ntoksLive.filter(inBuckets(td))
+    val ntoksNextT = pins(ntoksLive.filter(inBuckets(td))
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(addNtoks))
 
     // ---- span-bucketed rewrite: dfreq ---------------------------------
     // only delta-touched spans can change nd (departing −1, arriving +1)
-    val depart = spansOldT
+    val depart = spansOld.leaf
       .join(rem, col("doc_id") === col("_rid"), "left_semi")
       .select("doc_id", "s").distinct()
       .groupBy("s").agg((-count(lit(1))).as("_d"))
@@ -319,13 +318,13 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
       .groupBy("s").agg(count(lit(1)).as("_d"))
     // the touched span-bucket set (ts) rides the delta's own
     // materialization job
-    val (deltaRaw, deltaSets) = intern.matStats(depart.unionByName(arrive)
+    val deltaP = pins.pin(depart.unionByName(arrive)
       .groupBy("s").agg(sum(col("_d")).as("_d"))
       .filter(col("_d") =!= 0)
       .withColumn("_tsb", spanBucket(col("s"), B)), Seq("_tsb"))
-    val delta = deltaRaw.drop("_tsb")
-    relSpansOld() // everything derived from the old rows is materialized
-    val ts = deltaSets.head
+    val delta = deltaP.leaf.drop("_tsb")
+    spansOld.release() // everything derived from the old rows is materialized
+    val ts = deltaP.sets.head
     val dfreqLive = readTable(spark, path, p, "dfreq")
     // merged materialized ONCE: the rewrite and the flip set both
     // derive from it (the IncrementalDupSpans lesson), and it reads
@@ -333,21 +332,21 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
     // continuation (all touched spans' frequencies), so its
     // derivatives materialize immediately and it releases here — not
     // at end-of-call (the 1000x peak-memory lesson above)
-    val (merged, relMerged) = IncrMat.matWithHandle(
+    val merged = pins.pin(
       dfreqLive.filter(inBuckets(ts))
         .join(delta, Seq("s"), "full")
         .select(col("s"),
           coalesce(col("nd"), lit(0L)).as("_nd1"),
           (coalesce(col("nd"), lit(0L)) + coalesce(col("_d"), lit(0L)))
             .as("_nd2")))
-    val dfreqNextT = intern.mat(merged.filter(col("_nd2") > 0)
+    val dfreqNextT = pins(merged.leaf.filter(col("_nd2") > 0)
       .select(col("s"), col("_nd2").as("nd"),
         spanBucket(col("s"), B).as("_b")))
     // duplicated status flipped — only delta-touched spans can
     // (elsewhere nd1 == nd2); delta-bounded, so broadcast below
-    val flipped = intern.mat(merged
+    val flipped = pins(merged.leaf
       .filter((col("_nd1") >= 2) =!= (col("_nd2") >= 2)).select("s"))
-    relMerged()
+    merged.release()
 
     // ---- affected documents + re-score --------------------------------
     // membership probe over the post-delta span table: untouched
@@ -366,15 +365,15 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
     val flippedN = flipped.count() // cached leaf — a cheap local scan
     val flipProbe = if (flippedN <= 4000000L) broadcast(flipped) else flipped
     // the affected ids' bucket set (ab) rides the same job
-    val (affRaw, affSets) = intern.matStats(
+    val affP = pins.pin(
       (if (flippedN == 0L) addedIds.distinct()
        else spansPost
         .join(flipProbe, Seq("s"), "left_semi")
         .select("doc_id").distinct()
         .unionByName(addedIds).distinct())
       .withColumn("_ab", docBucket(col("doc_id"), p)), Seq("_ab"))
-    val affected = affRaw.drop("_ab")
-    val ab = affSets.head
+    val affected = affP.leaf.drop("_ab")
+    val ab = affP.sets.head
     val ntoksPost = ntoksLive.filter(!inBuckets(td)).unionByName(ntoksNextT)
     val dupPost = dfreqLive.filter(!inBuckets(ts) && col("nd") >= 2)
       .select("s")
@@ -389,7 +388,7 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
     val ao = ab ++ td
     val evict = affected
       .unionByName(rem.select(col("_rid").as("doc_id"))).distinct()
-    val outNextT = intern.mat(readTable(spark, path, p, "out")
+    val outNextT = pins(readTable(spark, path, p, "out")
       .filter(inBuckets(ao))
       .join(evict, Seq("doc_id"), "left_anti")
       .unionByName(rescored.withColumn("_b",
@@ -405,7 +404,7 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
       val addText = addedDocs.select(col(idCol).as("doc_id"),
           col(textCol).as("text"))
         .withColumn("_b", docBucket(col("doc_id"), p))
-      val textNextT = intern.mat(textLive.filter(inBuckets(td))
+      val textNextT = pins(textLive.filter(inBuckets(td))
         .join(rem, col("doc_id") === col("_rid"), "left_anti")
         .unionByName(addText))
       val textPost = textLive.filter(!inBuckets(td)).unionByName(textNextT)
@@ -415,7 +414,7 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
         spansPost.filter(inBuckets(ab))
           .join(affected, Seq("doc_id"), "left_semi").drop("_b"),
         dupPost, p.int("w"))
-      val cutNextT = intern.mat(readTable(spark, path, p, "cut")
+      val cutNextT = pins(readTable(spark, path, p, "cut")
         .filter(inBuckets(ao))
         .join(evict, Seq("doc_id"), "left_anti")
         .unionByName(recut.withColumn("_b",
@@ -434,7 +433,6 @@ object DupSpansStore extends SegStore("dupspans", "dupspans") {
       dirSwaps = batchId.toSeq.map(b => "params" -> ((dst: String) =>
         writeParams(spark, dst, p.updated("lastBatch" -> b)))),
       fence = Some(lease))
-    intern.releaseAll()
     Some(StorePolicy.advise("dupspans", (td ++ ao).size, liveDocBuckets))
     }
    }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Pins
+
 /** Preserved dedup-cluster state: the SimHash band table (the
   * bucket-membership relation every near-dup pair is born from) plus the
   * converged component labels.
@@ -216,7 +218,7 @@ object IncrementalDedup {
 
   private def incrImpl(state: DedupClusterState, addedDocs: DataFrame,
       removedIds: DataFrame, idCol: String, textCol: String,
-      keepBands: Boolean): (DataFrame, Option[DataFrame]) = {
+      keepBands: Boolean): (DataFrame, Option[DataFrame]) = Pins.scope { pins =>
     val maxHamming = state.maxHamming
     val maxBucket = state.maxBucket
     // Every frontier frame below is MATERIALIZED as a lineage-free leaf
@@ -229,23 +231,12 @@ object IncrementalDedup {
     // that deep tree per reference costs DRIVER seconds even with every
     // byte cached (the round-5 stats-compounding lesson, same cure:
     // GraftSqlShim leaves). The leaves are delta/affected-sized — never
-    // the corpus — and are released before returning.
-    def timed[T](label: String)(f: => T): T =
-      if (!graft.core.IncrementalJob.timingEnabled) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[incr-dedup] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-    val releases = scala.collection.mutable.ListBuffer.empty[() => Unit]
-    def mat(df: DataFrame): DataFrame = {
-      val (leaf, _, rel) =
-        org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle(df)
-      releases += rel
-      leaf
-    }
+    // the corpus — and the scope releases them before returning.
+    def timed[T](label: => String)(f: => T): T =
+      graft.core.IncrementalJob.timed("[incr-dedup]")(label)(f)
     val removed = removedIds.select(col(removedIds.columns.head).as("_rid"))
     // F28-analog: re-map ONLY the delta — fresh band rows for added docs.
-    val newBands = timed("new bands")(mat(Dedup.explodeBands(
+    val newBands = timed("new bands")(pins(Dedup.explodeBands(
       Dedup.simhashDigests64(addedDocs, idCol, textCol))))
 
     // Post-delta band table (the merged kvs, F29): old rows minus the
@@ -280,7 +271,7 @@ object IncrementalDedup {
     // for this path and the segmented store, no drift.
     val (_, affectedComps, newComps) = timed("affected+reconverge")(
       affectedAndReconverge(postBands, changedBuckets, state.comps,
-        removed, maxHamming, maxBucket, mat))
+        removed, maxHamming, maxBucket, pins(_)))
     // The result is a catalog-visible cache (session clearCache /
     // caller unpersist both reclaim it); every internal leaf is freed
     // here, after the splice materializes from them.
@@ -290,7 +281,6 @@ object IncrementalDedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     timed("splice")(out.count())
     newComps.unpersist(blocking = false)
-    releases.foreach(_.apply())
     (out, if (keepBands) Some(postBands) else None)
   }
 }

@@ -2,61 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Pins
 import graft.functions.TextFunctions.tokens
-
-/** Materialize a multiply-referenced delta frame as a LINEAGE-FREE leaf
-  * ([[org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle]])
-  * so every downstream subplan reads the cached blocks instead of
-  * re-running the (often corpus-width) derivation — and, unlike a plain
-  * persist, downstream plans carry a one-node leaf instead of the full
-  * caller lineage (deep persisted lineage costs DRIVER seconds per
-  * reference on chained continuations — the round-6 dedup
-  * canonicalization lesson; [[IncrementalDedup.incrImpl]] is the
-  * sibling this policy matches). ONE definition for every continuation
-  * operator in this file — the materialization policy must not drift
-  * between siblings.
-  *
-  * A released leaf CANNOT be recomputed (lineage is truncated), so
-  * intermediates are released only after everything derived from them
-  * is itself materialized, and state-table leaves are released by the
-  * owning state's `release()`. */
-private[operators] object IncrMat {
-  /** (leaf, release) — caller owns the release thunk. */
-  def matWithHandle(df: DataFrame): (DataFrame, () => Unit) = {
-    val (leaf, _, rel) =
-      org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle(df)
-    (leaf, rel)
-  }
-
-  /** Tracks intermediate leaves for a single continuation call;
-    * `releaseAll()` once every derived frame is materialized. */
-  final class Tracker {
-    private val rels = scala.collection.mutable.ListBuffer.empty[() => Unit]
-    def mat(df: DataFrame): DataFrame = {
-      val (leaf, rel) = matWithHandle(df); rels += rel; leaf
-    }
-    /** [[mat]] plus the leaf's row count, from the same job. */
-    def matCounted(df: DataFrame): (DataFrame, Long) = {
-      val (leaf, rows, rel) = org.apache.spark.sql.graft.GraftSqlShim
-        .checkpointedLeafWithHandle(df)
-      rels += rel
-      (leaf, rows)
-    }
-    /** [[mat]] plus per-INT-column distinct-value sets gathered inside
-      * the SAME materialization job (the stores' touched-bucket sets —
-      * no separate distinct().collect() job; guide §1.2). */
-    def matStats(df: DataFrame, intCols: Seq[String])
-        : (DataFrame, Seq[Set[Int]]) = {
-      val (leaf, _, rel, sets) = org.apache.spark.sql.graft.GraftSqlShim
-        .checkpointedLeafWithStats(df, intCols)
-      rels += rel
-      (leaf, sets)
-    }
-    def releaseAll(): Unit = { rels.foreach(_.apply()); rels.clear() }
-  }
-}
 
 /** Preserved state of a composed corpus clean
   * ([[Pipeline.cleanCorpusByComponents]] semantics: quality floor →
@@ -171,13 +121,13 @@ object IncrementalTfidf {
     * `removedIds` must be ids present in the current corpus; added ids
     * must be fresh. */
   def continueTfidf(state: TfidfState, addedDocs: DataFrame,
-      removedIds: DataFrame, idCol: String, textCol: String): TfidfState = {
-    val intern = new IncrMat.Tracker
+      removedIds: DataFrame, idCol: String, textCol: String): TfidfState =
+      Pins.scope { pins =>
     val removed = removedIds.select(col(removedIds.columns.head).as("_rid"))
-    val tfAdded = intern.mat(tfOf(addedDocs, idCol, textCol))
+    val tfAdded = pins(tfOf(addedDocs, idCol, textCol))
     val tfRemoved = state.tf
       .join(removed, col("doc_id") === col("_rid"), "left_semi")
-    val (tfNext, relTf) = IncrMat.matWithHandle(state.tf
+    val tfNext = GraftSqlShim.pin(state.tf
       .join(removed, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(tfAdded))
 
@@ -188,8 +138,8 @@ object IncrementalTfidf {
     // downstream subplans, and dfSub's corpus-width tf-state semi-join
     // must run once, not per reference.
     val dfAdd = tfAdded.groupBy("token").agg(count(lit(1)).as("_plus"))
-    val dfSub = intern.mat(tfRemoved.groupBy("token").agg(count(lit(1)).as("_minus")))
-    val touched = intern.mat(
+    val dfSub = pins(tfRemoved.groupBy("token").agg(count(lit(1)).as("_minus")))
+    val touched = pins(
       dfAdd.select("token").unionByName(dfSub.select("token")).distinct())
     val mergedTouched = touched
       .join(state.dfreq, Seq("token"), "left")
@@ -199,15 +149,15 @@ object IncrementalTfidf {
         (coalesce(col("df"), lit(0L)) + coalesce(col("_plus"), lit(0L))
           - coalesce(col("_minus"), lit(0L))).as("df"))
       .filter(col("df") > 0)
-    val (dfNext, relDf) = IncrMat.matWithHandle(state.dfreq
+    val dfNext = GraftSqlShim.pin(state.dfreq
       .join(touched, Seq("token"), "left_anti")
       .unionByName(mergedTouched))
 
     // distinct: a duplicated id in removedIds must not decrement N twice
     // (the semi/anti joins above are duplicate-immune; the count is not)
     val nNext = state.n + addedDocs.count() - removed.distinct().count()
-    intern.releaseAll()
-    TfidfState(tfNext, dfNext, nNext, () => { relTf(); relDf() })
+    TfidfState(tfNext.leaf, dfNext.leaf, nNext,
+      () => { tfNext.release(); dfNext.release() })
   }
 
   /** The TF-IDF rows the state represents — same columns and arithmetic
@@ -302,26 +252,24 @@ object IncrementalPipeline {
     */
   def continueClean(state: CleanState, corpusAfter: DataFrame,
       addedDocs: DataFrame, removedIds: DataFrame, idCol: String,
-      textCol: String): CleanState = {
-    val intern = new IncrMat.Tracker
-    def mat(df: DataFrame) = intern.mat(df)
+      textCol: String): CleanState = Pins.scope { pins =>
     val removed = removedIds
       .select(col(removedIds.columns.head).as("_rid"))
 
     // Stage 1+2a: fingerprint the KEPT part of the delta (under the
     // STATE's preserve-time filter); merge the group bag (drop removed
     // rows, add the fresh ones).
-    val newRows = mat(fingerprinted(
+    val newRows = pins(fingerprinted(
       Pipeline.keptOnly(addedDocs, textCol, state.minQuality, state.lang),
       idCol, textCol))
-    val (groupsNext, relGroups) = IncrMat.matWithHandle(state.groups
+    val groupsNext = GraftSqlShim.pin(state.groups
       .join(removed, col("id") === col("_rid"), "left_anti")
       .unionByName(newRows))
 
     // Stage 2b: re-reduce ONLY groups touched by the delta. Removed
     // docs' group keys come from the preserved bag (the whole point of
     // keeping it); added docs' from their fresh rows.
-    val affectedKeys = mat(newRows.select("g1", "g2", "glen")
+    val affectedKeys = pins(newRows.select("g1", "g2", "glen")
       .unionByName(state.groups
         .join(removed, col("id") === col("_rid"), "left_semi")
         .select("g1", "g2", "glen"))
@@ -329,23 +277,23 @@ object IncrementalPipeline {
     // Both representative sets feed TWO anti-joins each (survAdd and
     // survDel) — materialized once (affected-group-sized) so the
     // corpus-width bag scans behind them run once, not twice.
-    val newReps = mat(groupsNext
+    val newReps = pins(groupsNext.leaf
       .join(affectedKeys, Seq("g1", "g2", "glen"), "left_semi")
       .groupBy("g1", "g2", "glen").agg(min("id").as("id")).select("id"))
     // old representatives of the affected groups = survivors lying in
     // an affected group's OLD bag (removed winners included)
-    val oldReps = mat(state.groups
+    val oldReps = pins(state.groups
       .join(affectedKeys, Seq("g1", "g2", "glen"), "left_semi")
       .join(state.survivors.select(col("id").as("_sid")),
         col("id") === col("_sid"), "left_semi")
       .select("id"))
     // survivor delta: promotions/displacements/new groups vs demotions/
     // removals — stage 3's input delta
-    val survAdd = mat(newReps.join(oldReps.select(col("id").as("_oid")),
+    val survAdd = pins(newReps.join(oldReps.select(col("id").as("_oid")),
       col("id") === col("_oid"), "left_anti"))
-    val survDel = mat(oldReps.join(newReps.select(col("id").as("_nid")),
+    val survDel = pins(oldReps.join(newReps.select(col("id").as("_nid")),
       col("id") === col("_nid"), "left_anti"))
-    val (survivorsNext, relSurvivors) = IncrMat.matWithHandle(state.survivors
+    val survivorsNext = GraftSqlShim.pin(state.survivors
       .join(survDel.select(col("id").as("_did")),
         col("id") === col("_did"), "left_anti")
       .unionByName(survAdd))
@@ -356,11 +304,9 @@ object IncrementalPipeline {
       corpusAfter(idCol) === col("_aid"), "left_semi")
     val dedupNext = IncrementalDedup.continueClusters(state.dedup,
       survAddDocs, survDel, idCol, textCol)
-
-    intern.releaseAll()
-    CleanState(groupsNext, survivorsNext, dedupNext,
+    CleanState(groupsNext.leaf, survivorsNext.leaf, dedupNext,
       state.minQuality, state.lang, () => {
-        relGroups(); relSurvivors(); dedupNext.release()
+        groupsNext.release(); survivorsNext.release(); dedupNext.release()
       })
   }
 }
@@ -428,9 +374,9 @@ object IncrementalDecontam {
       evalSet: DataFrame, evalIdCol: String, evalTextCol: String,
       w: Int = 3): DecontamState = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val (sh, relSh) = IncrMat.matWithHandle(shingled(corpus, idCol, textCol, w, "id"))
-    val (ev, relEv) = IncrMat.matWithHandle(shingled(evalSet, evalIdCol, evalTextCol, w, "eid"))
-    DecontamState(sh, ev, w, () => { relSh(); relEv() })
+    val sh = GraftSqlShim.pin(shingled(corpus, idCol, textCol, w, "id"))
+    val ev = GraftSqlShim.pin(shingled(evalSet, evalIdCol, evalTextCol, w, "eid"))
+    DecontamState(sh.leaf, ev.leaf, w, () => { sh.release(); ev.release() })
   }
 
   /** Roll the state forward over a two-sided delta. Only the delta's
@@ -450,13 +396,14 @@ object IncrementalDecontam {
       .unionByName(addedDocs.select(col(idCol).as("_rid")))
     val remE = removedEvalIds.select(col(removedEvalIds.columns.head).as("_reid"))
       .unionByName(addedEval.select(col(evalIdCol).as("_reid")))
-    val (shNext, relSh) = IncrMat.matWithHandle(state.shingles
+    val shNext = GraftSqlShim.pin(state.shingles
       .join(remD, col("id") === col("_rid"), "left_anti")
       .unionByName(shingled(addedDocs, idCol, textCol, state.w, "id")))
-    val (evNext, relEv) = IncrMat.matWithHandle(state.evalSh
+    val evNext = GraftSqlShim.pin(state.evalSh
       .join(remE, col("eid") === col("_reid"), "left_anti")
       .unionByName(shingled(addedEval, evalIdCol, evalTextCol, state.w, "eid")))
-    DecontamState(shNext, evNext, state.w, () => { relSh(); relEv() })
+    DecontamState(shNext.leaf, evNext.leaf, state.w,
+      () => { shNext.release(); evNext.release() })
   }
 
   /** Corpus ids sharing at least one w-shingle with any eval item. */
@@ -566,13 +513,13 @@ object IncrementalLineDedup {
   /** Explode + count once, clean once, preserve all three tables. */
   def preserveLines(df: DataFrame, idCol: String, textCol: String,
       maxDocs: Long, sep: String = "\n"): LineDedupState = {
-    val (lines, r1) = IncrMat.matWithHandle(linesOf(df, idCol, textCol, sep))
-    val (dfreq, r2) = IncrMat.matWithHandle(
-      lines.select("doc_id", "line").distinct()
+    val lines = GraftSqlShim.pin(linesOf(df, idCol, textCol, sep))
+    val dfreq = GraftSqlShim.pin(
+      lines.leaf.select("doc_id", "line").distinct()
         .groupBy("line").agg(count(lit(1)).as("nd")))
-    val (out, r3) = IncrMat.matWithHandle(cleanFor(lines, dfreq, maxDocs, sep))
-    LineDedupState(lines, dfreq, out, maxDocs, sep,
-      () => { r1(); r2(); r3() })
+    val out = GraftSqlShim.pin(cleanFor(lines.leaf, dfreq.leaf, maxDocs, sep))
+    LineDedupState(lines.leaf, dfreq.leaf, out.leaf, maxDocs, sep,
+      () => { lines.release(); dfreq.release(); out.release() })
   }
 
   /** Roll the state forward over a ±document delta. An added id already
@@ -581,14 +528,13 @@ object IncrementalLineDedup {
     * once its continuations are done (library cache contract). */
   def continueLines(state: LineDedupState, addedDocs: DataFrame,
       removedIds: DataFrame, idCol: String,
-      textCol: String): LineDedupState = {
-    val intern = new IncrMat.Tracker
+      textCol: String): LineDedupState = Pins.scope { pins =>
     // replace semantics: an incoming id evicts its existing rows
-    val rem = intern.mat(removedIds
+    val rem = pins(removedIds
       .select(col(removedIds.columns.head).as("_rid"))
       .unionByName(addedDocs.select(col(idCol).as("_rid"))).distinct())
-    val addLines = intern.mat(linesOf(addedDocs, idCol, textCol, state.sep))
-    val (linesNext, rL) = IncrMat.matWithHandle(state.lines
+    val addLines = pins(linesOf(addedDocs, idCol, textCol, state.sep))
+    val linesNext = GraftSqlShim.pin(state.lines
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(addLines))
     // doc-frequency delta: only lines the delta touches can change nd —
@@ -599,39 +545,39 @@ object IncrementalLineDedup {
       .groupBy("line").agg((-count(lit(1))).as("_d"))
     val arrive = addLines.select("doc_id", "line").distinct()
       .groupBy("line").agg(count(lit(1)).as("_d"))
-    val delta = intern.mat(depart.unionByName(arrive)
+    val delta = pins(depart.unionByName(arrive)
       .groupBy("line").agg(sum(col("_d")).as("_d"))
       .filter(col("_d") =!= 0))
     // merged table: nd2 = nd + d; a line whose last document left drops
     // out (nd2 = 0), a brand-new line enters. Materialized ONCE — both
     // dfreqNext and the flip set derive from it, and the full-outer is
     // the continuation's one state-width shuffle
-    val merged = intern.mat(state.dfreq.join(delta, Seq("line"), "full")
+    val merged = pins(state.dfreq.join(delta, Seq("line"), "full")
       .select(col("line"),
         coalesce(col("nd"), lit(0L)).as("_nd1"),
         (coalesce(col("nd"), lit(0L)) + coalesce(col("_d"), lit(0L)))
           .as("_nd2")))
-    val (dfreqNext, rD) = IncrMat.matWithHandle(merged
+    val dfreqNext = GraftSqlShim.pin(merged
       .filter(col("_nd2") > 0).select(col("line"), col("_nd2").as("nd")))
     // flipped = boilerplate status changed; restricted to delta-touched
     // lines by construction (elsewhere nd1 == nd2)
-    val flipped = intern.mat(merged
+    val flipped = pins(merged
       .filter((col("_nd1") > state.maxDocs) =!= (col("_nd2") > state.maxDocs))
       .select("line"))
-    val affectedIds = intern.mat(linesNext
+    val affectedIds = pins(linesNext.leaf
       .join(flipped, Seq("line"), "left_semi").select("doc_id").distinct()
       .unionByName(addedDocs.select(col(idCol).as("doc_id"))).distinct())
     val recleaned = cleanFor(
-      linesNext.join(affectedIds, Seq("doc_id"), "left_semi"),
-      dfreqNext, state.maxDocs, state.sep)
-    val (outNext, rO) = IncrMat.matWithHandle(state.out
+      linesNext.leaf.join(affectedIds, Seq("doc_id"), "left_semi"),
+      dfreqNext.leaf, state.maxDocs, state.sep)
+    val outNext = GraftSqlShim.pin(state.out
       .join(affectedIds.select(col("doc_id").as("_aid"))
           .unionByName(rem.select(col("_rid").as("_aid"))).distinct(),
         col("doc_id") === col("_aid"), "left_anti")
       .unionByName(recleaned))
-    intern.releaseAll()
-    LineDedupState(linesNext, dfreqNext, outNext, state.maxDocs, state.sep,
-      () => { rL(); rD(); rO() })
+    LineDedupState(linesNext.leaf, dfreqNext.leaf, outNext.leaf,
+      state.maxDocs, state.sep,
+      () => { linesNext.release(); dfreqNext.release(); outNext.release() })
   }
 }
 
@@ -770,15 +716,15 @@ object IncrementalDupSpans {
   def preserveDupSpans(df: DataFrame, idCol: String, textCol: String,
       w: Int = 8, maxFrac: Double = 0.5): DupSpanState = {
     graft.functions.GraftFunctions.register(df.sparkSession)
-    val (spans, r1) = IncrMat.matWithHandle(spansOf(df, idCol, textCol, w))
-    val (ntoks, r2) = IncrMat.matWithHandle(ntoksOf(df, idCol, textCol))
-    val (dfreq, r3) = IncrMat.matWithHandle(
-      spans.select("doc_id", "s").distinct()
+    val spans = GraftSqlShim.pin(spansOf(df, idCol, textCol, w))
+    val ntoks = GraftSqlShim.pin(ntoksOf(df, idCol, textCol))
+    val dfreq = GraftSqlShim.pin(
+      spans.leaf.select("doc_id", "s").distinct()
         .groupBy("s").agg(count(lit(1)).as("nd")))
-    val (out, r4) = IncrMat.matWithHandle(scoreFor(spans, ntoks,
-      dfreq.filter(col("nd") >= 2).select("s"), w, maxFrac))
-    DupSpanState(spans, ntoks, dfreq, out, w, maxFrac,
-      () => { r1(); r2(); r3(); r4() })
+    val out = GraftSqlShim.pin(scoreFor(spans.leaf, ntoks.leaf,
+      dfreq.leaf.filter(col("nd") >= 2).select("s"), w, maxFrac))
+    DupSpanState(spans.leaf, ntoks.leaf, dfreq.leaf, out.leaf, w, maxFrac,
+      () => { spans.release(); ntoks.release(); dfreq.release(); out.release() })
   }
 
   /** Roll the state forward over a ±document delta (upsert contract:
@@ -786,16 +732,15 @@ object IncrementalDupSpans {
     * once its continuations are done. */
   def continueDupSpans(state: DupSpanState, addedDocs: DataFrame,
       removedIds: DataFrame, idCol: String,
-      textCol: String): DupSpanState = {
-    val intern = new IncrMat.Tracker
-    val rem = intern.mat(removedIds
+      textCol: String): DupSpanState = Pins.scope { pins =>
+    val rem = pins(removedIds
       .select(col(removedIds.columns.head).as("_rid"))
       .unionByName(addedDocs.select(col(idCol).as("_rid"))).distinct())
-    val addSpans = intern.mat(spansOf(addedDocs, idCol, textCol, state.w))
-    val (spansNext, rS) = IncrMat.matWithHandle(state.spans
+    val addSpans = pins(spansOf(addedDocs, idCol, textCol, state.w))
+    val spansNext = GraftSqlShim.pin(state.spans
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(addSpans))
-    val (ntoksNext, rN) = IncrMat.matWithHandle(state.ntoks
+    val ntoksNext = GraftSqlShim.pin(state.ntoks
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(ntoksOf(addedDocs, idCol, textCol)))
     val depart = state.spans
@@ -804,36 +749,38 @@ object IncrementalDupSpans {
       .groupBy("s").agg((-count(lit(1))).as("_d"))
     val arrive = addSpans.select("doc_id", "s").distinct()
       .groupBy("s").agg(count(lit(1)).as("_d"))
-    val delta = intern.mat(depart.unionByName(arrive)
+    val delta = pins(depart.unionByName(arrive)
       .groupBy("s").agg(sum(col("_d")).as("_d"))
       .filter(col("_d") =!= 0))
     // materialized ONCE: both dfreqNext and the flip set derive from
     // it — the span table's full-outer is the heaviest state-width
     // shuffle in the continuation and must not run twice
-    val merged = intern.mat(state.dfreq.join(delta, Seq("s"), "full")
+    val merged = pins(state.dfreq.join(delta, Seq("s"), "full")
       .select(col("s"),
         coalesce(col("nd"), lit(0L)).as("_nd1"),
         (coalesce(col("nd"), lit(0L)) + coalesce(col("_d"), lit(0L)))
           .as("_nd2")))
-    val (dfreqNext, rD) = IncrMat.matWithHandle(merged
+    val dfreqNext = GraftSqlShim.pin(merged
       .filter(col("_nd2") > 0).select(col("s"), col("_nd2").as("nd")))
     // only delta-touched spans can flip (elsewhere nd1 == nd2)
-    val flipped = intern.mat(merged
+    val flipped = pins(merged
       .filter((col("_nd1") >= 2) =!= (col("_nd2") >= 2)).select("s"))
-    val affectedIds = intern.mat(spansNext
+    val affectedIds = pins(spansNext.leaf
       .join(flipped, Seq("s"), "left_semi").select("doc_id").distinct()
       .unionByName(addedDocs.select(col(idCol).as("doc_id"))).distinct())
     val rescored = scoreFor(
-      spansNext.join(affectedIds, Seq("doc_id"), "left_semi"),
-      ntoksNext.join(affectedIds, Seq("doc_id"), "left_semi"),
-      dfreqNext.filter(col("nd") >= 2).select("s"), state.w, state.maxFrac)
-    val (outNext, rO) = IncrMat.matWithHandle(state.out
+      spansNext.leaf.join(affectedIds, Seq("doc_id"), "left_semi"),
+      ntoksNext.leaf.join(affectedIds, Seq("doc_id"), "left_semi"),
+      dfreqNext.leaf.filter(col("nd") >= 2).select("s"), state.w, state.maxFrac)
+    val outNext = GraftSqlShim.pin(state.out
       .join(affectedIds.select(col("doc_id").as("_aid"))
           .unionByName(rem.select(col("_rid").as("_aid"))).distinct(),
         col("doc_id") === col("_aid"), "left_anti")
       .unionByName(rescored))
-    intern.releaseAll()
-    DupSpanState(spansNext, ntoksNext, dfreqNext, outNext,
-      state.w, state.maxFrac, () => { rS(); rN(); rD(); rO() })
+    DupSpanState(spansNext.leaf, ntoksNext.leaf, dfreqNext.leaf, outNext.leaf,
+      state.w, state.maxFrac, () => {
+        spansNext.release(); ntoksNext.release(); dfreqNext.release()
+        outNext.release()
+      })
   }
 }

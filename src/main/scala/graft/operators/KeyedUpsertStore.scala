@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Pins
+
 /** A durable KEYED-UPSERT table on the family's journaled layout
   * ([[SegSwap]]) — the INPUT side of a restart-safe stream maintainer.
   *
@@ -116,21 +118,20 @@ object KeyedUpsertStore extends SegStore("keyedupsert", "keyedupsert") {
     SegSwap.recover(spark, path)
     val p = params(spark, path)
     if (batchId <= p.long("lastBatch")) false
-    else {
-      val intern = new IncrMat.Tracker
+    else Pins.scope { pins =>
       val keyCol = p.str("keyCol")
       val addedP = SegSwap.castToPinned(added, keyCol, p.str("keyDdl"),
         "keyedupsert added")
       // the touched-bucket set rides the same job that materializes the
       // replaced-keys leaf (no separate distinct().collect() job)
-      val (remRaw, remSets) = intern.matStats(SegSwap.castToPinned(
+      val remP = pins.pin(SegSwap.castToPinned(
           removedKeys.select(col(removedKeys.columns.head).as("_rid")),
           "_rid", p.str("keyDdl"), "keyedupsert removedKeys")
         .unionByName(addedP.select(col(keyCol).as("_rid"))).distinct()
         .withColumn("_tb", hashBucket(p.b, col("_rid"))), Seq("_tb"))
-      val rem = remRaw.drop("_tb")
-      val td = remSets.head
-      val nextT = intern.mat(readTable(spark, path, p, "rows")
+      val rem = remP.leaf.drop("_tb")
+      val td = remP.sets.head
+      val nextT = pins(readTable(spark, path, p, "rows")
         .filter(inBuckets(td))
         .join(rem, col(keyCol) === col("_rid"), "left_anti")
         .unionByName(addedP.withColumn("_b", hashBucket(p.b, col(keyCol)))))
@@ -140,7 +141,6 @@ object KeyedUpsertStore extends SegStore("keyedupsert", "keyedupsert") {
         dirSwaps = Seq("params" -> ((dst: String) =>
           writeParams(spark, dst, p.updated("lastBatch" -> batchId)))),
         fence = Some(lease))
-      intern.releaseAll()
       true
     }
    }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** SEGMENTED durable form of [[LineDedupState]] — boilerplate line
   * dedup on the family's journaled touched-bucket layout ([[SegSwap]]),
   * completing the round-9 verdict's missing-#1 family sweep:
@@ -47,14 +49,13 @@ object LineDedupStore extends SegStore("linededup", "linededup") {
     * partitioned (params last — the completeness marker). */
   def init(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String, maxDocs: Long, sep: String = "\n",
-      nBuckets: Int = 32): Unit = {
+      nBuckets: Int = 32): Unit = Pins.scope { pins =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
-    val intern = new IncrMat.Tracker
-    val lines = intern.mat(
+    val lines = pins(
       IncrementalLineDedup.linesOf(docs, idCol, textCol, sep)
         .withColumn("_b", hashBucket(nBuckets, col("doc_id"))))
-    val dfreq = intern.mat(lines.select("doc_id", "line").distinct()
+    val dfreq = pins(lines.select("doc_id", "line").distinct()
       .groupBy("line").agg(count(lit(1)).as("nd"))
       .withColumn("_b", hashBucket(nBuckets, col("line"))))
     val out = IncrementalLineDedup.cleanFor(lines.drop("_b"),
@@ -71,7 +72,6 @@ object LineDedupStore extends SegStore("linededup", "linededup") {
       "idDdl" -> docs.schema(idCol).dataType.sql,
       "linesDdl" -> ddl("lines"), "dfreqDdl" -> ddl("dfreq"),
       "outDdl" -> ddl("out")))
-    intern.releaseAll()
   }
 
   /** The post-delta cleaned output (`doc_id, clean, n_kept, n_removed`
@@ -89,73 +89,72 @@ object LineDedupStore extends SegStore("linededup", "linededup") {
   def continueAt(spark: SparkSession, path: String, addedDocs0: DataFrame,
       removedIds0: DataFrame, idCol: String, textCol: String)
       : StorePolicy.ContinueAdvice = {
-   val advice = SegSwap.withWriterLease(spark, path) { lease =>
+   val advice = SegSwap.withWriterLease(spark, path)(lease => Pins.scope { pins =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.recover(spark, path)
     val p = params(spark, path)
     val B = p.b
-    val intern = new IncrMat.Tracker
     val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.str("idDdl"),
       "linededup continueAt addedDocs")
     val removedIds = SegSwap.castToPinned(removedIds0,
       removedIds0.columns.head, p.str("idDdl"), "linededup continueAt removedIds")
     // replace semantics: an incoming id evicts its existing rows; the
     // touched-bucket set (td) rides the same materialization job
-    val (remRaw, remSets) = intern.matStats(removedIds
+    val remP = pins.pin(removedIds
       .select(col(removedIds.columns.head).as("_rid"))
       .unionByName(addedDocs.select(col(idCol).as("_rid"))).distinct()
       .withColumn("_tdb", hashBucket(B, col("_rid"))), Seq("_tdb"))
-    val rem = remRaw.drop("_tdb")
-    val addLines = intern.mat(
+    val rem = remP.leaf.drop("_tdb")
+    val addLines = pins(
       IncrementalLineDedup.linesOf(addedDocs, idCol, textCol, p.str("sep"))
         .withColumn("_b", hashBucket(B, col("doc_id"))))
 
     // ---- doc-bucketed rewrite: lines ----------------------------------
-    val td = remSets.head
+    val td = remP.sets.head
     val linesLive = readTable(spark, path, p, "lines")
     // ONE pruned scan feeds the rewrite and the df decrement; released
     // as soon as both derivatives are materialized (the family's
     // peak-leaf-memory rule)
-    val (linesOldT, relOld) = IncrMat.matWithHandle(
+    val linesOld = pins.pin(
       linesLive.filter(inBuckets(td)))
-    val linesNextT = intern.mat(linesOldT
+    val linesNextT = pins(linesOld.leaf
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(addLines))
 
     // ---- line-bucketed rewrite: dfreq ---------------------------------
-    val depart = linesOldT
+    val depart = linesOld.leaf
       .join(rem, col("doc_id") === col("_rid"), "left_semi")
       .select("doc_id", "line").distinct()
       .groupBy("line").agg((-count(lit(1))).as("_d"))
     val arrive = addLines.select("doc_id", "line").distinct()
       .groupBy("line").agg(count(lit(1)).as("_d"))
     // the touched line-bucket set (ts) rides the delta's own job
-    val (deltaRaw, deltaSets) = intern.matStats(depart.unionByName(arrive)
+    val deltaP = pins.pin(depart.unionByName(arrive)
       .groupBy("line").agg(sum(col("_d")).as("_d"))
       .filter(col("_d") =!= 0)
       .withColumn("_tlb", hashBucket(B, col("line"))), Seq("_tlb"))
-    val delta = deltaRaw.drop("_tlb")
-    relOld()
-    val ts = deltaSets.head
+    val delta = deltaP.leaf.drop("_tlb")
+    linesOld.release()
+    val ts = deltaP.sets.head
     val dfreqLive = readTable(spark, path, p, "dfreq")
     // merged materialized ONCE (rewrite + flip set both derive from
     // it), reading only the touched dfreq buckets
-    val (merged, relMerged) = IncrMat.matWithHandle(
+    val merged = pins.pin(
       dfreqLive.filter(inBuckets(ts))
         .join(delta, Seq("line"), "full")
         .select(col("line"),
           coalesce(col("nd"), lit(0L)).as("_nd1"),
           (coalesce(col("nd"), lit(0L)) + coalesce(col("_d"), lit(0L)))
             .as("_nd2")))
-    val dfreqNextT = intern.mat(merged.filter(col("_nd2") > 0)
+    val dfreqNextT = pins(merged.leaf.filter(col("_nd2") > 0)
       .select(col("line"), col("_nd2").as("nd"),
         hashBucket(B, col("line")).as("_b")))
     // boilerplate status flipped — only delta-touched lines can
     // (elsewhere nd1 == nd2); delta-bounded
-    val flipped = intern.mat(merged
+    val flipped = pins(merged.leaf
       .filter((col("_nd1") > p.long("maxDocs")) =!= (col("_nd2") > p.long("maxDocs")))
       .select("line"))
-    relMerged()
+    merged.release()
 
     // ---- affected documents + reclean ---------------------------------
     // flip membership probe over the post-delta line table: skipped
@@ -166,15 +165,15 @@ object LineDedupStore extends SegStore("linededup", "linededup") {
     val flippedN = flipped.count() // cached leaf — cheap local scan
     val flipProbe = if (flippedN <= 4000000L) broadcast(flipped) else flipped
     // the affected ids' bucket set (ab) rides the same job
-    val (affRaw, affSets) = intern.matStats(
+    val affP = pins.pin(
       (if (flippedN == 0L) addedIds.distinct()
        else linesPost
         .join(flipProbe, Seq("line"), "left_semi")
         .select("doc_id").distinct()
         .unionByName(addedIds).distinct())
       .withColumn("_ab", hashBucket(B, col("doc_id"))), Seq("_ab"))
-    val affected = affRaw.drop("_ab")
-    val ab = affSets.head
+    val affected = affP.leaf.drop("_ab")
+    val ab = affP.sets.head
     val dfreqPost = dfreqLive.filter(!inBuckets(ts)).drop("_b")
       .unionByName(dfreqNextT.drop("_b"))
     val recleaned = IncrementalLineDedup.cleanFor(
@@ -184,7 +183,7 @@ object LineDedupStore extends SegStore("linededup", "linededup") {
     val ao = ab ++ td
     val evict = affected
       .unionByName(rem.select(col("_rid").as("doc_id"))).distinct()
-    val outNextT = intern.mat(readTable(spark, path, p, "out")
+    val outNextT = pins(readTable(spark, path, p, "out")
       .filter(inBuckets(ao))
       .join(evict, Seq("doc_id"), "left_anti")
       .unionByName(recleaned.withColumn("_b",
@@ -195,9 +194,8 @@ object LineDedupStore extends SegStore("linededup", "linededup") {
     SegSwap.commit(spark, path, Seq(
       ("lines", linesNextT, td), ("dfreq", dfreqNextT, ts),
       ("out", outNextT, ao)), fence = Some(lease))
-    intern.releaseAll()
     StorePolicy.advise("linededup", ao.size, liveB)
-   }
+   })
    advice
   }
 

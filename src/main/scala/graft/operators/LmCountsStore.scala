@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Pins
+
 /** Incrementally-maintained bigram language model — the
   * [[Pipeline.lmScoreAgainst]] frozen model kept CURRENT as the
   * reference corpus evolves, without ever retraining from scratch.
@@ -70,7 +72,7 @@ object LmCountsStore extends SegStore("lmcounts", "lmcounts") {
     * bucket-partitioned Parquet. */
   def init(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String, nBuckets: Int = 64,
-      bucketMode: String = "hash", rangeSpan: Long = 0L): Unit = {
+      bucketMode: String = "hash", rangeSpan: Long = 0L): Unit = Pins.scope { pins =>
     require(bucketMode == "hash" || bucketMode == "range",
       s"lmcounts: unknown bucketMode '$bucketMode'")
     require(bucketMode == "hash" || rangeSpan > 0,
@@ -86,12 +88,11 @@ object LmCountsStore extends SegStore("lmcounts", "lmcounts") {
     val p0 = Seq("b" -> nBuckets, "mode" -> bucketMode, "span" -> rangeSpan,
       "idDdl" -> docs.schema(idCol).dataType.sql)
     val dp = newParams(path, p0)
-    val intern = new IncrMat.Tracker
-    val unidoc = intern.mat(uniDocOf(docs, idCol, textCol, dp))
-    val bidoc = intern.mat(biDocOf(docs, idCol, textCol, dp))
-    val uni = intern.mat(unidoc.groupBy("w").agg(sum(col("n")).as("cw"))
+    val unidoc = pins(uniDocOf(docs, idCol, textCol, dp))
+    val bidoc = pins(biDocOf(docs, idCol, textCol, dp))
+    val uni = pins(unidoc.groupBy("w").agg(sum(col("n")).as("cw"))
       .withColumn("_b", hashBucket(nBuckets, col("w"))))
-    val bi = intern.mat(bidoc.groupBy("a", "b")
+    val bi = pins(bidoc.groupBy("a", "b")
       .agg(sum(col("n")).as("cab"))
       .withColumn("_b", hashBucket(nBuckets, col("a"), col("b"))))
     // all four tables are materialized leaves: independent writes to
@@ -105,7 +106,6 @@ object LmCountsStore extends SegStore("lmcounts", "lmcounts") {
       "unidocDdl" -> unidoc.schema.toDDL, "bidocDdl" -> bidoc.schema.toDDL,
       "uniDdl" -> uni.schema.toDDL, "biDdl" -> bi.schema.toDDL,
       "lastBatch" -> -1L))
-    intern.releaseAll()
   }
 
   /** Roll the model forward over a ±document delta (upsert contract:
@@ -141,23 +141,22 @@ object LmCountsStore extends SegStore("lmcounts", "lmcounts") {
     SegSwap.recover(spark, path)
     val p = params(spark, path)
     if (batchId.exists(_ <= p.long("lastBatch"))) None
-    else {
+    else Pins.scope { pins =>
     // pin the delta's id dtype to the init corpus's before bucketing
     val addedDocs = SegSwap.castToPinned(addedDocs0, idCol, p.str("idDdl"),
       "continueAt addedDocs")
     val removedIds = SegSwap.castToPinned(removedIds0,
       removedIds0.columns.head, p.str("idDdl"), "continueAt removedIds")
-    val intern = new IncrMat.Tracker
     // the touched doc-bucket set (td) rides the rem leaf's own
     // materialization job (guide §1.2 — no separate collect)
-    val (remRaw, remSets) = intern.matStats(removedIds
+    val remP = pins.pin(removedIds
       .select(col(removedIds.columns.head).as("_rid"))
       .unionByName(addedDocs.select(col(idCol).as("_rid"))).distinct()
       .withColumn("_tdb", docBucket(col("_rid"), p)), Seq("_tdb"))
-    val rem = remRaw.drop("_tdb")
-    val addUni = intern.mat(uniDocOf(addedDocs, idCol, textCol, p))
-    val addBi = intern.mat(biDocOf(addedDocs, idCol, textCol, p))
-    val td = remSets.head
+    val rem = remP.leaf.drop("_tdb")
+    val addUni = pins(uniDocOf(addedDocs, idCol, textCol, p))
+    val addBi = pins(biDocOf(addedDocs, idCol, textCol, p))
+    val td = remP.sets.head
 
     // contribution rewrites + count deltas from ONE pruned scan each:
     // departures are the stored bags of evicted docs (negated),
@@ -169,24 +168,24 @@ object LmCountsStore extends SegStore("lmcounts", "lmcounts") {
       // derivatives are materialized — with a scattered delta it is
       // corpus-width, and holding it through the staged writes starved
       // execution memory at 100x (the DupSpansStore peak-memory lesson)
-      val (oldT, relOld) = IncrMat.matWithHandle(live.filter(inBuckets(td)))
-      val nextT = intern.mat(oldT
+      val old = pins.pin(live.filter(inBuckets(td)))
+      val nextT = pins(old.leaf
         .join(rem, col("doc_id") === col("_rid"), "left_anti")
         .unionByName(add))
       val kcols = keys.map(col)
       // the touched token-bucket set (tb) rides the delta's own job
-      val (deltaRaw, deltaSets) = intern.matStats(oldT
+      val deltaP = pins.pin(old.leaf
         .join(rem, col("doc_id") === col("_rid"), "left_semi")
         .select(kcols :+ (-col("n")).as("_d"): _*)
         .unionByName(add.select(kcols :+ col("n").as("_d"): _*))
         .groupBy(kcols: _*).agg(sum(col("_d")).as("_d"))
         .filter(col("_d") =!= 0)
         .withColumn("_tkb", hashBucket(p.b, kcols: _*)), Seq("_tkb"))
-      val delta = deltaRaw.drop("_tkb")
-      relOld()
-      val tb = deltaSets.head
+      val delta = deltaP.leaf.drop("_tkb")
+      old.release()
+      val tb = deltaP.sets.head
       val cnt = if (agg == "uni") "cw" else "cab"
-      val aggNextT = intern.mat(readTable(spark, path, p, agg)
+      val aggNextT = pins(readTable(spark, path, p, agg)
         .filter(inBuckets(tb))
         .join(delta, keys, "full")
         .select(kcols :+
@@ -204,7 +203,6 @@ object LmCountsStore extends SegStore("lmcounts", "lmcounts") {
       dirSwaps = batchId.toSeq.map(b => "params" -> ((dst: String) =>
         writeParams(spark, dst, p.updated("lastBatch" -> b)))),
       fence = Some(lease))
-    intern.releaseAll()
     Some(StorePolicy.advise("lmcounts", td.size, liveB))
     }
    }

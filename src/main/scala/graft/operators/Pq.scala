@@ -552,13 +552,12 @@ object Pq {
     // shipping a ~2 MiB task binary (the serialized window+LUT subtree;
     // the round-15 verdict's "large task binary" warning) and re-running
     // a ~50-task scan. The probed-cid set rides the same job (§1.2).
-    val (probesLRaw, _, relProbes, probeSets) =
-      org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithStats(
+    val probesP = org.apache.spark.sql.graft.GraftSqlShim.pin(
         probes.join(queryLuts(q.select(col("qid").as("id"),
           col("qvec").as("vec")), cb, m, dsub), "qid")
           .withColumn("_pb", col("cid").cast("int")), Seq("_pb"))
-    val probesL = probesLRaw.drop("_pb")
-    val probedCids = probeSets.head
+    val probesL = probesP.leaf.drop("_pb")
+    val probedCids = probesP.sets.head
     // the literal IN on the partition column prunes unprobed lists' FILES
     val pruned = lists.filter(col("_b").isin(probedCids.toSeq.map(c =>
       Integer.valueOf(c)): _*))
@@ -595,7 +594,7 @@ object Pq {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
     cands.unpersist(blocking = false)
-    relProbes()
+    probesP.release()
     out
   }
 

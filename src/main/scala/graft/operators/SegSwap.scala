@@ -1053,7 +1053,7 @@ private[graft] object SegSwap {
     val excluded = pending.map(_._2)
     val liveSide =
       if (excluded.isEmpty) live
-      else live.filter(!col("_b").isin(excluded.map(Integer.valueOf): _*))
+      else live.filter(!SegStore.inBuckets(excluded.toSet))
     val stagedDirs = pending.collect { case (_, b, "staged") =>
       s"$path/$Staging/$name/_b=$b" }
     val _ = installed // live-side rows already current for these

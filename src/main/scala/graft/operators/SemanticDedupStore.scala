@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** SEGMENTED durable form of [[Similarity.SemanticDedupState]] — the
   * round-9 verdict's missing-#1 ("SemDeDup assignments live in session
   * caches") closed with the family's journaled touched-bucket layout
@@ -61,18 +63,17 @@ object SemanticDedupStore extends SegStore("semdedup", "semdedup") {
     * so B should sit well below nlist to keep real bytes per bucket. */
   def init(spark: SparkSession, path: String, vectors: DataFrame,
       nlist: Int, tau: Double, centroids: Option[DataFrame] = None,
-      centroidFoldLimit: Int = 64, nBuckets: Int = 32): Unit = {
+      centroidFoldLimit: Int = 64, nBuckets: Int = 32): Unit = Pins.scope { pins =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
     val v = vectors.select(col("id").as("nid"),
       col("vec").cast("array<double>").as("nvec"))
-    val intern = new IncrMat.Tracker
-    val cents = intern.mat(
+    val cents = pins(
       Similarity.normalizedCentroids(v, centroids, nlist))
     SegSwap.writeTable(cents, s"$path/cents")
     // assign feeds its own write, both sides of keepFor's self-join and
     // the keep join — one materialization
-    val assign = intern.mat(
+    val assign = pins(
       Similarity.assignToLists(v, cents, centroidFoldLimit)
         .withColumn("_b", hashBucket(nBuckets, col("cid"))))
     val out = Similarity.keepFor(assign.drop("_b"), tau)
@@ -86,7 +87,6 @@ object SemanticDedupStore extends SegStore("semdedup", "semdedup") {
       "tau" -> tau, "foldLimit" -> centroidFoldLimit, "b" -> nBuckets,
       "idDdl" -> v.schema("nid").dataType.sql,
       "assignDdl" -> ddl("assign"), "outDdl" -> ddl("out")))
-    intern.releaseAll()
   }
 
   /** The post-delta decisions (`id, cid, keep` —
@@ -108,23 +108,22 @@ object SemanticDedupStore extends SegStore("semdedup", "semdedup") {
     * journal. */
   def continueAt(spark: SparkSession, path: String, addedVecs: DataFrame,
       removedIds: DataFrame): StorePolicy.ContinueAdvice = {
-   val advice = SegSwap.withWriterLease(spark, path) { lease =>
+   val advice = SegSwap.withWriterLease(spark, path)(lease => Pins.scope { pins =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.recover(spark, path)
     val p = params(spark, path)
     val B = p.b
-    val intern = new IncrMat.Tracker
-    val cents = intern.mat(spark.read.parquet(s"$path/cents"))
+    val cents = pins(spark.read.parquet(s"$path/cents"))
     val added = SegSwap.castToPinned(
       addedVecs.select(col("id").as("nid"),
         col("vec").cast("array<double>").as("nvec")),
       "nid", p.str("idDdl"), "semdedup continueAt addedVecs")
     // replace semantics: an incoming id evicts its existing row
-    val rem = intern.mat(SegSwap.castToPinned(
+    val rem = pins(SegSwap.castToPinned(
         removedIds.select(col(removedIds.columns.head).as("_rid")),
         "_rid", p.str("idDdl"), "semdedup continueAt removedIds")
       .unionByName(added.select(col("nid").as("_rid"))).distinct())
-    val addAssign = intern.mat(
+    val addAssign = pins(
       Similarity.assignToLists(added, cents, p.int("foldLimit")))
 
     // affected clusters: those losing a member (located via a
@@ -134,14 +133,14 @@ object SemanticDedupStore extends SegStore("semdedup", "semdedup") {
     // touched buckets — O(delta) driver ints; every evicted row and
     // every fresh row lives in an affected cluster's bucket. The set
     // rides the affCids leaf's own materialization job (guide §1.2)
-    val (affRaw, affSets) = intern.matStats(assignLive.select("cid", "nid")
+    val affP = pins.pin(assignLive.select("cid", "nid")
       .join(rem, col("nid") === col("_rid"), "left_semi").select("cid")
       .unionByName(addAssign.select("cid")).distinct()
       .withColumn("_cb", hashBucket(B, col("cid"))), Seq("_cb"))
-    val affCids = affRaw.drop("_cb")
-    val tb = affSets.head
+    val affCids = affP.leaf.drop("_cb")
+    val tb = affP.sets.head
     if (tb.nonEmpty) {
-      val assignNextT = intern.mat(assignLive.filter(inBuckets(tb))
+      val assignNextT = pins(assignLive.filter(inBuckets(tb))
         .join(rem, col("nid") === col("_rid"), "left_anti")
         .unionByName(addAssign.withColumn("_b",
           hashBucket(B, col("cid")))))
@@ -154,7 +153,7 @@ object SemanticDedupStore extends SegStore("semdedup", "semdedup") {
       // through; affected clusters' old decisions (removed ids'
       // included — their cluster is affected by definition) are
       // replaced wholesale by the re-decide
-      val outNextT = intern.mat(readTable(spark, path, p, "out")
+      val outNextT = pins(readTable(spark, path, p, "out")
         .filter(inBuckets(tb))
         .join(affCids, Seq("cid"), "left_anti")
         .unionByName(recomputed.withColumn("_b",
@@ -165,9 +164,8 @@ object SemanticDedupStore extends SegStore("semdedup", "semdedup") {
     }
     val liveB = math.max(1,
       SegSwap.liveBuckets(SegSwap.fsOf(spark, path), path, "out").size)
-    intern.releaseAll()
     StorePolicy.advise("semdedup", tb.size, liveB)
-   }
+   })
    advice
   }
 

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
+
+import graft.core.Pins
 
 /** Similarity search over an embedding column (array<float|double>).
   *
@@ -440,8 +443,7 @@ object Similarity {
           fence = Some(lease))
       None
     } else {
-      val touchedLit = touched.toSeq.map(Integer.valueOf)
-      val next = lists.filter(col("_b").isin(touchedLit: _*))
+      val next = lists.filter(SegStore.inBuckets(touched))
         .join(gone, col("nid") === col("_rid"), "left_anti")
         .unionByName(assigned)
       // locator roll-forward: the delta ids' buckets rewrite minus the
@@ -683,13 +685,13 @@ object Similarity {
     val v = vectors.select(col("id").as("nid"),
       col("vec").cast("array<double>").as("nvec"))
     // the quantizer freezes at preserve time (k rows, driver-small)
-    val (cents, rC) = IncrMat.matWithHandle(
+    val cents = GraftSqlShim.pin(
       normalizedCentroids(v, centroids, nlist))
-    val (assign, rA) = IncrMat.matWithHandle(
-      assignToLists(v, cents, centroidFoldLimit))
-    val (out, rO) = IncrMat.matWithHandle(keepFor(assign, tau))
-    SemanticDedupState(cents, assign, out, tau, centroidFoldLimit,
-      () => { rC(); rA(); rO() })
+    val assign = GraftSqlShim.pin(
+      assignToLists(v, cents.leaf, centroidFoldLimit))
+    val out = GraftSqlShim.pin(keepFor(assign.leaf, tau))
+    SemanticDedupState(cents.leaf, assign.leaf, out.leaf, tau, centroidFoldLimit,
+      () => { cents.release(); assign.release(); out.release() })
   }
 
   /** keep ∈ {0,1} for every row of `assign` (cid, nid, nvec) against
@@ -718,34 +720,33 @@ object Similarity {
     * carry over untouched. EXACT vs [[semanticDedup]] on the
     * post-delta vectors with the same centroids (gate + spec). */
   def continueSemanticDedup(state: SemanticDedupState,
-      addedVecs: DataFrame, removedIds: DataFrame): SemanticDedupState = {
-    val intern = new IncrMat.Tracker
-    val rem = intern.mat(removedIds
+      addedVecs: DataFrame, removedIds: DataFrame): SemanticDedupState =
+      Pins.scope { pins =>
+    val rem = pins(removedIds
       .select(col(removedIds.columns.head).as("_rid"))
       .unionByName(addedVecs.select(col("id").as("_rid"))).distinct())
-    val addAssign = intern.mat(assignToLists(
+    val addAssign = pins(assignToLists(
       addedVecs.select(col("id").as("nid"),
         col("vec").cast("array<double>").as("nvec")),
       state.cents, state.centroidFoldLimit))
     // affected clusters: those losing a member (evicted rows' cids)
     // or gaining one — O(delta) cids, broadcast-sized by nature
-    val affCids = intern.mat(state.assign
+    val affCids = pins(state.assign
       .join(rem, col("nid") === col("_rid"), "left_semi").select("cid")
       .unionByName(addAssign.select("cid")).distinct())
-    val (assignNext, rA) = IncrMat.matWithHandle(state.assign
+    val assignNext = GraftSqlShim.pin(state.assign
       .join(rem, col("nid") === col("_rid"), "left_anti")
       .unionByName(addAssign))
     val recomputed = keepFor(
-      assignNext.join(affCids, Seq("cid"), "left_semi"), state.tau)
-    val (outNext, rO) = IncrMat.matWithHandle(state.out
+      assignNext.leaf.join(affCids, Seq("cid"), "left_semi"), state.tau)
+    val outNext = GraftSqlShim.pin(state.out
       .join(rem, col("id") === col("_rid"), "left_anti")
       .join(affCids, Seq("cid"), "left_anti")
       .unionByName(recomputed.select("id", "cid", "keep")))
-    intern.releaseAll()
     // cents carry over FROZEN; their release stays with the original
     // state's thunk (call state.release() after the chain is done)
-    SemanticDedupState(state.cents, assignNext, outNext, state.tau,
-      state.centroidFoldLimit, () => { rA(); rO() })
+    SemanticDedupState(state.cents, assignNext.leaf, outNext.leaf, state.tau,
+      state.centroidFoldLimit, () => { assignNext.release(); outNext.release() })
   }
 
   def semanticDedup(vectors: DataFrame, nlist: Int, tau: Double,

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** SEGMENTED durable form of [[TfidfState]] — corpus TF-IDF statistics
   * on the family's journaled touched-bucket layout ([[SegSwap]]),
   * closing the second half of the round-9 verdict's missing-#1 ("TF-IDF
@@ -62,11 +64,10 @@ object TfidfStore extends SegStore("tfidf", "tfidfstore") {
     * must not decrement twice) AND empty-doc removals — needs a
     * presence record for every id. */
   def init(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String, nBuckets: Int = 32): Unit = {
+      idCol: String, textCol: String, nBuckets: Int = 32): Unit = Pins.scope { pins =>
     graft.functions.GraftFunctions.register(spark)
     SegSwap.resetForInit(SegSwap.fsOf(spark, path), path)
-    val intern = new IncrMat.Tracker
-    val tf = intern.mat(IncrementalTfidf.tfOf(docs, idCol, textCol)
+    val tf = pins(IncrementalTfidf.tfOf(docs, idCol, textCol)
       .withColumn("_b", hashBucket(nBuckets, col("doc_id"))))
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
       .withColumn("_b", hashBucket(nBuckets, col("token")))
@@ -86,7 +87,6 @@ object TfidfStore extends SegStore("tfidf", "tfidfstore") {
       "idDdl" -> docs.schema(idCol).dataType.sql, "tfDdl" -> ddl("tf"),
       "dfreqDdl" -> ddl("dfreq"), "docsDdl" -> ddl("docs"),
       "lastBatch" -> -1L))
-    intern.releaseAll()
   }
 
   /** The TF-IDF rows the store represents — same columns and
@@ -141,9 +141,8 @@ object TfidfStore extends SegStore("tfidf", "tfidfstore") {
   private def continueBody(spark: SparkSession, path: String,
       addedDocs: DataFrame, removedIds: DataFrame, idCol: String,
       textCol: String, batchId: Option[Long], p: Params, lease: Long)
-      : Option[StorePolicy.ContinueAdvice] = {
+      : Option[StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     val B = p.b
-    val intern = new IncrMat.Tracker
     val added = SegSwap.castToPinned(addedDocs, idCol, p.str("idDdl"),
       "tfidfstore continueAt addedDocs")
     // the delta's ids, distinct per side (a duplicate-immune removal
@@ -151,35 +150,34 @@ object TfidfStore extends SegStore("tfidf", "tfidfstore") {
     // this job. Derived from the added IDS (not tfAdded): a token-less
     // added doc has no tf rows but its membership row must still land
     // in a journaled bucket.
-    val (ids, idSets) = intern.matStats(SegSwap.castToPinned(
+    val ids = pins.pin(SegSwap.castToPinned(
         removedIds.select(col(removedIds.columns.head).as("_id")),
         "_id", p.str("idDdl"), "tfidfstore continueAt removedIds")
       .withColumn("_rm", lit(true))
       .unionByName(added.select(col(idCol).as("_id"), lit(false).as("_rm")))
       .distinct().withColumn("_b", hashBucket(B, col("_id"))), Seq("_b"))
-    val td = idSets.head
-    val rem = ids.filter(col("_rm")).select(col("_id").as("_rid"))
-    val addedIds = ids.filter(!col("_rm"))
+    val td = ids.sets.head
+    val rem = ids.leaf.filter(col("_rm")).select(col("_id").as("_rid"))
+    val addedIds = ids.leaf.filter(!col("_rm"))
       .select(col("_id").as("doc_id"), col("_b"))
-    val tfAdded = intern.mat(IncrementalTfidf.tfOf(added, idCol, textCol)
+    val tfAdded = pins(IncrementalTfidf.tfOf(added, idCol, textCol)
       .withColumn("_b", hashBucket(B, col("doc_id"))))
 
     // tf rewrite: the delta ids' buckets; departing bags from ONE
     // pruned scan feeding both the rewrite and the df decrement.
     val tfLive = readTable(spark, path, p, "tf")
-    val (tfOldT, relOld) = IncrMat.matWithHandle(
-      tfLive.filter(inBuckets(td)))
-    val tfNextT = intern.mat(tfOldT
+    val tfOld = pins.pin(tfLive.filter(inBuckets(td)))
+    val tfNextT = pins(tfOld.leaf
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(tfAdded))
 
     // df merge for touched tokens only: +1 per added doc containing
     // the token, −1 per removed doc that did; tokens at df 0 leave
     val dfAdd = tfAdded.groupBy("token").agg(count(lit(1)).as("_plus"))
-    val dfSub = intern.mat(tfOldT
+    val dfSub = pins(tfOld.leaf
       .join(rem, col("doc_id") === col("_rid"), "left_semi")
       .groupBy("token").agg(count(lit(1)).as("_minus")))
-    relOld()
+    tfOld.release()
     // N moves by the MEMBERSHIP change of the td buckets, the two leaf
     // counts: it decrements by the removed ids actually PRESENT, not by
     // the request size — tf/df bags are naturally absent-immune
@@ -188,17 +186,17 @@ object TfidfStore extends SegStore("tfidf", "tfidfstore") {
     // Forget crash window's documented recovery is exactly "re-run the
     // sweep"). Presence comes from the membership table, never tf — a
     // token-less document counts in N yet has no tf rows.
-    val (docsOldT, nOld) = intern.matCounted(
+    val docsOld = pins.pin(
       readTable(spark, path, p, "docs").filter(inBuckets(td)))
-    val (docsNextT, nNext) = intern.matCounted(docsOldT
+    val docsNext = pins.pin(docsOld.leaf
       .join(rem, col("doc_id") === col("_rid"), "left_anti")
       .unionByName(addedIds))
     // the touched token-bucket set (ts) rides the same job
-    val (touchedRaw, touchedSets) = intern.matStats(
+    val touchedP = pins.pin(
       dfAdd.select("token").unionByName(dfSub.select("token")).distinct()
         .withColumn("_tkb", hashBucket(B, col("token"))), Seq("_tkb"))
-    val touched = touchedRaw.drop("_tkb")
-    val ts = touchedSets.head
+    val touched = touchedP.leaf.drop("_tkb")
+    val ts = touchedP.sets.head
     val dfreqLive = readTable(spark, path, p, "dfreq")
     val mergedTouched = touched
       .join(dfreqLive.filter(inBuckets(ts)).drop("_b"), Seq("token"), "left")
@@ -208,22 +206,21 @@ object TfidfStore extends SegStore("tfidf", "tfidfstore") {
         (coalesce(col("df"), lit(0L)) + coalesce(col("_plus"), lit(0L))
           - coalesce(col("_minus"), lit(0L))).as("df"))
       .filter(col("df") > 0)
-    val dfreqNextT = intern.mat(dfreqLive.filter(inBuckets(ts))
+    val dfreqNextT = pins(dfreqLive.filter(inBuckets(ts))
       .join(touched, Seq("token"), "left_anti")
       .unionByName(mergedTouched.withColumn("_b",
         hashBucket(B, col("token")))))
 
-    val n2 = p.long("n") - nOld + nNext
+    val n2 = p.long("n") - docsOld.rows + docsNext.rows
     val liveB = math.max(1,
       SegSwap.liveBuckets(SegSwap.fsOf(spark, path), path, "tf").size)
     SegSwap.commit(spark, path, Seq(
       ("tf", tfNextT, td), ("dfreq", dfreqNextT, ts),
-      ("docs", docsNextT, td)),
+      ("docs", docsNext.leaf, td)),
       dirSwaps = Seq("params" -> ((dst: String) =>
         writeParams(spark, dst, p.updated("n" -> n2,
           "lastBatch" -> batchId.getOrElse(p.long("lastBatch")))))),
       fence = Some(lease))
-    intern.releaseAll()
     Some(StorePolicy.advise("tfidfstore", td.size, liveB))
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.types.StructType
 
 /** The MAINTAINED TILING — the durable static side of a 24/7 ONE2MUL
@@ -233,20 +234,19 @@ object TiledMatrixStore extends SegStore("tiledmat", "tiledmat") {
     // each prepared frame's bucket set (and chgJbs' count) rides the
     // frame's own materialization job — no separate collect jobs here
     // or in applyDelta (guide §1.2)
-    val shim = org.apache.spark.sql.graft.GraftSqlShim
-    val (chgL, _, relChg, chgSets) = shim.checkpointedLeafWithStats(
+    val chgP = GraftSqlShim.pin(
       pc.select(col("j"))
         .unionByName(removedCols
           .select(col(removedCols.columns.head).cast("long").as("j")))
         .distinct().withColumn("_cb", keyBucket(col("j"), bc)),
       Seq("_cb"))
-    val chg = chgL.drop("_cb")
-    val cb = chgSets.head
-    val (chgJbsL, nChgJbs, relJbs, jbsSets) = shim.checkpointedLeafWithStats(
+    val chg = chgP.leaf.drop("_cb")
+    val cb = chgP.sets.head
+    val jbsP = GraftSqlShim.pin(
       chg.select(jbOf(col("j"), bs).as("jb")).distinct()
         .withColumn("_ib", keyBucket(col("jb"), bi)), Seq("_ib"))
-    val chgJbs = chgJbsL.drop("_ib")
-    val ib = jbsSets.head
+    val chgJbs = jbsP.leaf.drop("_ib")
+    val ib = jbsP.sets.head
     // the locator read: the changed columns' OLD cells, pruned by j
     val oldCells = h.cellsTable.filter(inBuckets(cb))
       .join(chg.select(col("j").as("_cj")), col("j") === col("_cj"),
@@ -254,13 +254,13 @@ object TiledMatrixStore extends SegStore("tiledmat", "tiledmat") {
     // bag surgery: replace the changed columns' cells inside the
     // touched tiles' bags (idempotent — re-applying to an already
     // patched bag replaces the same cells with the same cells)
-    val (touchedL, nTouched, relT, tSets) = shim.checkpointedLeafWithStats(
+    val touchedP = GraftSqlShim.pin(
       oldCells.select(tidOf(col("i"), col("j"), bs).as("tid"))
         .unionByName(pc.select(tidOf(col("i"), col("j"), bs).as("tid")))
         .distinct().withColumn("_tb", keyBucket(col("tid"), bt)),
       Seq("_tb"))
-    val touched = touchedL.drop("_tb")
-    val tb = tSets.head
+    val touched = touchedP.leaf.drop("_tb")
+    val tb = touchedP.sets.head
     val oldBags = h.tilesSource.pruned(tb)
       .join(touched.select(col("tid").as("_ct")), col("tid") === col("_ct"),
         "left_semi")
@@ -288,8 +288,9 @@ object TiledMatrixStore extends SegStore("tiledmat", "tiledmat") {
     val newIdx = keepIdx.select(col("jb"), col("tid"))
       .unionByName(newBags.select(col("jb"), col("tid")))
       .localCheckpoint(true)
-    Delta(chg, chgJbs, touched, newBags, newIdx, cb, tb, ib, nChgJbs,
-      nTouched, (bc, bt, bi), Seq(relChg, relJbs, relT))
+    Delta(chg, chgJbs, touched, newBags, newIdx, cb, tb, ib, jbsP.rows,
+      touchedP.rows, (bc, bt, bi),
+      Seq(chgP.release, jbsP.release, touchedP.release))
   }
 
   /** Apply batch `batchId` AT MOST ONCE: the three tables' touched

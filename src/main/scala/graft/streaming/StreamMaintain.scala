@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.algorithms.{IncrementalMatVec, IncrementalPageRank}
-import graft.core.IncrementalJob
+import graft.core.{IncrementalJob, Pins}
 import graft.operators.KeyedUpsertStore
 
 /** RESTART-SAFE stream-of-deltas maintenance — the foreachBatch body
@@ -66,56 +66,24 @@ import graft.operators.KeyedUpsertStore
   */
 object StreamMaintain {
 
-  /** One timing wrapper for every maintainer: label is BY NAME so any
-    * row count embedded in it stays off the timing-disabled hot path
-    * (and the counts themselves ride the delta pins — [[pinN]] — so
-    * even timing-enabled runs schedule no extra count jobs). */
-  private def phase[T](prefix: String, batchId: Long)(label: => String)(
-      f: => T): T =
-    if (!IncrementalJob.timingEnabled) f else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(
-        f"[stream] $prefix batch $batchId $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-  /** Pin a delta frame as a lineage-free leaf
-    * ([[org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle]]
-    * — same single materialization job as `localCheckpoint(true)`, but
-    * the leaf carries REAL cached-byte statistics, so the planner's
-    * broadcast decisions over the delta are honest instead of
-    * compounded estimates). Returns (leaf, release); release once the
-    * batch's stores have committed. */
-  private def pin(df: DataFrame): (DataFrame, () => Unit) = {
-    val (leaf, _, rel) =
-      org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle(df)
-    (leaf, rel)
-  }
-
-  /** [[pin]] that also hands back the row count the materialization
-    * job already computed — timing labels embed it for free instead of
-    * scheduling a count job per batch under `graft.timing`. */
-  private def pinN(df: DataFrame): (DataFrame, Long, () => Unit) =
-    org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle(df)
-
-  /** Split a batch into (upsert rows, removed keys, release): `op = "D"`
-    * rows mark `keyCol` removed; everything else is an upsert row. Only
-    * the removed side is pinned here (it feeds two consumers — the
-    * frontier union and the store upsert); the upsert side stays lazy
-    * and each maintainer pins its own projected/deduped form of it
-    * exactly once (the `patch`/`added` pins below). */
-  private def splitOps(batch: DataFrame, keyCol: String,
-      keyType: String): (DataFrame, DataFrame, () => Unit) =
+  /** Split a batch into (upsert rows, removed keys): `op = "D"` rows
+    * mark `keyCol` removed; everything else is an upsert row. Only the
+    * removed side is pinned here, in the batch's scope (it feeds two
+    * consumers — the frontier union and the store upsert); the upsert
+    * side stays lazy and each maintainer pins its own projected/deduped
+    * form of it exactly once (the `patch`/`added` pins below). Delta
+    * pins are lineage-free leaves with REAL cached-byte statistics, so
+    * the planner's broadcast decisions over the delta are honest; the
+    * scope releases them once the batch's stores have committed. */
+  private def splitOps(pins: Pins, batch: DataFrame, keyCol: String,
+      keyType: String): (DataFrame, DataFrame) =
     if (!batch.columns.contains("op"))
       (batch, batch.sparkSession.range(0)
-        .select(col("id").cast(keyType).as(keyCol)), () => ())
-    else {
-      val ups = batch.filter(coalesce(col("op") =!= "D", lit(true)))
-        .drop("op")
-      val (removed, rel) = pin(batch.filter(col("op") === "D")
-        .select(col(keyCol).cast(keyType)).distinct())
-      (ups, removed, rel)
-    }
+        .select(col("id").cast(keyType).as(keyCol)))
+    else
+      (batch.filter(coalesce(col("op") =!= "D", lit(true))).drop("op"),
+        pins(batch.filter(col("op") === "D")
+          .select(col(keyCol).cast(keyType)).distinct()))
 
   /** Resolve CONFLICTING upserts for one key inside one micro-batch
     * deterministically: keep the row whose value columns sort HIGHEST
@@ -151,18 +119,19 @@ object StreamMaintain {
   def pageRankBatch(spark: SparkSession, rankStore: String,
       edgeStore: String, batch: DataFrame, batchId: Long,
       damping: Double, iterations: Int, numPartitions: Int = 32)
-      : Option[graft.operators.StorePolicy.ContinueAdvice] = {
+      : Option[graft.operators.StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     def phase[T](label: => String)(f: => T): T =
-      StreamMaintain.phase("pr", batchId)(label)(f)
-    val (ups, removed, relRemoved) = splitOps(batch, "src", "long")
+      IncrementalJob.timed(s"[stream] pr batch $batchId")(label)(f)
+    val (ups, removed) = splitOps(pins, batch, "src", "long")
     // O(delta): the changed sources' NEW static rows (degrees included)
     // derive from the batch alone — an upsert replaces a src's whole
     // out-edge set, so no corpus-wide degree recompute. Removed srcs
     // contribute NO patch rows: the overlay then shows the loop a
     // post-delta graph where they simply have no out-edges — the same
     // shape the frame-fed `incremental` already handles for removals.
-    val (patch, nPatch, relPatch) = phase("prepare delta")(
-      pinN(IncrementalPageRank.prepareBatch(ups)))
+    val patchPin = phase("prepare delta")(
+      pins.pin(IncrementalPageRank.prepareBatch(ups)))
+    val patch = patchPin.leaf
     // the frontier must include removed srcs: their old contributions
     // are evicted by the MRBGraph merge only if they are in it
     val chg = patch.select("src").unionByName(removed).distinct()
@@ -171,7 +140,7 @@ object StreamMaintain {
     // correct on first delivery AND on replay, because the edge upsert
     // below runs after. The by-name label keeps the row count off the
     // timing-disabled hot path.
-    val advice = phase(s"continuation (patch rows=$nPatch)")(
+    val advice = phase(s"continuation (patch rows=${patchPin.rows})")(
       IncrementalJob.adviceOnly(IncrementalPageRank.continueFromStores(spark,
         rankStore, edgeStore, patch, chg, damping, iterations,
         filterThreshold = 0.0, numPartitions = numPartitions,
@@ -181,8 +150,6 @@ object StreamMaintain {
     phase("edge upsert")(
       KeyedUpsertStore.upsertBatch(spark, edgeStore, patch,
         removed, batchId))
-    relPatch()
-    relRemoved()
     advice
   }
 
@@ -199,15 +166,16 @@ object StreamMaintain {
   def matvecBatch(spark: SparkSession, stateStore: String,
       cellStore: String, batch: DataFrame, batchId: Long, b: DataFrame,
       iterations: Int, numPartitions: Int = 32)
-      : Option[graft.operators.StorePolicy.ContinueAdvice] = {
+      : Option[graft.operators.StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     def phase[T](label: => String)(f: => T): T =
-      StreamMaintain.phase("mv", batchId)(label)(f)
-    val (ups, removed, relRemoved) = splitOps(batch, "j", "long")
-    val (patch, nPatch, relPatch) = phase("prepare delta")(
-      pinN(dedupByKey(ups.select(col("i").cast("long"), col("j").cast("long"),
+      IncrementalJob.timed(s"[stream] mv batch $batchId")(label)(f)
+    val (ups, removed) = splitOps(pins, batch, "j", "long")
+    val patchPin = phase("prepare delta")(
+      pins.pin(dedupByKey(ups.select(col("i").cast("long"), col("j").cast("long"),
         col("v").cast("double")), Seq("i", "j"), Seq("v"))))
+    val patch = patchPin.leaf
     val chg = patch.select("j").unionByName(removed).distinct()
-    val advice = phase(s"continuation (patch rows=$nPatch)")(
+    val advice = phase(s"continuation (patch rows=${patchPin.rows})")(
       IncrementalJob.adviceOnly(IncrementalMatVec.continueFromStores(spark,
         stateStore, cellStore, patch, chg, b, iterations,
         filterThreshold = 0.0, numPartitions = numPartitions,
@@ -215,8 +183,6 @@ object StreamMaintain {
     phase("cell upsert")(
       KeyedUpsertStore.upsertBatch(spark, cellStore, patch,
         removed, batchId))
-    relPatch()
-    relRemoved()
     advice
   }
 
@@ -248,21 +214,23 @@ object StreamMaintain {
       iterations: Int, numPartitions: Int = 32,
       filterThreshold: Double = 0.0,
       maintenance: Option[graft.operators.StorePolicy.AdviceStreak] = None)
-      : Option[graft.operators.StorePolicy.ContinueAdvice] = {
-    def phase[T](label: => String)(f: => T): T =
-      StreamMaintain.phase("bmv", batchId)(label)(f)
+      : Option[graft.operators.StorePolicy.ContinueAdvice] =
     // replay fast-path: the tiling applies LAST, so its fence covering
     // this id means the whole batch (state included) already landed —
     // one params read instead of the full surgery (pruned store reads,
     // three bucket collects, three localCheckpoints) that both fenced
     // consumers would then discard anyway
     if (batchId <= graft.operators.TiledMatrixStore.lastBatch(spark,
-        tileStore)) return None
-    val (ups, removed, relRemoved) = splitOps(batch, "j", "long")
-    val (patch, nPatch, relPatch) = phase("prepare delta")(
-      pinN(dedupByKey(ups.select(col("i").cast("long"), col("j").cast("long"),
+        tileStore)) None
+    else Pins.scope { pins =>
+    def phase[T](label: => String)(f: => T): T =
+      IncrementalJob.timed(s"[stream] bmv batch $batchId")(label)(f)
+    val (ups, removed) = splitOps(pins, batch, "j", "long")
+    val patchPin = phase("prepare delta")(
+      pins.pin(dedupByKey(ups.select(col("i").cast("long"), col("j").cast("long"),
         col("v").cast("double")), Seq("i", "j"), Seq("v"))))
-    val delta = phase(s"tile surgery (patch rows=$nPatch)")(
+    val patch = patchPin.leaf
+    val delta = phase(s"tile surgery (patch rows=${patchPin.rows})")(
       graft.operators.TiledMatrixStore.prepareDelta(spark, tileStore,
         patch, removed))
     val advice = phase("continuation") {
@@ -277,8 +245,6 @@ object StreamMaintain {
       graft.operators.TiledMatrixStore.applyDelta(spark, tileStore,
         patch, delta, batchId))
     delta.release()
-    relPatch()
-    relRemoved()
     // ACT on the tiling's lifecycle advice (round-14 verdict #4): K
     // consecutive over-crossover commits trigger the store's journaled
     // compact — content-invariant (a rebucket under the current
@@ -317,15 +283,16 @@ object StreamMaintain {
       pointStore: String, batch: DataFrame, batchId: Long,
       iterations: Int, numPartitions: Int = 32,
       metric: String = "euclidean")
-      : Option[graft.operators.StorePolicy.ContinueAdvice] = {
+      : Option[graft.operators.StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     def phase[T](label: => String)(f: => T): T =
-      StreamMaintain.phase("km", batchId)(label)(f)
-    val (ups, removed, relRemoved) = splitOps(batch, "id", "long")
-    val (patch, nPatch, relPatch) = phase("prepare delta")(
-      pinN(dedupByKey(ups.select(col("id").cast("long"),
+      IncrementalJob.timed(s"[stream] km batch $batchId")(label)(f)
+    val (ups, removed) = splitOps(pins, batch, "id", "long")
+    val patchPin = phase("prepare delta")(
+      pins.pin(dedupByKey(ups.select(col("id").cast("long"),
         col("vec").cast("array<double>")), Seq("id"), Seq("vec"))))
+    val patch = patchPin.leaf
     val chg = patch.select("id").unionByName(removed).distinct()
-    val advice = phase(s"continuation (patch rows=$nPatch)")(
+    val advice = phase(s"continuation (patch rows=${patchPin.rows})")(
       IncrementalJob.adviceOnly(graft.algorithms.IncrementalKMeans
         .continueFromStores(spark, centerStore, pointStore, patch,
           chg, iterations, filterThreshold = 0.0,
@@ -334,8 +301,6 @@ object StreamMaintain {
     phase("point upsert")(
       KeyedUpsertStore.upsertBatch(spark, pointStore, patch,
         removed, batchId))
-    relPatch()
-    relRemoved()
     advice
   }
 
@@ -359,18 +324,16 @@ object StreamMaintain {
     * ever rebuilding it. */
   def ivfBatch(spark: SparkSession, indexPath: String, batch: DataFrame,
       batchId: Long, centroidFoldLimit: Int = 64)
-      : Option[graft.operators.StorePolicy.ContinueAdvice] = {
+      : Option[graft.operators.StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     def phase[T](label: => String)(f: => T): T =
-      StreamMaintain.phase("ivf", batchId)(label)(f)
-    val (ups, removed, relRemoved) = splitOps(batch, "id", "long")
-    val (added, relAdded) = phase("pin delta")(
-      pin(dedupByKey(ups.select(col("id").cast("long"),
+      IncrementalJob.timed(s"[stream] ivf batch $batchId")(label)(f)
+    val (ups, removed) = splitOps(pins, batch, "id", "long")
+    val added = phase("pin delta")(
+      pins(dedupByKey(ups.select(col("id").cast("long"),
         col("vec").cast("array<double>").as("vec")), Seq("id"), Seq("vec"))))
     val advice = phase("index update")(
       graft.operators.Similarity.updateIvfIndex(spark, indexPath,
         added, removed, centroidFoldLimit, batchId = Some(batchId)))
-    relAdded()
-    relRemoved()
     advice
   }
 
@@ -380,18 +343,16 @@ object StreamMaintain {
     * codebooks before the touched-list swap. */
   def ivfPqBatch(spark: SparkSession, indexPath: String, batch: DataFrame,
       batchId: Long, centroidFoldLimit: Int = 64)
-      : Option[graft.operators.StorePolicy.ContinueAdvice] = {
+      : Option[graft.operators.StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     def phase[T](label: => String)(f: => T): T =
-      StreamMaintain.phase("ivfpq", batchId)(label)(f)
-    val (ups, removed, relRemoved) = splitOps(batch, "id", "long")
-    val (added, relAdded) = phase("pin delta")(
-      pin(dedupByKey(ups.select(col("id").cast("long"),
+      IncrementalJob.timed(s"[stream] ivfpq batch $batchId")(label)(f)
+    val (ups, removed) = splitOps(pins, batch, "id", "long")
+    val added = phase("pin delta")(
+      pins(dedupByKey(ups.select(col("id").cast("long"),
         col("vec").cast("array<double>").as("vec")), Seq("id"), Seq("vec"))))
     val advice = phase("index update")(
       graft.operators.Pq.updateIvfPqIndex(spark, indexPath,
         added, removed, centroidFoldLimit, batchId = Some(batchId)))
-    relAdded()
-    relRemoved()
     advice
   }
 
@@ -411,18 +372,16 @@ object StreamMaintain {
     * ever re-banding the corpus. */
   def dedupBatch(spark: SparkSession, storePath: String, batch: DataFrame,
       batchId: Long, idCol: String = "doc_id", textCol: String = "text")
-      : Option[graft.operators.StorePolicy.ContinueAdvice] = {
+      : Option[graft.operators.StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     def phase[T](label: => String)(f: => T): T =
-      StreamMaintain.phase("dedup", batchId)(label)(f)
-    val (ups, removed, relRemoved) = splitOps(batch, idCol, "long")
-    val (added, relAdded) = phase("pin delta")(
-      pin(dedupByKey(ups.select(col(idCol).cast("long"), col(textCol)),
+      IncrementalJob.timed(s"[stream] dedup batch $batchId")(label)(f)
+    val (ups, removed) = splitOps(pins, batch, idCol, "long")
+    val added = phase("pin delta")(
+      pins(dedupByKey(ups.select(col(idCol).cast("long"), col(textCol)),
         Seq(idCol), Seq(textCol))))
     val advice = phase("cluster continuation")(
       graft.operators.DedupClusterStore.continueBatch(spark, storePath,
         added, removed, idCol, textCol, batchId))
-    relAdded()
-    relRemoved()
     advice
   }
 
@@ -453,18 +412,18 @@ object StreamMaintain {
   def corpusBatch(spark: SparkSession, stores: Seq[(String, String)],
       batch: DataFrame, batchId: Long, idCol: String = "doc_id",
       textCol: String = "text")
-      : Map[String, graft.operators.StorePolicy.ContinueAdvice] = {
+      : Map[String, graft.operators.StorePolicy.ContinueAdvice] = Pins.scope { pins =>
     def phase[T](label: => String)(f: => T): T =
-      StreamMaintain.phase("corpus", batchId)(label)(f)
+      IncrementalJob.timed(s"[stream] corpus batch $batchId")(label)(f)
     val known = Set("tfidf", "lmcounts", "dupspans", "dedupclusters")
     stores.foreach { case (kind, _) =>
       require(known.contains(kind),
         s"corpusBatch: no maintainer for store kind '$kind' " +
           s"(known: ${known.toSeq.sorted.mkString(", ")})")
     }
-    val (ups, removed, relRemoved) = splitOps(batch, idCol, "long")
-    val (added, relAdded) = phase("pin delta")(
-      pin(dedupByKey(ups.select(col(idCol).cast("long"), col(textCol)),
+    val (ups, removed) = splitOps(pins, batch, idCol, "long")
+    val added = phase("pin delta")(
+      pins(dedupByKey(ups.select(col(idCol).cast("long"), col(textCol)),
         Seq(idCol), Seq(textCol))))
     // register the native functions ONCE on this thread before the
     // parallel dispatch (each continuation would otherwise race the
@@ -492,8 +451,6 @@ object StreamMaintain {
         a.map(kind -> _)
       }
     }).flatten.toMap
-    relAdded()
-    relRemoved()
     advice
   }
 }

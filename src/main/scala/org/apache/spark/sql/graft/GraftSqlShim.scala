@@ -20,7 +20,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * but it wrote every byte of state twice and cost two jobs per
   * materialization.
   *
-  * [[checkpointedLeaf]] does the single-write version: take the plan's
+  * [[pin]] does the single-write version: take the plan's
   * InternalRow RDD, local-checkpoint THAT (one cached copy, lineage
   * truncated), and wrap it in a [[LogicalRDD]] carrying EXPLICIT
   * statistics — constant-size numbers, immune to estimate compounding.
@@ -38,42 +38,36 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Freeing the blocks: `Dataset.unpersist`/`spark.catalog.clearCache()`
   * go through the `CacheManager` and CANNOT see a raw RDD cached by
   * `localCheckpoint` — the blocks would otherwise live until the
-  * ContextCleaner happens to GC the RDD reference. Callers that
-  * materialize a bounded-lifetime frame must therefore use
-  * [[checkpointedLeafWithHandle]] and invoke the returned release thunk
-  * when the frame is superseded (see `IncrementalJob`'s segment
-  * lifecycle). After release the leaf CANNOT be recomputed (lineage was
-  * truncated) — release only when nothing references the frame.
+  * ContextCleaner happens to GC the RDD reference. Every pin therefore
+  * hands back a release thunk; callers free a bounded-lifetime leaf
+  * through it when the frame is superseded (`graft.core.Pins` frees a
+  * block's intermediates at its end, `IncrementalJob`'s segment
+  * lifecycle frees superseded segments). After release the leaf CANNOT
+  * be recomputed (lineage was truncated) — release only when nothing
+  * references the frame.
   */
 object GraftSqlShim {
 
+  /** A pinned frame: the lineage-free `leaf`, its row count, the thunk
+    * that frees its cached blocks (idempotent, non-blocking), and per
+    * requested column the distinct non-null INT values (`sets`) and the
+    * exact sum of the non-null LONG values (`sums`). */
+  final case class Pinned(leaf: DataFrame, rows: Long, release: () => Unit,
+      sets: Seq[Set[Int]], sums: Seq[BigInt])
+
   /** Materialize `df` as a local-checkpointed, lineage-free leaf with
-    * explicit statistics. Returns (leaf, rowCount). One job, one cached
-    * copy of the data. The cached blocks are NOT visible to
-    * `spark.catalog.clearCache()` — use [[checkpointedLeafWithHandle]]
-    * when the caller must free them deterministically. */
-  def checkpointedLeaf(df: DataFrame): (DataFrame, Long) = {
-    val (leaf, rows, _) = checkpointedLeafWithHandle(df)
-    (leaf, rows)
-  }
-
-  /** [[checkpointedLeaf]] plus a release thunk that unpersists the
-    * checkpointed RDD's blocks (non-blocking). Call it exactly once,
-    * after every frame derived from the leaf is itself materialized —
-    * the leaf has no lineage, so a released leaf cannot be re-read. */
-  def checkpointedLeafWithHandle(df: DataFrame): (DataFrame, Long, () => Unit) = {
-    val (leaf, rows, rel, _) = checkpointedLeafWithStats(df, Nil)
-    (leaf, rows, rel)
-  }
-
-  /** [[checkpointedLeafWithHandle]] plus, for each named INT column in
-    * `intCols`, the set of distinct non-null values observed — gathered
-    * inside the SAME materialization job, so callers that need a
-    * small-cardinality key-bucket set (the incremental loops' touched/
-    * frontier bucket ids) stop paying a separate
-    * `select(bucket).distinct().collect()` job per iteration
-    * (guide §1.2 — in these driver loops the job count, not the byte
-    * count, is the cost).
+    * explicit statistics: ONE job, one cached copy of the data.
+    *
+    * The same job gathers, for each INT column named in `sets`, the set
+    * of distinct non-null values — callers that need a small-cardinality
+    * key-bucket set (the incremental loops' touched/frontier bucket ids)
+    * stop paying a separate `select(bucket).distinct().collect()` job
+    * per iteration (guide §1.2 — in these driver loops the job count,
+    * not the byte count, is the cost) — and, for each LONG column named
+    * in `sums`, the exact sum of its non-null values (BigInt —
+    * per-partition accumulation is overflow-safe), so loops that poll a
+    * label/weight sum per round for convergence (e.g. connected
+    * components) pay no extra agg job.
     *
     * The leaf stays a cached-RDD scan at EVERY size. A driver-sized
     * leaf must NOT become a `LocalRelation`: `LocalTableScanExec`
@@ -81,51 +75,32 @@ object GraftSqlShim {
     * every distributed scan of a 50-row frontier would cost 32 tasks
     * instead of 1-2 (measured: 2.5k→15.7k tasks, 2× wall on the
     * incremental gates). */
-  def checkpointedLeafWithStats(df: DataFrame, intCols: Seq[String])
-      : (DataFrame, Long, () => Unit, Seq[Set[Int]]) = {
-    val (leaf, rows, rel, sets, _) =
-      checkpointedLeafWithAgg(df, intCols, Nil)
-    (leaf, rows, rel, sets)
-  }
-
-  /** [[checkpointedLeafWithStats]] plus, for each named LONG column in
-    * `sumLongCols`, the exact sum of its non-null values (BigInt —
-    * per-partition accumulation is overflow-safe), still all in the
-    * ONE materialization job. Iterative loops that poll a label/weight
-    * sum per round for convergence (e.g. connected components) fuse
-    * the poll here instead of paying an extra agg job per round. */
-  def checkpointedLeafWithAgg(df: DataFrame, intCols: Seq[String],
-      sumLongCols: Seq[String])
-      : (DataFrame, Long, () => Unit, Seq[Set[Int]], Seq[BigInt]) = {
+  def pin(df: DataFrame, sets: Seq[String] = Nil,
+      sums: Seq[String] = Nil): Pinned = {
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
     val cds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = cds.sparkSession
     val qe = cds.queryExecution
     val output = qe.analyzed.output
-    val ords = intCols.map { c =>
-      val i = output.indexWhere(_.name == c)
-      require(i >= 0 && output(i).dataType ==
-        org.apache.spark.sql.types.IntegerType,
-        s"checkpointedLeafWithStats: no INT column '$c' in " +
-          output.map(_.name).mkString(","))
-      i
-    }.toArray
-    val sords = sumLongCols.map { c =>
-      val i = output.indexWhere(_.name == c)
-      require(i >= 0 && output(i).dataType ==
-        org.apache.spark.sql.types.LongType,
-        s"checkpointedLeafWithAgg: no LONG column '$c' in " +
-          output.map(_.name).mkString(","))
-      i
-    }.toArray
+    def ordinals(cols: Seq[String], dt: DataType, kind: String) =
+      cols.map { c =>
+        val i = output.indexWhere(_.name == c)
+        require(i >= 0 && output(i).dataType == dt,
+          s"pin: no $kind column '$c' in " + output.map(_.name).mkString(","))
+        i
+      }.toArray
+    val ords = ordinals(sets, IntegerType, "INT")
+    val sords = ordinals(sums, LongType, "LONG")
     // InternalRow buffers are reused per partition — copy before caching.
     val rdd = qe.toRdd.map(_.copy())
     rdd.localCheckpoint()
     // ONE job: materializes the checkpoint (every partition is cached,
     // same as the old count()) while counting rows and gathering the
-    // distinct-int stats and long sums.
-    val perPart = spark.sparkContext.runJob(rdd,
+    // distinct-int stats and long sums. A failed job frees the blocks
+    // its finished tasks cached: the caller never gets a release.
+    val perPart = try spark.sparkContext.runJob(rdd,
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        val sets = Array.fill(ords.length)(new java.util.HashSet[Int]())
+        val seen = Array.fill(ords.length)(new java.util.HashSet[Int]())
         // overflow-safe long accumulation: spill to BigInteger on a
         // sign-flip overflow, never per row
         val accLo = Array.fill(sords.length)(0L)
@@ -137,7 +112,7 @@ object GraftSqlShim {
           var i = 0
           while (i < ords.length) {
             val o = ords(i)
-            if (!r.isNullAt(o)) sets(i).add(r.getInt(o))
+            if (!r.isNullAt(o)) seen(i).add(r.getInt(o))
             i += 1
           }
           var j = 0
@@ -157,19 +132,16 @@ object GraftSqlShim {
         }
         val bigs = Array.tabulate(sords.length)(j =>
           accBig(j).add(java.math.BigInteger.valueOf(accLo(j))))
-        (n, sets, bigs)
-      })
+        (n, seen, bigs)
+      }) catch { case t: Throwable => rdd.unpersist(blocking = false); throw t }
     val rows = perPart.iterator.map(_._1).sum
-    val stats = ords.indices.map { i =>
+    val distinct = ords.indices.map { i =>
       val s = Set.newBuilder[Int]
       perPart.foreach(p => p._2(i).forEach(v => s += v))
       s.result()
     }
-    val sums = sords.indices.map(j =>
+    val totals = sords.indices.map(j =>
       perPart.foldLeft(BigInt(0))((acc, p) => acc + BigInt(p._3(j))))
-    if (sys.env.contains("GRAFT_TIMING"))
-      System.err.println(s"[shim] leaf rows=$rows " +
-        s"checkpointed=${rdd.isCheckpointed}")
     // After the job, an adaptive plan is finalized, so its
     // partitioning is the real one (same trick as Dataset.checkpoint:
     // a PartitioningCollection collapses to its first leaf).
@@ -190,8 +162,11 @@ object GraftSqlShim {
     val sizeInBytes = math.max(realBytes.getOrElse(estBytes), 16L)
     val plan = LogicalRDD(qe.analyzed.output, rdd, part, ord, isStreaming = false)(
       spark, Some(Statistics(BigInt(sizeInBytes), Some(BigInt(rows)))), None)
-    (classic.Dataset.ofRows(spark, plan), rows,
-      () => { rdd.unpersist(blocking = false); () }, stats, sums)
+    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    Pinned(classic.Dataset.ofRows(spark, plan), rows,
+      () => if (released.compareAndSet(false, true))
+        rdd.unpersist(blocking = false),
+      distinct, totals)
   }
 
   /** The optimizer's size estimate of `df`'s lazy plan — for file scans

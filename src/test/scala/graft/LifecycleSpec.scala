@@ -9,7 +9,7 @@ import graft.operators.{Dedup, Relational, Similarity}
   *  - raw checkpoint blocks (invisible to `clearCache`) are freed
   *    deterministically by the loop/release machinery — the round-2..4
   *    bench-variance source;
-  *  - `checkpointedLeaf` statistics come from real cached bytes, so
+  *  - pinned-leaf statistics come from real cached bytes, so
   *    wide array state can't be auto-broadcast off a schema guess;
   *  - durable mode writes ONLY state segments and deletes retired dirs;
   *  - the n-gram df path has no hot-key window;
@@ -184,8 +184,8 @@ class LifecycleSpec extends SparkSpec {
     // planner broadcast multi-hundred-MB state at production scale.
     val wide = spark.range(30000).select(col("id"),
       array((0 until 64).map(i => (col("id") * i).cast("double")): _*).as("vec"))
-    val (leaf, rows, release) =
-      org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle(wide)
+    val p = org.apache.spark.sql.graft.GraftSqlShim.pin(wide)
+    val (leaf, rows, release) = (p.leaf, p.rows, p.release)
     try {
       assert(rows == 30000)
       val stats = leaf.queryExecution.optimizedPlan.stats
@@ -203,8 +203,8 @@ class LifecycleSpec extends SparkSpec {
 
   test("releasing a checkpointed leaf frees its storage blocks") {
     val df = spark.range(10000).select(col("id"), (col("id") * 2).as("v"))
-    val (leaf, _, release) =
-      org.apache.spark.sql.graft.GraftSqlShim.checkpointedLeafWithHandle(df)
+    val p = org.apache.spark.sql.graft.GraftSqlShim.pin(df)
+    val (leaf, release) = (p.leaf, p.release)
     assert(leaf.count() == 10000)
     val cachedBefore = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
     release()
@@ -216,6 +216,58 @@ class LifecycleSpec extends SparkSpec {
     }
     while (!gone() && System.nanoTime() < deadline) Thread.sleep(100)
     assert(gone(), "checkpointed leaf blocks still cached after release()")
+  }
+
+  test("pin: rows, int sets and exact long sums from one job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.graft.GraftSqlShim
+    import org.apache.spark.sql.types._
+    // two `half`s overflow a Long: partition 0 overflows on its own,
+    // and the two partitions' sums overflow again when combined
+    val half = Long.MaxValue / 2 + 1
+    val rows = Seq(Row(1, half), Row(2, half), Row(null, null),
+      Row(2, half), Row(3, null), Row(null, 7L))
+    val schema = StructType(Seq(StructField("k", IntegerType),
+      StructField("v", LongType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    var p: GraftSqlShim.Pinned = null
+    assert(jobsOf { p = GraftSqlShim.pin(df, sets = Seq("k"), sums = Seq("v")) } == 1)
+    try {
+      assert(p.rows == 6)
+      assert(p.sets == Seq(Set(1, 2, 3)))
+      assert(p.sums == Seq(BigInt(half) * 3 + 7))
+      assert(p.leaf.count() == 6)
+    } finally p.release()
+    val notInt = intercept[IllegalArgumentException](
+      GraftSqlShim.pin(df, sets = Seq("v")))
+    assert(notInt.getMessage.contains("INT column 'v'"), notInt.getMessage)
+    val notLong = intercept[IllegalArgumentException](
+      GraftSqlShim.pin(df, sums = Seq("k")))
+    assert(notLong.getMessage.contains("LONG column 'k'"), notLong.getMessage)
+  }
+
+  test("a continuation that throws releases the leaves it pinned") {
+    import graft.operators.TfidfStore
+    val dir = java.nio.file.Files.createTempDirectory("graft_pinfail").toString
+    TfidfStore.init(spark, dir, Seq((1L, "a b c"), (2L, "b c d"))
+      .toDF("doc_id", "text"), "doc_id", "text", nBuckets = 4)
+    // column pruning keeps the UDF out of the ids pin, which succeeds;
+    // the tf pin evaluates it and fails
+    val boom = udf((s: String) =>
+      if (s == null) s else throw new IllegalStateException("boom"))
+    val added = Seq((3L, "x y")).toDF("doc_id", "raw")
+      .select(col("doc_id"), boom(col("raw")).as("text"))
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val e = intercept[Exception](TfidfStore.continueAt(spark, dir, added,
+      Seq(1L).toDF("doc_id"), "doc_id", "text"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+    // unpersist is async (blocking=false); poll briefly
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    def leaked(): Set[Int] =
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet -- before
+    while (leaked().nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(leaked().isEmpty, s"RDDs still cached after the failed call: ${leaked()}")
   }
 
   test("durable mode writes only state segments and prunes retired dirs") {

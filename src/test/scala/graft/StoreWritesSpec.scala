@@ -120,20 +120,25 @@ class StoreWritesSpec extends SparkSpec {
     assert(SegSwap.fsOf(spark, engine).getClass == classOf[NioLocalFileSystem])
   }
 
-  test("store buckets are written and filesystems chosen only in SegSwap") {
-    // every bucketed store write goes through SegSwap.stageBuckets and
-    // every engine filesystem through SegSwap.fsOf; a direct write or
-    // getFileSystem call elsewhere would bring back a chmod process per
-    // created file
-    val patterns = Seq("partitionBy(\"_b\")", ".getFileSystem(")
+  /** (file name, matched patterns, `path:line`) of every `src/main`
+    * line matching one of `patterns`. */
+  private def sourceHits(patterns: Seq[String]): List[(String, Seq[String], String)] = {
     val files = Files.walk(Paths.get("src/main"))
-    val hits = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
       .toList.flatMap { f =>
         Files.readAllLines(f).asScala.zipWithIndex.collect {
           case (l, i) if patterns.exists(l.contains) =>
             (f.getFileName.toString, patterns.filter(l.contains), s"$f:${i + 1}")
         }
       } finally files.close()
+  }
+
+  test("store buckets are written and filesystems chosen only in SegSwap") {
+    // every bucketed store write goes through SegSwap.stageBuckets and
+    // every engine filesystem through SegSwap.fsOf; a direct write or
+    // getFileSystem call elsewhere would bring back a chmod process per
+    // created file
+    val hits = sourceHits(Seq("partitionBy(\"_b\")", ".getFileSystem("))
     assert(hits.map(h => (h._1, h._2)).sortBy(_._2.head) ==
       Seq("SegSwap.scala" -> Seq(".getFileSystem("),
         "SegSwap.scala" -> Seq("partitionBy(\"_b\")")),
@@ -143,17 +148,26 @@ class StoreWritesSpec extends SparkSpec {
   test("store lifecycle ops are called only from SegStore") {
     // rollback, export and rebucket live once, in SegStore; a store
     // calling them itself would be a new copy of the lifecycle
-    val patterns = Seq("SegSwap.rollbackTo(", "SegSwap.exportSnapshot(",
-      "augmentFromStaging = true")
-    val files = Files.walk(Paths.get("src/main"))
-    val hits = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .toList.flatMap { f =>
-        Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (l, i) if patterns.exists(l.contains) =>
-            (f.getFileName.toString, s"$f:${i + 1}")
-        }
-      } finally files.close()
+    val hits = sourceHits(Seq("SegSwap.rollbackTo(", "SegSwap.exportSnapshot(",
+      "augmentFromStaging = true"))
     assert(hits.map(_._1).toSet == Set("SegStore.scala") && hits.size == 3,
-      hits.map(_._2).mkString("\n"))
+      hits.map(_._3).mkString("\n"))
+  }
+
+  test("frames are pinned only through GraftSqlShim.pin and released by Pins") {
+    // one pin call and one release scope: a second materializer or a
+    // local release buffer would be a new copy of the pin lifecycle
+    val pinHits = sourceHits(Seq("checkpointedLeaf", "IncrMat",
+      "ListBuffer.empty[() => Unit]", "def mat(", "def mat[", "def pin(",
+      "def pin["))
+      .filterNot(h => Set("GraftSqlShim.scala", "Pins.scala").contains(h._1))
+    assert(pinHits.isEmpty, pinHits.map(_._3).mkString("\n"))
+    // bucket predicates go through SegStore.inBuckets. The sites left
+    // can see an empty bucket set, where inBuckets' lit(false) lets
+    // Catalyst drop the scan and its jobs: a rollback restoring no
+    // bucket, and IVF probes of an empty query set
+    val inHits = sourceHits(Seq("col(\"_b\").isin("))
+    assert(inHits.map(_._1).sorted == Seq("Pq.scala", "SegStore.scala",
+      "SegSwap.scala", "Similarity.scala"), inHits.map(_._3).mkString("\n"))
   }
 }
